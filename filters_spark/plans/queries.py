@@ -15485,7 +15485,7 @@ def rel_stats_ndv(spark, sf_dir):
         ("approx_ndv", "k", "ndv_k"),
         ("approx_ndv", "low", "ndv_low")])
     m = V._read_manifest(path, 1)
-    regs = V._root_ndv(path, m)
+    regs = V._root_sidecar(m, "ndv")
 
     def checksum(col: str) -> int:
         merged: dict = {}

@@ -55,6 +55,7 @@ from __future__ import annotations
 import json
 import os
 from concurrent.futures import ThreadPoolExecutor
+from typing import Callable, NamedTuple
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F  # noqa: F401  (callers compose)
@@ -425,59 +426,10 @@ def _bloom_member(hexmap: str, value, bits: int, hashes: int) -> bool:
                _bloom_positions_py(value, bits, hashes))
 
 
-def _file_blooms(path: str, files: list[str], cols: list[str],
-                 bits: int, hashes: int, schema: T.StructType,
-                 spark: SparkSession) -> dict:
-    """Per-file Bloom bitmaps (hex) for ``cols`` over the given
-    TABLE-ROOT-relative files: ONE job per column — distinct
-    (file, position) pairs, shuffle bounded by files × bits, the
-    collect bounded the same way (the stats-sidecar contract: driver
-    state is metadata-sized, never data-sized)."""
-    if not files:
-        return {}
-    out: dict = {f: {} for f in files}
-    abs_paths = [os.path.join(path, f) for f in files]
-    for col in cols:
-        df = (spark.read.schema(schema).parquet(*abs_paths)
-              .select(F.input_file_name().alias("_uri"),
-                      F.col(col).cast("string").alias("_v"))
-              .where(F.col("_v").isNotNull()))
-        pos = [
-            (F.conv(F.substring(
-                F.md5(F.concat(F.lit(f"{i}|"), F.col("_v"))), 1, 8),
-                16, 10).cast("bigint") % bits).cast("int")
-            for i in range(hashes)]
-        rows = (df.select("_uri", F.explode(F.array(*pos)).alias("_p"))
-                .distinct()
-                .groupBy("_uri").agg(F.collect_set("_p").alias("ps"))
-                .collect())              # bounded: files × bits
-        by_rel = {_rel_uri(path, r["_uri"]): r["ps"] for r in rows}
-        for f in files:
-            ps = by_rel.get(f)
-            if ps is None:
-                out[f][col] = "0"        # no non-null values: empty map
-            else:
-                bm = 0
-                for p in ps:
-                    bm |= 1 << p
-                out[f][col] = f"{bm:x}"
-    return out
-
-
 def load_file_blooms(manifest: dict) -> dict | None:
     """Per-file Bloom bitmaps, resolving the lazy ``bloom_file``
     sidecar (mirrors :func:`load_file_stats`)."""
-    blooms = manifest.get("file_blooms")
-    if blooms is None and manifest.get("bloom_file") \
-            and manifest.get("_manifest_dir"):
-        try:
-            with open(os.path.join(manifest["_manifest_dir"],
-                                   manifest["bloom_file"])) as fh:
-                blooms = json.load(fh)
-        except FileNotFoundError:
-            return None
-        manifest["file_blooms"] = blooms
-    return blooms
+    return _load_sidecar(manifest, "bloom")
 
 
 def bloom_prune_files(manifest: dict, where, files: list) -> list:
@@ -507,6 +459,41 @@ def bloom_prune_files(manifest: dict, where, files: list) -> list:
     return kept
 
 
+def _bloom_check(cols: list[str], partition_by, schema: T.StructType):
+    bad = [c for c in cols if c in (partition_by or ())]
+    if bad:
+        raise ValueError(
+            f"write_versioned: bloom_cols {bad} are partition "
+            "columns — their col=value path already prunes "
+            "via stats_cols")
+    types = {f.name: f.dataType.typeName() for f in schema}
+    badtype = [(c, types.get(c)) for c in cols
+               if types.get(c) not in _BLOOM_TYPES]
+    if badtype:
+        raise ValueError(
+            f"write_versioned: bloom_cols {badtype} have types "
+            "whose Spark string cast differs from the Python "
+            "probe rendering (double '1e+20' vs '1.0E20', "
+            "boolean 'True' vs 'true', ...) — membership would "
+            "silently miss and point reads would DROP matching "
+            f"files.  Supported types: {_BLOOM_TYPES}")
+
+
+def _bloom_cells(col: str, cfg: dict) -> list[Column]:
+    """One cell per hash: the md5-convention bit position."""
+    v = F.col(col).cast("string")
+    return [F.conv(F.substring(F.md5(F.concat(F.lit(f"{i}|"), v)), 1, 8),
+                   16, 10).cast("bigint") % cfg["bloom_bits"]
+            for i in range(cfg["bloom_hashes"])]
+
+
+def _bloom_entry(cells: list[int], _counts) -> str:
+    bm = 0                         # no non-null values: the empty map
+    for pos in cells:
+        bm |= 1 << pos
+    return f"{bm:x}"
+
+
 # --- NDV sketch sidecars (approximate distinct counts) ---------------------
 #
 # Iceberg's Puffin shape: per-file HyperLogLog registers recorded at
@@ -516,116 +503,182 @@ def bloom_prune_files(manifest: dict, where, files: list) -> list:
 # sketch.hll_table over the full scan would produce, replayable in
 # SQL (the prof_hll_calibration machinery).
 
-def _file_ndv(path: str, files: list[str], cols: list[str],
-              schema: T.StructType, spark: SparkSession) -> dict:
-    """Per-file HLL registers for ``cols`` over TABLE-ROOT-relative
-    files: one job per column, collect bounded by files × 256
-    buckets (the bloom-sidecar contract)."""
+def _ndv_cells(col: str, cfg: dict) -> list[Column]:
+    """One cell per value: 256-bucket index and rho (≤ 61) packed as
+    ``bucket * 64 + rho`` — the engine's ``sketch.hll_table``
+    convention; the per-bucket max rho is the register."""
     from ..functions.sketch import _hll_parts
 
-    if not files:
-        return {}
-    out: dict = {f: {} for f in files}
-    abs_paths = [os.path.join(path, f) for f in files]
-    for col in cols:
-        bucket, rho = _hll_parts(F.col(col))
-        rows = (spark.read.schema(schema).parquet(*abs_paths)
-                .where(F.col(col).isNotNull())
-                .select(F.input_file_name().alias("_uri"),
-                        bucket.alias("b"), rho.alias("r"))
-                .groupBy("_uri", "b").agg(F.max("r").alias("mr"))
-                .collect())                 # bounded: files × 256
-        regs: dict = {}
-        for r in rows:
-            regs.setdefault(_rel_uri(path, r["_uri"]), {})[
-                str(int(r["b"]))] = int(r["mr"])
-        for f in files:
-            out[f][col] = regs.get(f, {})
-    return out
+    bucket, rho = _hll_parts(F.col(col))
+    return [bucket * 64 + rho]
 
 
-def load_file_ndv(manifest: dict) -> dict | None:
-    """Per-file NDV registers, resolving the lazy ``ndv_file``
-    sidecar (mirrors :func:`load_file_blooms`)."""
-    ndv = manifest.get("file_ndv")
-    if ndv is None and manifest.get("ndv_file") \
-            and manifest.get("_manifest_dir"):
-        try:
-            with open(os.path.join(manifest["_manifest_dir"],
-                                   manifest["ndv_file"])) as fh:
-                ndv = json.load(fh)
-        except FileNotFoundError:
-            return None
-        manifest["file_ndv"] = ndv
-    return ndv
+def _ndv_entry(cells: list[int], _counts) -> dict:
+    regs: dict = {}
+    for cell in cells:
+        b, rho = divmod(cell, 64)
+        regs[str(b)] = max(regs.get(str(b), 0), rho)
+    return regs
 
 
-def _root_ndv(path: str, manifest: dict) -> dict:
-    ndv = load_file_ndv(manifest) or {}
-    if manifest.get("data_files") is not None:
-        return dict(ndv)
-    v = manifest["version"]
-    return {f"snap/v={v}/{k}": s for k, s in ndv.items()}
+# --- HDR histogram sidecars (approximate quantiles) ------------------------
+#
+# Per-file log-bucket counts for POSITIVE-integer columns (the
+# engine's ``sketch.hdr_table`` convention, sub_bits=3): bucket counts
+# add across files, so the merged histogram IS the whole-table sketch.
 
-
-def _file_hdr(path: str, files: list[str], cols: list[str],
-              schema: T.StructType, spark: SparkSession) -> dict:
-    """Per-file HDR histogram buckets for POSITIVE-integer ``cols``
-    (the engine's ``sketch.hdr_table`` convention, sub_bits=3): one
-    job per column, collect bounded by files × 512 buckets.  A
-    non-positive value fails the COMMIT loudly (the hdr_table
-    raise_error contract — a silent drop would skew every rank
-    served later)."""
+def _hdr_cells(col: str, cfg: dict) -> list[Column]:
+    """One cell per value: bucket (shift, top) packed as
+    ``shift * 16 + top`` (top < 16 by construction); the per-bucket
+    count is the histogram.  A non-positive value fails the COMMIT
+    loudly (the hdr_table raise_error contract — a silent drop would
+    skew every rank served later)."""
     from ..functions.sketch import _bit_length
 
-    if not files:
-        return {}
-    out: dict = {f: {} for f in files}
-    abs_paths = [os.path.join(path, f) for f in files]
-    for col in cols:
-        v = F.when(F.col(col) > 0, F.col(col).cast("long")).otherwise(
-            F.raise_error(F.lit(
-                f"write_versioned(hdr_cols): non-positive {col} "
-                "values — the log bucket needs v > 0")))
-        shift = F.greatest(_bit_length(v) - F.lit(4), F.lit(0))
-        rows = (spark.read.schema(schema).parquet(*abs_paths)
-                .where(F.col(col).isNotNull())
-                .select(F.input_file_name().alias("_uri"),
-                        shift.cast("int").alias("_sh"), v.alias("_v"))
-                .select("_uri", "_sh",
-                        F.expr("shiftright(_v, _sh)").alias("_top"))
-                .groupBy("_uri", "_sh", "_top")
-                .agg(F.count(F.lit(1)).cast("long").alias("n"))
-                .collect())                 # bounded: files × 512
-        buckets: dict = {}
-        for r in rows:
-            buckets.setdefault(_rel_uri(path, r["_uri"]), {})[
-                f"{int(r['_sh'])},{int(r['_top'])}"] = int(r["n"])
-        for f in files:
-            out[f][col] = buckets.get(f, {})
-    return out
+    c = F.col(col)
+    v = F.when(c > 0, c.cast("long")).otherwise(F.raise_error(F.lit(
+        f"write_versioned(hdr_cols): non-positive {col} values — the "
+        "log bucket needs v > 0")))
+    shift = F.greatest(_bit_length(v) - F.lit(4), F.lit(0))
+    return [shift * 16 + F.call_function("shiftright", v, shift)]
 
 
-def load_file_hdr(manifest: dict) -> dict | None:
-    hdr = manifest.get("file_hdr")
-    if hdr is None and manifest.get("hdr_file") \
+def _hdr_entry(cells: list[int], counts: list[int]) -> dict:
+    return {f"{b >> 4},{b & 15}": n for b, n in zip(cells, counts)}
+
+
+class _Sidecar(NamedTuple):
+    """One sidecar kind.  The manifest names it ``<kind>_file``
+    (``_manifests/<v>.<kind>.json``) and arms it with ``<kind>_cols``
+    plus ``params`` (extra config keys → defaults)."""
+    inline: str                  # manifest key of the parsed sidecar
+    inherit: bool                # config is a table property
+    params: dict = {}
+    check: Callable | None = None     # (cols, partition_by, schema)
+    cells: Callable | None = None     # (col, cfg) -> [cell Column]
+    entry: Callable | None = None     # (cells, counts) -> entry
+    counts: bool = False         # entry needs per-cell row counts
+
+
+#: The sidecar spec table, one row per kind: loading,
+#: root re-keying, carrying, building and verification all iterate it.
+#: ``stats`` is per-commit explicit and built from parquet footers
+#: (:func:`_file_stats`); the sketch kinds are table properties built
+#: by ONE fused executor scan (:func:`_sketch_files`).
+_SIDECARS: dict[str, _Sidecar] = {
+    "stats": _Sidecar("file_stats", inherit=False),
+    "bloom": _Sidecar("file_blooms", inherit=True,
+                      params={"bloom_bits": _BLOOM_DEFAULT_BITS,
+                              "bloom_hashes": _BLOOM_DEFAULT_HASHES},
+                      check=_bloom_check, cells=_bloom_cells,
+                      entry=_bloom_entry),
+    "ndv": _Sidecar("file_ndv", inherit=True, cells=_ndv_cells,
+                    entry=_ndv_entry),
+    "hdr": _Sidecar("file_hdr", inherit=True, cells=_hdr_cells,
+                    entry=_hdr_entry, counts=True),
+}
+
+
+def _load_sidecar(manifest: dict, kind: str) -> dict | None:
+    """A manifest's per-file ``kind`` entries, resolving the lazy
+    sidecar file once (cached on the dict under the row's ``inline``
+    key, which also serves inline pre-sidecar manifests and hand-built
+    dicts).  None when nothing was recorded or the sidecar is gone."""
+    inline = _SIDECARS[kind].inline
+    ents = manifest.get(inline)
+    if ents is None and manifest.get(f"{kind}_file") \
             and manifest.get("_manifest_dir"):
         try:
             with open(os.path.join(manifest["_manifest_dir"],
-                                   manifest["hdr_file"])) as fh:
-                hdr = json.load(fh)
+                                   manifest[f"{kind}_file"])) as fh:
+                ents = json.load(fh)
         except FileNotFoundError:
-            return None
-        manifest["file_hdr"] = hdr
-    return hdr
+            return None                     # sidecar gone: unknown
+        manifest[inline] = ents
+    return ents
 
 
-def _root_hdr(path: str, manifest: dict) -> dict:
-    hdr = load_file_hdr(manifest) or {}
+def _root_sidecar(manifest: dict, kind: str) -> dict:
+    """A snapshot's per-file ``kind`` entries re-keyed TABLE-ROOT-
+    relative (the file-reuse sidecar keying), empty when none
+    recorded."""
+    ents = _load_sidecar(manifest, kind) or {}
     if manifest.get("data_files") is not None:
-        return dict(hdr)
+        return dict(ents)
     v = manifest["version"]
-    return {f"snap/v={v}/{k}": s for k, s in hdr.items()}
+    return {f"snap/v={v}/{k}": e for k, e in ents.items()}
+
+
+def _sidecar_config(kind: str, asked: dict, source: dict) -> dict | None:
+    """The commit's config for ``kind`` (manifest keys → values), or
+    None when disarmed.  Table-property kinds inherit from the carry
+    source when the caller leaves ``<kind>_cols`` None (``[]``
+    disarms)."""
+    sc = _SIDECARS[kind]
+    keys = [f"{kind}_cols", *sc.params]
+    cfg = {k: asked.get(k) for k in keys}
+    if sc.inherit and cfg[keys[0]] is None:
+        cfg = {k: cfg[k] or source.get(k) for k in keys}
+    if not cfg[keys[0]]:
+        return None
+    cfg[keys[0]] = list(cfg[keys[0]])
+    return {k: cfg[k] or sc.params.get(k) for k in keys}
+
+
+def _sketch_files(snap: str, files: list[str], armed: dict,
+                  schema: T.StructType, spark: SparkSession) -> dict:
+    """Every armed sketch kind's per-file entries for the snapshot's
+    NEW ``files`` in ONE executor scan: each row emits its cells for
+    every (kind, column) — a Bloom bit position, a packed HLL
+    (bucket, rho), a packed HDR bucket — and the collect is one row
+    per (file, kind, column) carrying its distinct cells (with row
+    counts when an armed kind needs them: one more aggregate level),
+    bounded by files × cells (≤ bits / 256·62 / 512 per entry):
+    driver state is metadata-sized, never data-sized.  Returns
+    ``{kind: {file: {col: entry}}}`` keyed snapshot-relative."""
+    pairs = [(kind, col) for kind, cfg in armed.items()
+             for col in cfg[f"{kind}_cols"]]
+    out: dict = {kind: {f: {} for f in files} for kind in armed}
+    got: dict = {}
+    if pairs and files:
+        cells = [F.struct(F.lit(i).alias("i"),
+                          F.when(F.col(col).isNotNull(),   # NULLs never
+                                 cell.cast("long")).alias("s"))
+                 for i, (kind, col) in enumerate(pairs)
+                 for cell in _SIDECARS[kind].cells(col, armed[kind])]
+        df = (spark.read.schema(schema)
+              .parquet(*[os.path.join(snap, f) for f in files])
+              .select(F.input_file_name().alias("_uri"),
+                      *sorted({col for _k, col in pairs}))
+              .select("_uri", F.explode(F.array(*cells)).alias("c"))
+              .select("_uri", "c.i", "c.s")
+              .where(F.col("s").isNotNull()))
+        counted = any(_SIDECARS[k].counts for k in armed)
+        if counted:
+            df = (df.groupBy("_uri", "i", "s")
+                  .agg(F.count(F.lit(1)).alias("n"))
+                  .groupBy("_uri", "i")
+                  .agg(F.collect_list(F.array("s", "n")).alias("cells")))
+        else:                         # one aggregate, one exchange
+            df = df.groupBy("_uri", "i").agg(
+                F.collect_set("s").alias("cells"))
+        for r in df.collect():        # bounded: files × armed columns
+            got[(_rel_uri(snap, r["_uri"]), r["i"])] = (
+                list(zip(*r["cells"])) or ([], []) if counted
+                else (r["cells"], None))
+    for i, (kind, col) in enumerate(pairs):
+        for f in files:
+            out[kind][f][col] = _SIDECARS[kind].entry(
+                *got.get((f, i), ([], [])))
+    return out
+
+
+def _write_json(dest: str, obj) -> None:
+    """Atomic JSON write (tmp + POSIX rename)."""
+    tmp = dest + ".tmp"
+    with open(tmp, "w") as fh:
+        json.dump(obj, fh)
+    os.replace(tmp, dest)
 
 
 def _hdr_quantile_py(buckets: dict, q_num: int, q_den: int) -> int | None:
@@ -785,7 +838,7 @@ def stats_aggregate(spark: SparkSession, path: str,
         return _fallback("min/max under a predicate needs row-level "
                          "evaluation")
     files = _root_files(path, m)
-    stats = _root_stats(path, m)
+    stats = _root_sidecar(m, "stats")
     schema = T.StructType.fromJson(json.loads(m["schema_json"]))
     types = {f.name: f.dataType for f in schema.fields}
 
@@ -833,7 +886,7 @@ def stats_aggregate(spark: SparkSession, path: str,
         if fn == "approx_quantile":
             cname, qn, qd = col
             if hdr_buckets is None:
-                hdr_buckets = _root_hdr(path, m)
+                hdr_buckets = _root_sidecar(m, "hdr")
             merged_h: dict = {}
             for f in files:
                 b = (hdr_buckets.get(f) or {}).get(cname)
@@ -849,7 +902,7 @@ def stats_aggregate(spark: SparkSession, path: str,
             continue
         if fn == "approx_ndv":
             if ndv_regs is None:
-                ndv_regs = _root_ndv(path, m)
+                ndv_regs = _root_sidecar(m, "ndv")
             merged: dict = {}
             for f in files:
                 regs = (ndv_regs.get(f) or {}).get(col)
@@ -904,16 +957,6 @@ def stats_aggregate(spark: SparkSession, path: str,
     return spark.createDataFrame(
         [tuple(row[f.name] for f in out_fields)],
         T.StructType(out_fields))
-
-
-def _root_blooms(path: str, manifest: dict) -> dict:
-    """A snapshot's per-file blooms re-keyed TABLE-ROOT-relative
-    (mirrors :func:`_root_stats`)."""
-    blooms = load_file_blooms(manifest) or {}
-    if manifest.get("data_files") is not None:
-        return dict(blooms)
-    v = manifest["version"]
-    return {f"snap/v={v}/{k}": s for k, s in blooms.items()}
 
 
 def _dv_dir(path: str, version: int) -> str:
@@ -990,19 +1033,16 @@ def write_versioned(df: DataFrame, path: str,
                     partition_by: list[str] | None = None,
                     changes_df: DataFrame | None = None,
                     reuse_files: list[str] | None = None,
-                    reuse_stats: dict | None = None,
                     bloom_cols: list[str] | None = None,
                     bloom_bits: int | None = None,
                     bloom_hashes: int | None = None,
-                    reuse_blooms: dict | None = None,
                     dv_df: DataFrame | None = None,
                     dv_key: str | None = None,
                     dv_dirs: list[int] | None = None,
                     ndv_cols: list[str] | None = None,
-                    reuse_ndv: dict | None = None,
                     hdr_cols: list[str] | None = None,
-                    reuse_hdr: dict | None = None,
-                    _no_data: bool = False) -> int:
+                    _no_data: bool = False,
+                    _carry_from: tuple[str, dict] | None = None) -> int:
     """Commit ``df`` as the next snapshot; returns the new version.
 
     ``expected_parent`` is optimistic concurrency control: pass the
@@ -1011,13 +1051,6 @@ def write_versioned(df: DataFrame, path: str,
     (compare-and-set on the table head — the Delta/Iceberg commit
     contract).  ``None`` skips the check (blind append of a whole
     snapshot).
-
-    ``stats_cols`` records per-FILE min/max for those columns in the
-    manifest (read from parquet footers — zero extra jobs), enabling
-    :func:`read_version`'s ``where=`` file skipping.  Cluster the
-    data on the column first (``repartitionByRange(col)`` or a
-    Z-order sort) or every file spans the full range and nothing
-    prunes.
 
     ``partition_by`` writes the snapshot Hive-partitioned (the
     date/tenant layout a 100 TB table wants): readers restore the
@@ -1048,37 +1081,33 @@ def write_versioned(df: DataFrame, path: str,
     file_reuse=True)`` touch a 0.1% slice of a 100 TB table without
     rewriting the other 99.9%.  Only FLAT layouts (no
     ``partition_by``) can reuse; :func:`vacuum_versioned` reference-
-    counts files across retained versions.  ``reuse_stats`` carries
-    the reused files' min/max entries forward (same keys) so
-    ``stats_cols`` skipping stays armed without re-reading their
-    footers.
+    counts files across retained versions.
 
-    ``bloom_cols`` arms POINT-LOOKUP file skipping (Delta bloom
-    filter indexes): per-file Bloom bitmaps (``bloom_bits`` bits,
-    ``bloom_hashes`` md5-convention hashes) land in a lazy sidecar,
-    and ``read_version(where=(col, v, v))`` probes them at planning
-    time — a key lookup on a column the layout is NOT clustered on
-    skips files min/max can't.  Costs one bounded job per column over
-    the NEW files.  Bloom config is a TABLE PROPERTY: later commits
-    INHERIT it from the parent manifest automatically (pass
-    ``bloom_cols=[]`` to disarm), file-reuse commits carry the
-    parent's bitmaps for carried files (``reuse_blooms`` overrides —
-    the restore/clone path), and partition columns are rejected
-    (their ``col=value`` path prunes via ``stats_cols`` for free).
-    Size ``bloom_bits`` ≈ 10× the rows per file for ~1% false
-    positives at 4 hashes; false positives only cost a read, never
-    correctness.
-
-    ``ndv_cols`` records per-file HyperLogLog REGISTERS (256-bucket
-    md5 sketch, the engine's ``sketch.hll_table`` convention) in a
-    lazy sidecar — Iceberg Puffin's shape: register max-merge across
-    files IS the whole-table sketch, so
-    ``stats_aggregate(('approx_ndv', col, ...))`` answers
-    distinct-count questions from metadata alone.  Config is a table
-    property like blooms (inherits from the parent;
-    ``ndv_cols=[]`` disarms); file-reuse commits carry register
-    entries for carried files (``reuse_ndv`` overrides); costs one
-    bounded job per column over the NEW files.
+    SIDECARS (the :data:`_SIDECARS` spec table) record per-file
+    metadata in lazy ``_manifests/<v>.<kind>.json`` files, so the
+    manifest stays O(1) in file count: ``stats_cols`` — footer
+    min/max, row and null counts (``read_version(where=)`` range
+    skipping, :func:`stats_aggregate`; cluster the data on the column
+    first or nothing prunes); ``bloom_cols`` — Bloom bitmaps of
+    ``bloom_bits`` bits and ``bloom_hashes`` md5-convention hashes
+    (point-lookup skipping where min/max can't prune; size bits ≈ 10×
+    the rows per file for ~1% false positives at 4 hashes, a false
+    positive only costs a read; partition columns and types whose
+    string cast differs from the Python probe are rejected);
+    ``ndv_cols`` — 256-bucket HyperLogLog registers (metadata
+    approx-NDV); ``hdr_cols`` — HDR log-bucket counts of a
+    positive-integer column (metadata quantiles; a non-positive value
+    fails the commit).  ``stats_cols`` is per commit; the Bloom, NDV
+    and HDR configs are TABLE PROPERTIES: left None they inherit from
+    the carry source — the parent manifest (``[]`` disarms).  Data
+    files are immutable, so a file-reuse commit carries each kept
+    file's entries from the carry source when the commit's config of
+    that kind equals the source's, and records them unknown (never
+    pruned on) otherwise.  New files get fresh entries: footer reads
+    for stats, ONE fused executor scan for every armed sketch.  The
+    private ``_carry_from=(root, manifest)`` swaps the carry source
+    (restore: the restored manifest; clone: the source table, entries
+    re-keyed root-relative to ``path``).
 
     DELETE VECTORS (merge-on-read): ``dv_df`` — a ``(_file string,
     <dv_key>)`` frame of per-file deleted keys — is written as this
@@ -1101,12 +1130,30 @@ def write_versioned(df: DataFrame, path: str,
         raise ConcurrentWriteError(
             f"table {path!r} moved: expected parent {expected_parent}, "
             f"found {parent} — re-read and retry")
+    pm: dict = {}
+    if parent is not None:
+        try:
+            pm = _read_manifest(path, parent)   # the one parent read
+        except ValueError:
+            pass
+    src_root, src_m = _carry_from or (path, pm)
+    asked = {"stats_cols": stats_cols, "bloom_cols": bloom_cols,
+             "bloom_bits": bloom_bits, "bloom_hashes": bloom_hashes,
+             "ndv_cols": ndv_cols, "hdr_cols": hdr_cols}
+    armed = {}
+    for kind, sc in _SIDECARS.items():
+        cfg = _sidecar_config(kind, asked, src_m)
+        if cfg is not None:
+            if sc.check is not None:
+                sc.check(cfg[f"{kind}_cols"], partition_by, df.schema)
+            armed[kind] = cfg
     # next version clears BOTH the head and any manifested-but-never-
     # flipped snapshot (a writer that crashed between manifest and
     # pointer flip must not block its number forever)
     version = max(versions(path) + [parent or 0]) + 1
     claim = _claim(path, version)
     _pool: ThreadPoolExecutor | None = None
+    _cfut = _dfut = None
     try:
         snap = _snap_dir(path, version)
         # The commit's SIDE WRITES (stored change feed, delete-vector
@@ -1118,7 +1165,6 @@ def write_versioned(df: DataFrame, path: str,
         # manifest (the atomic commit point) is written only after
         # every future joins, so crash semantics are unchanged —
         # nothing is visible until the head flip.
-        _cfut = _dfut = None
         if dv_df is not None:
             # validate BEFORE the async write starts (fail-fast
             # semantics unchanged)
@@ -1189,167 +1235,48 @@ def write_versioned(df: DataFrame, path: str,
             _cfut.result()               # join the overlapped write
             manifest["changes"] = True
             manifest["changes_schema_json"] = changes_df.schema.json()
-        if stats_cols:
-            # Stats live in a SIDECAR referenced by the manifest, not
-            # inlined: the manifest stays O(1) no matter the file
-            # count, and readers that never pass ``where=`` never pay
-            # the O(files) parse (prune_files loads it lazily).
-            stats = _file_stats(snap, stats_cols,
-                                tuple(partition_by or ()),
-                                schema=df.schema, spark=df.sparkSession)
+        # --- sidecars: build new files' entries, carry reused ones ---
+        built = _sketch_files(
+            snap, new_files,
+            {k: c for k, c in armed.items() if _SIDECARS[k].cells},
+            df.schema, df.sparkSession)
+        if "stats" in armed:
+            built["stats"] = _file_stats(
+                snap, armed["stats"]["stats_cols"],
+                tuple(partition_by or ()), schema=df.schema,
+                spark=df.sparkSession)
+        rekey = os.path.abspath(src_root) != os.path.abspath(path)
+        for kind, cfg in armed.items():
+            ents = built[kind]
             if reuse_files is not None:
-                # file-reuse commits key stats TABLE-ROOT-relative so
-                # one sidecar spans snapshot directories; carried
-                # files keep their parent entries (no footer re-read),
-                # unknown when absent (kept, never pruned)
-                stats = {f"snap/v={version}/{k}": v
-                         for k, v in stats.items()}
+                # file-reuse commits key entries TABLE-ROOT-relative
+                # so one sidecar spans snapshot directories
+                ents = {f"snap/v={version}/{k}": e
+                        for k, e in ents.items()}
+                carried = {}
+                if all(src_m.get(k) == val for k, val in cfg.items()):
+                    carried = _root_sidecar(src_m, kind)
+                    if rekey:
+                        carried = {_rebase(src_root, path, k): e
+                                   for k, e in carried.items()}
+                unknown = {c: None for c in cfg[f"{kind}_cols"]}
                 for f in reuse_files:
-                    stats[f] = (reuse_stats or {}).get(
-                        f, {c: None for c in stats_cols})
-            sidecar = f"{version}.stats.json"
-            stmp = os.path.join(_manifest_dir(path), sidecar + ".tmp")
-            with open(stmp, "w") as fh:
-                json.dump(stats, fh)
-            os.replace(stmp, os.path.join(_manifest_dir(path), sidecar))
-            manifest["stats_file"] = sidecar
-            manifest["stats_cols"] = list(stats_cols)
-        # Bloom config inherits from the parent manifest (a table
-        # property, like Delta's index config) unless the caller sets
-        # it — bloom_cols=[] explicitly disarms.
-        if bloom_cols is None and parent is not None:
-            try:
-                pm = _read_manifest(path, parent)
-            except ValueError:
-                pm = {}
-            bloom_cols = pm.get("bloom_cols")
-            bloom_bits = bloom_bits or pm.get("bloom_bits")
-            bloom_hashes = bloom_hashes or pm.get("bloom_hashes")
-            if reuse_files is not None and reuse_blooms is None \
-                    and bloom_cols:
-                reuse_blooms = _root_blooms(path, pm)
-        if bloom_cols:
-            bad = [c for c in bloom_cols if c in (partition_by or ())]
-            if bad:
-                raise ValueError(
-                    f"write_versioned: bloom_cols {bad} are partition "
-                    "columns — their col=value path already prunes "
-                    "via stats_cols")
-            types = {f.name: f.dataType.typeName() for f in df.schema}
-            badtype = [(c, types.get(c)) for c in bloom_cols
-                       if types.get(c) not in _BLOOM_TYPES]
-            if badtype:
-                raise ValueError(
-                    f"write_versioned: bloom_cols {badtype} have types "
-                    "whose Spark string cast differs from the Python "
-                    "probe rendering (double '1e+20' vs '1.0E20', "
-                    "boolean 'True' vs 'true', ...) — membership would "
-                    "silently miss and point reads would DROP matching "
-                    f"files.  Supported types: {_BLOOM_TYPES}")
-            bloom_bits = bloom_bits or _BLOOM_DEFAULT_BITS
-            bloom_hashes = bloom_hashes or _BLOOM_DEFAULT_HASHES
-            if reuse_files is not None:
-                new_keys = [f"snap/v={version}/{f}" for f in new_files]
-                blooms = _file_blooms(path, new_keys, list(bloom_cols),
-                                      bloom_bits, bloom_hashes,
-                                      df.schema, df.sparkSession)
-                for f in reuse_files:
-                    blooms[f] = (reuse_blooms or {}).get(
-                        f, {c: None for c in bloom_cols})
-            else:
-                blooms = _file_blooms(snap, new_files, list(bloom_cols),
-                                      bloom_bits, bloom_hashes,
-                                      df.schema, df.sparkSession)
-            bsidecar = f"{version}.bloom.json"
-            btmp = os.path.join(_manifest_dir(path), bsidecar + ".tmp")
-            with open(btmp, "w") as fh:
-                json.dump(blooms, fh)
-            os.replace(btmp,
-                       os.path.join(_manifest_dir(path), bsidecar))
-            manifest["bloom_file"] = bsidecar
-            manifest["bloom_cols"] = list(bloom_cols)
-            manifest["bloom_bits"] = bloom_bits
-            manifest["bloom_hashes"] = bloom_hashes
-        # NDV config inherits from the parent manifest like blooms
-        # (ndv_cols=[] explicitly disarms).
-        if ndv_cols is None and parent is not None:
-            try:
-                pm_ndv = _read_manifest(path, parent)
-            except ValueError:
-                pm_ndv = {}
-            ndv_cols = pm_ndv.get("ndv_cols")
-            if reuse_files is not None and reuse_ndv is None \
-                    and ndv_cols:
-                reuse_ndv = _root_ndv(path, pm_ndv)
-        if ndv_cols:
-            if reuse_files is not None:
-                new_keys = [f"snap/v={version}/{f}" for f in new_files]
-                ndv = _file_ndv(path, new_keys, list(ndv_cols),
-                                df.schema, df.sparkSession)
-                for f in reuse_files:
-                    ndv[f] = (reuse_ndv or {}).get(
-                        f, {c: None for c in ndv_cols})
-            else:
-                nk = [f"snap/v={version}/{f}" for f in new_files]
-                ndv = {k.split("/", 2)[-1]: v for k, v in _file_ndv(
-                    path, nk, list(ndv_cols), df.schema,
-                    df.sparkSession).items()}
-            nsidecar = f"{version}.ndv.json"
-            ntmp = os.path.join(_manifest_dir(path), nsidecar + ".tmp")
-            with open(ntmp, "w") as fh:
-                json.dump(ndv, fh)
-            os.replace(ntmp,
-                       os.path.join(_manifest_dir(path), nsidecar))
-            manifest["ndv_file"] = nsidecar
-            manifest["ndv_cols"] = list(ndv_cols)
-        # HDR histogram sidecars (per-file quantile buckets) — the
-        # third mergeable sketch beside stats ranges and NDV
-        # registers; same inheritance/carry contract.
-        if hdr_cols is None and parent is not None:
-            try:
-                pm_hdr = _read_manifest(path, parent)
-            except ValueError:
-                pm_hdr = {}
-            hdr_cols = pm_hdr.get("hdr_cols")
-            if reuse_files is not None and reuse_hdr is None \
-                    and hdr_cols:
-                reuse_hdr = _root_hdr(path, pm_hdr)
-        if hdr_cols:
-            if reuse_files is not None:
-                new_keys = [f"snap/v={version}/{f}" for f in new_files]
-                hdr = _file_hdr(path, new_keys, list(hdr_cols),
-                                df.schema, df.sparkSession)
-                for f in reuse_files:
-                    hdr[f] = (reuse_hdr or {}).get(
-                        f, {c: None for c in hdr_cols})
-            else:
-                nk = [f"snap/v={version}/{f}" for f in new_files]
-                hdr = {k.split("/", 2)[-1]: v for k, v in _file_hdr(
-                    path, nk, list(hdr_cols), df.schema,
-                    df.sparkSession).items()}
-            hsc = f"{version}.hdr.json"
-            htmp = os.path.join(_manifest_dir(path), hsc + ".tmp")
-            with open(htmp, "w") as fh:
-                json.dump(hdr, fh)
-            os.replace(htmp, os.path.join(_manifest_dir(path), hsc))
-            manifest["hdr_file"] = hsc
-            manifest["hdr_cols"] = list(hdr_cols)
+                    ents[f] = carried.get(f, unknown)
+            name = f"{version}.{kind}.json"
+            _write_json(os.path.join(_manifest_dir(path), name), ents)
+            manifest[f"{kind}_file"] = name
+            manifest.update(cfg)
         # --- delete vectors (merge-on-read) --------------------------
-        if dv_dirs is None and reuse_files is not None \
-                and parent is not None:
-            try:
-                pm_dv = _read_manifest(path, parent)
-            except ValueError:
-                pm_dv = {}
-            dv_dirs = pm_dv.get("dv_dirs")
+        if dv_dirs is None and reuse_files is not None:
+            dv_dirs = pm.get("dv_dirs")
             if dv_dirs:
                 if dv_key is None:
-                    dv_key = pm_dv.get("dv_key")
-                elif dv_key != pm_dv.get("dv_key"):
+                    dv_key = pm.get("dv_key")
+                elif dv_key != pm.get("dv_key"):
                     raise ValueError(
                         "write_versioned: dv_key "
                         f"{dv_key!r} differs from the table's live "
-                        f"delete-vector key {pm_dv.get('dv_key')!r} — "
+                        f"delete-vector key {pm.get('dv_key')!r} — "
                         "one key per table (fold the existing vectors "
                         "with optimize_versioned first)")
         if dv_df is not None:
@@ -1358,11 +1285,8 @@ def write_versioned(df: DataFrame, path: str,
         if dv_dirs:
             manifest["dv_dirs"] = sorted(set(int(v) for v in dv_dirs))
             manifest["dv_key"] = dv_key
-        mf = os.path.join(_manifest_dir(path), f"{version}.json")
-        tmp = mf + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(manifest, fh)
-        os.replace(tmp, mf)
+        _write_json(os.path.join(_manifest_dir(path), f"{version}.json"),
+                    manifest)
         # The head TRANSITION is the atomic commit point, and it needs
         # its own mutual exclusion: the per-version claim above only
         # serializes writers that computed the SAME version number —
@@ -1400,6 +1324,18 @@ def write_versioned(df: DataFrame, path: str,
                 os.remove(hclaim)
             except FileNotFoundError:
                 pass
+    except BaseException as e:
+        # fail fast: drop side writes not yet started, and never lose
+        # a side write's own failure behind the primary error
+        if _pool is not None:
+            _pool.shutdown(cancel_futures=True)
+            for fut in (f for f in (_cfut, _dfut) if f is not None):
+                err = None if fut.cancelled() else fut.exception()
+                if err is not None and err is not e:
+                    e.add_note(f"write_versioned: side write of "
+                               f"version {version} also failed: "
+                               f"{type(err).__name__}: {err}")
+        raise
     finally:
         if _pool is not None:
             _pool.shutdown(wait=True)
@@ -1417,17 +1353,7 @@ def load_file_stats(manifest: dict) -> dict | None:
     pay the O(files) parse.  Inline ``file_stats`` (pre-sidecar
     manifests, hand-built dicts) still work.  None when the snapshot
     recorded no stats or the sidecar is gone."""
-    stats = manifest.get("file_stats")
-    if stats is None and manifest.get("stats_file") \
-            and manifest.get("_manifest_dir"):
-        try:
-            with open(os.path.join(manifest["_manifest_dir"],
-                                   manifest["stats_file"])) as fh:
-                stats = json.load(fh)
-        except FileNotFoundError:
-            return None                     # sidecar gone: no pruning
-        manifest["file_stats"] = stats      # cache for repeat calls
-    return stats
+    return _load_sidecar(manifest, "stats")
 
 
 def prune_files(manifest: dict, where) -> list | None:
@@ -1825,24 +1751,24 @@ def _merge_commit(spark, path, key, m, base, aligned, parent_detect,
                                          "merge_mode": "mor"},
                 changes_df=changes, stats_cols=m.get("stats_cols"),
                 reuse_files=_root_files(path, m),
-                reuse_stats=_root_stats(path, m),
                 dv_df=dv_df, dv_key=key)
         finally:
             sel.unpersist()
     if file_reuse and not m.get("partition_by"):
         schema = T.StructType.fromJson(json.loads(m["schema_json"]))
         parent_files = _root_files(path, m)
-        touched = sorted({
-            _rel_uri(path, r["_f"]) for r in
-            _detect_frame(spark, path, m)
-            .join(_hint(aligned.select(key).distinct()),
-                  key, "left_semi")
-            # no .distinct() before the collect: dedup happens in the
-            # set comprehension — the rows are batch-sized (one per
-            # MATCHED base row, CDC-bounded) and the distinct added a
-            # full exchange + an AQE stage per merge for nothing
-            .select("_f").collect()
-        })                                  # bounded: matched rows
+        hit = (_detect_frame(spark, path, m)
+               .join(_hint(aligned.select(key).distinct()),
+                     key, "left_semi").select("_f"))
+        # a CDC-sized batch (broadcast_batch) collects one row per
+        # MATCHED base row — the set dedups, and a .distinct() would
+        # add a full exchange + an AQE stage per merge for nothing; a
+        # backfill-sized batch dedups executor-side so the collect
+        # stays bounded by the file count
+        if not broadcast_batch:
+            hit = hit.distinct()
+        touched = sorted({_rel_uri(path, r["_f"])
+                          for r in hit.collect()})
         untouched = [f for f in parent_files if f not in set(touched)]
         sub = (apply_delete_vectors(
             spark, path, m, spark.read.schema(schema).parquet(
@@ -1868,7 +1794,7 @@ def _merge_commit(spark, path, key, m, base, aligned, parent_detect,
             merged, path, expected_parent=expected_parent, _op="merge",
             extra_meta=extra_meta, changes_df=changes,
             stats_cols=m.get("stats_cols"),
-            reuse_files=untouched, reuse_stats=_root_stats(path, m))
+            reuse_files=untouched)
     changes = _merge_changes(base, aligned, key,
                              detect_cols=parent_detect,
                              broadcast_batch=broadcast_batch) \
@@ -1895,14 +1821,11 @@ def _root_files(path: str, manifest: dict) -> list[str]:
     return [f"snap/v={v}/{f}" for f in _data_files(_snap_dir(path, v))]
 
 
-def _root_stats(path: str, manifest: dict) -> dict:
-    """A snapshot's per-file stats re-keyed TABLE-ROOT-relative (the
-    file-reuse sidecar keying), empty when none recorded."""
-    stats = load_file_stats(manifest) or {}
-    if manifest.get("data_files") is not None:
-        return dict(stats)
-    v = manifest["version"]
-    return {f"snap/v={v}/{k}": s for k, s in stats.items()}
+def _rebase(src: str, dst: str, rel: str) -> str:
+    """A ``src``-root-relative path re-expressed ``dst``-root-relative
+    (a clone's ``../src/...`` references)."""
+    return os.path.relpath(os.path.join(os.path.abspath(src), rel),
+                           os.path.abspath(dst)).replace(os.sep, "/")
 
 
 def _rel_uri(path: str, uri: str) -> str:
@@ -2016,7 +1939,6 @@ def delete_where(spark: SparkSession, path: str, condition,
                 extra_meta={"delete_mode": "mor"},
                 stats_cols=stats_cols, changes_df=changes,
                 reuse_files=parent_files,
-                reuse_stats=_root_stats(path, m),
                 dv_df=dv_df, dv_key=key, _no_data=True)
         finally:
             hits.unpersist()
@@ -2058,8 +1980,7 @@ def delete_where(spark: SparkSession, path: str, condition,
     version = write_versioned(
         replacement, path, expected_parent=expected_parent,
         _op="delete", stats_cols=stats_cols, changes_df=changes,
-        reuse_files=untouched, reuse_stats=_root_stats(path, m),
-        _no_data=not touched)
+        reuse_files=untouched, _no_data=not touched)
     return {"version": version, "n_deleted": int(n_deleted),
             "files_rewritten": len(touched),
             "files_reused": len(untouched)}
@@ -2223,7 +2144,6 @@ def update_where(spark: SparkSession, path: str, condition,
                 stats_cols=m.get("stats_cols"),
                 changes_df=changes_of(hits.drop("_f", "_chg")),
                 reuse_files=_root_files(path, m),
-                reuse_stats=_root_stats(path, m),
                 dv_df=dv_df, dv_key=key,
                 _no_data=not n_changed)
         finally:
@@ -2276,7 +2196,7 @@ def update_where(spark: SparkSession, path: str, condition,
         replacement, path, expected_parent=expected_parent,
         _op="update", stats_cols=m.get("stats_cols"),
         changes_df=changes, reuse_files=untouched,
-        reuse_stats=_root_stats(path, m), _no_data=not touched)
+        _no_data=not touched)
     return {"version": version, "n_updated": int(n_updated),
             "n_changed": int(n_changed),
             "files_rewritten": len(touched),
@@ -2333,8 +2253,8 @@ def restore_version(spark: SparkSession, path: str, version: int,
     from stored change files when the undone span has them
     (O(changes)), else computed as the snapshot diff.
 
-    The restored snapshot's ``stats_cols`` sidecar and schema carry
-    forward; PARTITIONED snapshots cannot be carried by reference
+    The restored snapshot's sidecars (stats, Bloom, NDV, HDR), their
+    config and its schema carry forward; PARTITIONED snapshots cannot be carried by reference
     (directory columns don't resolve across snapshot dirs — the
     file-reuse invariant), so they restore as a full rewrite with the
     original ``partition_by``.  Restoring the current head, an
@@ -2370,9 +2290,7 @@ def restore_version(spark: SparkSession, path: str, version: int,
             df, path, expected_parent=expected_parent, _op="restore",
             extra_meta=meta, stats_cols=m_old.get("stats_cols"),
             partition_by=m_old["partition_by"], changes_df=changes,
-            bloom_cols=m_old.get("bloom_cols") or [],
-            bloom_bits=m_old.get("bloom_bits"),
-            bloom_hashes=m_old.get("bloom_hashes"))
+            _carry_from=(path, m_old))
         return {"version": new_v, "restored_from": version,
                 "files_reused": 0, "files_rewritten": m_old["n_files"]}
     files = _root_files(path, m_old)
@@ -2397,21 +2315,16 @@ def restore_version(spark: SparkSession, path: str, version: int,
             "retained versions can be restored")
     schema = T.StructType.fromJson(json.loads(m_old["schema_json"]))
     empty = spark.createDataFrame([], schema)
-    # Bloom config travels WITH the carried bitmaps: write_versioned
-    # would otherwise inherit bloom_bits/bloom_hashes from the current
-    # HEAD's manifest, and bitmaps built under m_old's sizing probed
-    # with HEAD's parameters yield silent false negatives (r10
-    # ADVICE).  m_old without blooms restores the no-bloom state
-    # ([] disarms — RESTORE restores table properties too).
+    # Sidecar config and entries come FROM m_old (RESTORE restores
+    # table properties too): inheriting the current HEAD's Bloom
+    # sizing would probe m_old's bitmaps with the wrong parameters —
+    # silent false negatives — and m_old without a kind restores the
+    # disarmed state.
     new_v = write_versioned(
         empty, path, expected_parent=expected_parent, _op="restore",
         extra_meta=meta, stats_cols=m_old.get("stats_cols"),
         changes_df=changes, reuse_files=files,
-        reuse_stats=_root_stats(path, m_old),
-        reuse_blooms=_root_blooms(path, m_old),
-        bloom_cols=m_old.get("bloom_cols") or [],
-        bloom_bits=m_old.get("bloom_bits"),
-        bloom_hashes=m_old.get("bloom_hashes"),
+        _carry_from=(path, m_old),
         # the restored CONTENT includes m_old's delete vectors —
         # inheriting the current head's list instead would apply
         # post-restore deletes to the restored state ([] resets when
@@ -2437,9 +2350,9 @@ def clone_versioned(spark: SparkSession, src: str, dst: str,
 
     File references are stored dst-root-relative (``../src/...``) —
     the same explicit ``data_files`` contract every file-reuse commit
-    uses, so readers, stats skipping (the sidecar carries forward),
-    CDC, vacuum's reference counting, and further COW commits all
-    work on a clone unchanged.  :func:`vacuum_versioned` on the CLONE
+    uses, so readers, skipping and sketches (every sidecar kind
+    carries forward with its config), CDC, vacuum's reference
+    counting, and further COW commits all work on a clone unchanged.  :func:`vacuum_versioned` on the CLONE
     never touches source files (it only removes under its own root);
     vacuuming the SOURCE does not know about clones — like Delta
     shallow clones, dropping the cloned source version breaks the
@@ -2470,10 +2383,7 @@ def clone_versioned(spark: SparkSession, src: str, dst: str,
         v = write_versioned(
             df, dst, _op="clone", extra_meta=meta,
             stats_cols=m.get("stats_cols"),
-            partition_by=m["partition_by"],
-            bloom_cols=m.get("bloom_cols"),
-            bloom_bits=m.get("bloom_bits"),
-            bloom_hashes=m.get("bloom_hashes"))
+            partition_by=m["partition_by"], _carry_from=(src, m))
         return {"version": v, "source_path": src_abs,
                 "source_version": version, "files_referenced": 0,
                 "files_rewritten": m["n_files"]}
@@ -2486,14 +2396,7 @@ def clone_versioned(spark: SparkSession, src: str, dst: str,
             f"vacuumed ({len(missing) + m['n_files'] - len(files)}"
             f" of {m['n_files']} data files gone) — only retained "
             "versions can be cloned")
-    dst_abs = os.path.abspath(dst)
-    refs = [os.path.relpath(os.path.join(src_abs, f), dst_abs)
-            .replace(os.sep, "/") for f in files]
-    def rekey(d: dict) -> dict:
-        return {os.path.relpath(os.path.join(src_abs, k), dst_abs)
-                .replace(os.sep, "/"): v for k, v in d.items()}
-
-    reuse_stats = rekey(_root_stats(src, m))
+    refs = [_rebase(src, dst, f) for f in files]
     schema = T.StructType.fromJson(json.loads(m["schema_json"]))
     empty = spark.createDataFrame([], schema)
     # Delete vectors are REWRITTEN into the clone's own tree (one
@@ -2516,13 +2419,8 @@ def clone_versioned(spark: SparkSession, src: str, dst: str,
             *[_dv_dir(src, dvv) for dvv in m["dv_dirs"]])
     v = write_versioned(
         empty, dst, _op="clone", extra_meta=meta,
-        stats_cols=m.get("stats_cols"),
-        reuse_files=refs, reuse_stats=reuse_stats,
-        bloom_cols=m.get("bloom_cols"),
-        bloom_bits=m.get("bloom_bits"),
-        bloom_hashes=m.get("bloom_hashes"),
-        reuse_blooms=rekey(_root_blooms(src, m)),
-        dv_df=dv_df, dv_key=dv_key, _no_data=True)
+        stats_cols=m.get("stats_cols"), reuse_files=refs,
+        dv_df=dv_df, dv_key=dv_key, _no_data=True, _carry_from=(src, m))
     return {"version": v, "source_path": src_abs,
             "source_version": version, "files_referenced": len(refs),
             "files_rewritten": 0}
@@ -2533,11 +2431,12 @@ def verify_versioned(path: str, strict: bool = False) -> list[str]:
     every committed manifest and validate the invariants readers
     depend on — referenced data files exist and match ``n_files``,
     parent links chain back without cycles, the head pointer lands on
-    a committed manifest, stats/bloom sidecars parse and key only
-    referenced files, delete-vector dirs exist with their key in the
-    snapshot schema, change dirs exist where the manifest claims
-    them, and crashed-writer leftovers (orphan claims, snap dirs with
-    no manifest) are reported.  Pure driver metadata reads — no
+    a committed manifest, every sidecar kind (stats, Bloom, NDV, HDR)
+    parses, keys only referenced files and has its config,
+    delete-vector dirs exist with their key in the snapshot schema,
+    change dirs exist where the manifest claims them, and
+    crashed-writer leftovers (orphan claims, snap dirs with no
+    manifest) are reported.  Pure driver metadata reads — no
     Spark session, no data pages; run it before/after vacuum or as a
     governance cadence job.
 
@@ -2579,30 +2478,24 @@ def verify_versioned(path: str, strict: bool = False) -> list[str]:
                 f"{kind}: version {v} directory holds {len(files)} "
                 f"files, manifest says {m['n_files']} "
                 f"({m['n_files'] - len(files)} missing)")
-        try:
-            st = load_file_stats(m)
-        except Exception as e:              # malformed sidecar
-            issues.append(f"error: version {v} stats sidecar "
-                          f"unreadable: {e}")
-            st = None
-        if st:
-            rst = _root_stats(path, m)
-            extra = set(rst) - set(files)
+        for sk, sc in _SIDECARS.items():
+            try:
+                keys = set(_root_sidecar(m, sk))
+            except Exception as e:          # malformed sidecar
+                issues.append(f"error: version {v} {sk} sidecar "
+                              f"unreadable: {e}")
+                continue
+            extra = keys - set(files)
             if extra:
                 issues.append(
-                    f"error: version {v} stats key {sorted(extra)[:3]}"
+                    f"error: version {v} {sk} key {sorted(extra)[:3]}"
                     " not in the snapshot's file list")
-        try:
-            bl = load_file_blooms(m)
-        except Exception as e:
-            issues.append(f"error: version {v} bloom sidecar "
-                          f"unreadable: {e}")
-            bl = None
-        if bl is not None and m.get("bloom_cols"):
-            if not m.get("bloom_bits") or not m.get("bloom_hashes"):
+            absent = [k for k in (f"{sk}_cols", *sc.params)
+                      if m.get(f"{sk}_file") and not m.get(k)]
+            if absent:
                 issues.append(
-                    f"error: version {v} has bloom_cols but no "
-                    "bloom_bits/bloom_hashes")
+                    f"error: version {v} has a {sk} sidecar but no "
+                    f"{'/'.join(absent)}")
         for dvv in (m.get("dv_dirs") or []):
             if not os.path.isdir(_dv_dir(path, dvv)):
                 kind = "note" if v != head else "error"
@@ -3284,15 +3177,13 @@ def optimize_versioned(spark: SparkSession, path: str,
                 .where(F.col("_file").isin(big)))
             if live.limit(1).count():
                 dv_df = live
-        stats = _root_stats(path, m)
         return write_versioned(
             packed, path, expected_parent=head, _op="optimize",
             extra_meta={"compacted": len(small), "carried": len(big)},
             stats_cols=stats_cols if stats_cols is not None
             else m.get("stats_cols"),
-            reuse_files=big,
-            reuse_stats={f: stats[f] for f in big if f in stats},
-            dv_df=dv_df, dv_key=dv_key, dv_dirs=dv_dirs_override)
+            reuse_files=big, dv_df=dv_df, dv_key=dv_key,
+            dv_dirs=dv_dirs_override)
     df = read_version(spark, path, head)
     if zorder:
         from ..functions.layout import zorder_key

@@ -428,7 +428,6 @@ def apply_changes_sink(table_path: str, key: str,
                 extra_meta={**meta, "apply_mode": "mor"},
                 stats_cols=m.get("stats_cols"),
                 reuse_files=parent_files,
-                reuse_stats=V._root_stats(table_path, m),
                 dv_df=dv_df, dv_key=key)
             return
         touched = sorted({
@@ -446,7 +445,6 @@ def apply_changes_sink(table_path: str, key: str,
             .join(del_keys, key, "left_anti")
         V.write_versioned(
             merged, table_path, _op="cdc-apply", extra_meta=meta,
-            stats_cols=m.get("stats_cols"), reuse_files=untouched,
-            reuse_stats=V._root_stats(table_path, m))
+            stats_cols=m.get("stats_cols"), reuse_files=untouched)
 
     return write
