@@ -861,23 +861,64 @@ class TestStatsSidecar:
 
     def test_executor_side_stats_match_driver_side(self, spark, tpath,
                                                    monkeypatch):
+        # every sidecar kind, built by the driver loop and by the
+        # executor job, over bigint, string, date and NULL-bearing
+        # columns: the entries must be identical
         df = (spark.range(200)
               .select(F.col("id").alias("k"),
-                      F.lit("x").alias("val"), F.col("id").alias("n"))
+                      F.lit("x").alias("val"), F.col("id").alias("n"),
+                      F.concat(F.lit("s"), (F.col("id") % 17)
+                               .cast("string")).alias("s"),
+                      F.date_add(F.lit("2020-01-01").cast("date"),
+                                 (F.col("id") % 40).cast("int"))
+                      .alias("d"),
+                      F.when(F.col("id") % 5 == 0, F.lit(None))
+                      .otherwise(F.col("id") + 1).alias("p"))
               .repartitionByRange(6, "k"))
-        V.write_versioned(df, tpath, stats_cols=["k", "n"])
-        driver_stats = V.load_file_stats(V._read_manifest(tpath, 1))
+        arm = dict(stats_cols=["k", "n", "p"],
+                   bloom_cols=["k", "s", "d", "p"],
+                   ndv_cols=["k", "s", "d", "p"], hdr_cols=["p"])
+        V.write_versioned(df, tpath, **arm)
         monkeypatch.setattr(V, "_STATS_DRIVER_MAX", 0)
-        V.write_versioned(df, tpath, stats_cols=["k", "n"])
-        exec_stats = V.load_file_stats(V._read_manifest(tpath, 2))
+        monkeypatch.setattr(V, "_SIDECAR_DRIVER_CELLS", 0)
+        V.write_versioned(df, tpath, **arm)
+        driver, execu = (V._read_manifest(tpath, v) for v in (1, 2))
+
         # file NAMES differ between the two writes (part-file UUIDs);
-        # the per-file ranges must be identical
-        def ranges(st):
-            return sorted((s["k"], s["n"]) for s in st.values())
-        assert ranges(exec_stats) == ranges(driver_stats)
-        man = V._read_manifest(tpath, 2)
-        kept = V.prune_files(man, ("k", 0, 30))
-        assert kept is not None and 0 < len(kept) < man["n_files"]
+        # the part index names the same rows in both
+        def by_part(m, kind):
+            return {f.split("-")[1]: e
+                    for f, e in V._load_sidecar(m, kind).items()}
+        for kind in ("stats", "bloom", "ndv", "hdr"):
+            assert by_part(execu, kind) == by_part(driver, kind), kind
+        assert len(by_part(driver, "stats")) == 6
+        kept = V.prune_files(execu, ("k", 0, 30))
+        assert kept is not None and 0 < len(kept) < execu["n_files"]
+
+    def test_small_bloom_commit_runs_no_extra_job(self, spark,
+                                                  tmp_path):
+        # a small commit builds its Bloom entries on the driver: arming
+        # them adds no Spark job to the write
+        sc = spark.sparkContext
+        df = (spark.range(500).select(F.col("id").alias("k"),
+                                      (F.col("id") % 7).alias("v"))
+              .repartitionByRange(4, "k"))
+
+        def jobs(group, **arm):
+            sc.setJobGroup(group, group)
+            try:
+                V.write_versioned(df, str(tmp_path / group), **arm)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            return len(sc.statusTracker().getJobIdsForGroup(group))
+
+        plain = jobs("plain", stats_cols=["k"])
+        armed = jobs("armed", stats_cols=["k"], bloom_cols=["k"])
+        assert armed == plain
+        t = str(tmp_path / "armed")
+        files = V._data_files(V._snap_dir(t, 1))
+        assert len(V.bloom_prune_files(V._read_manifest(t, 1),
+                                       ("k", 7, 7), files)) == 1
 
     def test_string_partition_numeric_values_stay_strings(self, spark,
                                                           tpath):
@@ -1599,6 +1640,55 @@ class TestTableHistory:
         assert all(h[v]["committed_at"] is not None for v in h)
 
 
+class TestLocalFrames:
+    """Driver-built frames are JVM-local relations: no Python-worker
+    task, same rows as before."""
+
+    @staticmethod
+    def _plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    def test_driver_built_frames_are_local(self, spark, tpath):
+        import datetime
+
+        from pyspark.sql import types as T
+
+        df = (spark.range(100).select(F.col("id").alias("k"),
+                                      (F.col("id") * 2).alias("n"))
+              .repartitionByRange(4, "k"))
+        V.write_versioned(df, tpath, stats_cols=["k", "n"],
+                          bloom_cols=["k"])
+        V.delete_where(spark, tpath, F.col("k") < 10)
+        hist = V.table_history(spark, tpath)
+        agg = V.stats_aggregate(spark, tpath, [
+            ("count", None, "c"), ("min", "k", "lo"),
+            ("max", "n", "hi")], version=1)
+        miss = V.read_version(spark, tpath, version=1,
+                              where=("k", 10 ** 9, 10 ** 9))
+        strict = T.StructType([T.StructField("a", T.LongType(), False),
+                               T.StructField("d", T.DateType())])
+        empty = V._local_frame(spark, [], strict)
+        for frame in (hist, agg, miss, empty):
+            plan = self._plan(frame)
+            assert "LocalTableScan" in plan and "ExistingRDD" not in plan
+        assert [(r["version"], r["parent"], r["op"], r["n_files"],
+                 r["has_changes"], r["file_reuse"])
+                for r in hist.collect()] == [
+            (1, None, "write", 4, False, False),
+            (2, 1, "delete", 4, False, True)]
+        assert hist.schema == spark.createDataFrame(
+            [], "version long, parent long, op string, n_files long, "
+            "has_changes boolean, file_reuse boolean, "
+            "restored_from long, stream_query string, "
+            "stream_batch long, committed_at double").schema
+        assert [tuple(r) for r in agg.collect()] == [(100, 0, 198)]
+        assert miss.collect() == [] and miss.schema == df.schema
+        assert empty.collect() == [] and empty.schema == strict
+        rows = [(1, datetime.date(2024, 2, 29)), (2, None)]
+        assert V._local_frame(spark, rows, "a long, d date").collect() \
+            == spark.createDataFrame(rows, "a long, d date").collect()
+
+
 class TestCloneVersioned:
     """Shallow clone: manifest-only table copy by file reference."""
 
@@ -2055,6 +2145,23 @@ class TestMorDelete:
         got = V.read_version(spark, t, where=("k", 90, 110))
         assert got.where(F.col("k").isin(100, 101)).count() == 0
         assert got.where(F.col("k") == 102).count() == 1
+
+    def test_dv_read_builds_without_job(self, spark, tmp_path):
+        # the delete-vector schema comes from the manifest: building a
+        # read of a snapshot with live vectors runs no Spark job
+        t = self._mk(spark, tmp_path, n=200, files=4)
+        V.delete_where(spark, t, F.col("k") % 9 == 0, mode="mor",
+                       key="k")
+        assert V._read_manifest(t, 2).get("dv_dirs") == [2]
+        sc = spark.sparkContext
+        sc.setJobGroup("dv_read", "dv_read")
+        try:
+            df = V.read_version(spark, t)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert sc.statusTracker().getJobIdsForGroup("dv_read") == []
+        assert sorted(r["k"] for r in df.collect()) == [
+            k for k in range(200) if k % 9]
 
     def test_cdc_sees_mor_deletes(self, spark, tmp_path):
         t = self._mk(spark, tmp_path)
@@ -2526,6 +2633,19 @@ class TestNdvSidecars:
         V.restore_version(spark, t, 1)
         assert V._read_manifest(t, 3).get("ndv_cols") == ["v"]
         assert V.stats_aggregate(spark, t, q).collect() == [want]
+
+    def test_rejects_types_without_python_string_form(self, spark,
+                                                      tmp_path):
+        # registers hash the value's string form: types whose Spark
+        # string cast Python cannot reproduce are refused up front
+        t = str(tmp_path / "t")
+        df = spark.range(10).select(F.col("id").alias("k"),
+                                    (F.col("id") / 3).alias("x"))
+        with pytest.raises(ValueError, match="ndv_cols"):
+            V.write_versioned(df, t, ndv_cols=["k", "x"])
+        assert V.latest_version(t) is None
+        V.write_versioned(df, t, ndv_cols=["k"])
+        assert V._read_manifest(t, 1)["ndv_cols"] == ["k"]
 
 
 class TestHdrSidecars:
