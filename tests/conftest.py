@@ -15,6 +15,27 @@ def spark():
     yield s
 
 
+def spark_jobs(spark, fn):
+    """Run ``fn()`` and return ``(result, n)`` where ``n`` counts the
+    Spark jobs it ran: those in a fresh job group set on this thread,
+    plus new group-less jobs (a commit's side writes run on pool
+    threads, which do not inherit the caller's job group)."""
+    import uuid
+
+    sc = spark.sparkContext
+    st = sc.statusTracker()
+    group = f"spark-jobs-{uuid.uuid4().hex}"
+    before = set(st.getJobIdsForGroup(None))
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = set(st.getJobIdsForGroup(group)) \
+        | (set(st.getJobIdsForGroup(None)) - before)
+    return out, len(jobs)
+
+
 def run_chain(spark, chain, values, in_type="string", field="v"):
     """Reference-style test harness (``filters/test.py::
     BaseFilterTestCase`` analog): run a chain over a list of raw

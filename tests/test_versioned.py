@@ -8,6 +8,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import spark_jobs
 from filters_spark.sources import versioned as V
 
 
@@ -899,18 +900,13 @@ class TestStatsSidecar:
                                                   tmp_path):
         # a small commit builds its Bloom entries on the driver: arming
         # them adds no Spark job to the write
-        sc = spark.sparkContext
         df = (spark.range(500).select(F.col("id").alias("k"),
                                       (F.col("id") % 7).alias("v"))
               .repartitionByRange(4, "k"))
 
-        def jobs(group, **arm):
-            sc.setJobGroup(group, group)
-            try:
-                V.write_versioned(df, str(tmp_path / group), **arm)
-            finally:
-                sc.setLocalProperty("spark.jobGroup.id", None)
-            return len(sc.statusTracker().getJobIdsForGroup(group))
+        def jobs(name, **arm):
+            return spark_jobs(spark, lambda: V.write_versioned(
+                df, str(tmp_path / name), **arm))[1]
 
         plain = jobs("plain", stats_cols=["k"])
         armed = jobs("armed", stats_cols=["k"], bloom_cols=["k"])
@@ -2153,13 +2149,8 @@ class TestMorDelete:
         V.delete_where(spark, t, F.col("k") % 9 == 0, mode="mor",
                        key="k")
         assert V._read_manifest(t, 2).get("dv_dirs") == [2]
-        sc = spark.sparkContext
-        sc.setJobGroup("dv_read", "dv_read")
-        try:
-            df = V.read_version(spark, t)
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        assert sc.statusTracker().getJobIdsForGroup("dv_read") == []
+        df, jobs = spark_jobs(spark, lambda: V.read_version(spark, t))
+        assert jobs == 0
         assert sorted(r["k"] for r in df.collect()) == [
             k for k in range(200) if k % 9]
 
