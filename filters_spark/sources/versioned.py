@@ -173,6 +173,11 @@ def _read_manifest(path: str, version: int) -> dict:
     return manifest
 
 
+def _schema(manifest: dict) -> T.StructType:
+    """A manifest's table schema."""
+    return T.StructType.fromJson(json.loads(manifest["schema_json"]))
+
+
 def _claim(path: str, version: int) -> str:
     os.makedirs(_manifest_dir(path), exist_ok=True)
     claim = os.path.join(_manifest_dir(path), f"{version}.claim")
@@ -902,7 +907,7 @@ def stats_aggregate(spark: SparkSession, path: str,
                          "evaluation")
     files = _root_files(path, m)
     stats = _root_sidecar(m, "stats")
-    schema = T.StructType.fromJson(json.loads(m["schema_json"]))
+    schema = _schema(m)
     types = {f.name: f.dataType for f in schema.fields}
 
     meta_cols = sorted({c for _f, c, _a in aggs if c is not None}
@@ -1032,7 +1037,7 @@ def _read_dv(spark: SparkSession, path: str, manifest: dict) -> DataFrame:
     manifest's ``schema_json``, so building the read runs no
     schema-inference job."""
     key = manifest["dv_key"]
-    table = T.StructType.fromJson(json.loads(manifest["schema_json"]))
+    table = _schema(manifest)
     schema = T.StructType([T.StructField("_file", T.StringType()),
                            T.StructField(key, table[key].dataType)])
     return spark.read.schema(schema).parquet(
@@ -1083,22 +1088,34 @@ def apply_delete_vectors(spark: SparkSession, path: str,
             .drop("_dv_file"))
 
 
+def _read_files(spark: SparkSession, path: str, manifest: dict,
+                files: list[str], file_col: str | None = None
+                ) -> DataFrame:
+    """The LIVE rows of ``files`` (table-root-relative) under the
+    manifest's schema, its delete vectors applied — an empty local
+    frame when ``files`` is empty.  ``file_col`` adds that column as
+    input_file_name(), materialized before the DV anti-join (see
+    :func:`apply_delete_vectors`)."""
+    schema = _schema(manifest)
+    if not files:
+        empty = _local_frame(spark, [], schema)
+        return empty.withColumn(file_col, F.lit("")) if file_col \
+            else empty
+    raw = spark.read.schema(schema).parquet(
+        *[os.path.join(path, f) for f in files])
+    if file_col:
+        raw = raw.withColumn(file_col, F.input_file_name())
+    return apply_delete_vectors(spark, path, manifest, raw,
+                                file_col=file_col)
+
+
 def _detect_frame(spark: SparkSession, path: str,
                   manifest: dict) -> DataFrame:
     """The LIVE rows of a flat snapshot carrying ``_f`` =
-    input_file_name() — the touched-file detection input every
-    copy-on-write op uses.  ``_f`` materializes before the DV
-    anti-join (see :func:`apply_delete_vectors`)."""
-    schema = T.StructType.fromJson(json.loads(manifest["schema_json"]))
-    files = _root_files(path, manifest)
-    if not files:
-        return _local_frame(spark, [], schema) \
-            .withColumn("_f", F.lit(""))
-    raw = (spark.read.schema(schema).parquet(
-        *[os.path.join(path, f) for f in files])
-        .withColumn("_f", F.input_file_name()))
-    return apply_delete_vectors(spark, path, manifest, raw,
-                                file_col="_f")
+    input_file_name() — the touched-file detection input of every
+    row-level commit (:func:`_row_commit`)."""
+    return _read_files(spark, path, manifest,
+                       _root_files(path, manifest), "_f")
 
 
 def write_versioned(df: DataFrame, path: str,
@@ -1198,7 +1215,12 @@ def write_versioned(df: DataFrame, path: str,
     FILE-REUSE commits INHERIT the parent's (carried files still
     contain the deleted rows — dropping the vectors would resurrect
     them) while full rewrites reset (``df`` comes from a DV-applied
-    read, so the new files hold only live rows)."""
+    read, so the new files hold only live rows).
+
+    A commit that fails before its manifest is written leaves nothing
+    behind: after its side writes join, it removes the ``snap/``,
+    ``changes/`` and ``dv/v=N`` directories and the ``N.<kind>.json``
+    sidecars it created, then re-raises."""
     if reuse_files and partition_by:
         raise ValueError(
             "write_versioned: file-reuse commits require a flat "
@@ -1233,6 +1255,7 @@ def write_versioned(df: DataFrame, path: str,
     claim = _claim(path, version)
     _pool: ThreadPoolExecutor | None = None
     _cfut = _dfut = None
+    manifested = False
     try:
         snap = _snap_dir(path, version)
         # The commit's SIDE WRITES (stored change feed, delete-vector
@@ -1362,6 +1385,7 @@ def write_versioned(df: DataFrame, path: str,
             manifest["dv_key"] = dv_key
         _write_json(os.path.join(_manifest_dir(path), f"{version}.json"),
                     manifest)
+        manifested = True
         # The head TRANSITION is the atomic commit point, and it needs
         # its own mutual exclusion: the per-version claim above only
         # serializes writers that computed the SAME version number —
@@ -1410,6 +1434,21 @@ def write_versioned(df: DataFrame, path: str,
                     e.add_note(f"write_versioned: side write of "
                                f"version {version} also failed: "
                                f"{type(err).__name__}: {err}")
+        if not manifested:
+            # nothing references this version's files yet: reclaim
+            # them now (the side writes have joined above) instead of
+            # leaving orphans for vacuum or the retry to overwrite
+            import shutil
+
+            for d in (_snap_dir(path, version),
+                      _changes_dir(path, version), _dv_dir(path, version)):
+                shutil.rmtree(d, ignore_errors=True)
+            for kind in _SIDECARS:
+                try:
+                    os.remove(os.path.join(_manifest_dir(path),
+                                           f"{version}.{kind}.json"))
+                except FileNotFoundError:
+                    pass
         raise
     finally:
         if _pool is not None:
@@ -1505,7 +1544,7 @@ def read_version(spark: SparkSession, path: str,
         if version is None:
             raise ValueError(f"versioned table {path!r} has no snapshots")
     manifest = _read_manifest(path, version)
-    schema = T.StructType.fromJson(json.loads(manifest["schema_json"]))
+    schema = _schema(manifest)
     snap = _snap_dir(path, version)
     data_files = manifest.get("data_files")
     if data_files is not None:
@@ -1526,12 +1565,7 @@ def read_version(spark: SparkSession, path: str,
             if kept is not None:
                 files = kept
             files = bloom_prune_files(manifest, where, files)
-        if not files:
-            return _local_frame(spark, [], schema)
-        return apply_delete_vectors(
-            spark, path, manifest,
-            spark.read.schema(schema).parquet(
-                *[os.path.join(path, f) for f in files]))
+        return _read_files(spark, path, manifest, files)
     if not os.path.isdir(snap):
         raise ValueError(
             f"snapshot {version} of {path!r} was vacuumed — "
@@ -1563,18 +1597,64 @@ def read_version(spark: SparkSession, path: str,
         spark, path, manifest, spark.read.schema(schema).parquet(snap))
 
 
+def _fp(cols: list) -> Column:
+    """Content fingerprint of a row: md5 of the canonical JSON of
+    ``cols`` (null-safe; names are part of the JSON, so compare two
+    fingerprints built over the same names).  Engine-internal change
+    detection — never hash-gated itself."""
+    return F.md5(F.to_json(F.struct(*cols)))
+
+
+def _key_diff(old: DataFrame, new: DataFrame, key: str, how: str,
+              detect_cols: list[str] | None = None) -> DataFrame:
+    """The keyed change rows between ``old`` and ``new`` joined
+    ``how`` on ``key``: a key only in ``new`` is an ``insert``, only
+    in ``old`` a ``delete``, in both with a different fingerprint of
+    ``detect_cols`` (default: the common non-key columns) an update
+    pre/post pair; same content emits nothing.  Output is
+    ``_change_type`` + the key + every other column sorted (a column
+    absent from one side is NULL on that side's rows).  Both the
+    stored feed (:func:`_merge_changes`) and the read-time diff
+    (:func:`read_changes`) run this, so stored ≡ diff by
+    construction."""
+    common = sorted(set(old.columns) & set(new.columns) - {key}) \
+        if detect_cols is None else sorted(detect_cols)
+    all_cols = [key] + sorted((set(old.columns) | set(new.columns))
+                              - {key})
+    has = {"o": set(old.columns), "n": set(new.columns)}
+
+    def image(change_type: str, side: str):
+        payload = F.struct(*[
+            (F.col(f"{side}.{c}") if c in has[side] else F.lit(None))
+            .alias(c) for c in all_cols])
+        return F.struct(F.lit(change_type).alias("_change_type"),
+                        payload.alias("p"))
+
+    joined = old.alias("o").join(
+        new.alias("n"), F.col(f"o.{key}") == F.col(f"n.{key}"), how)
+    change = F.when(
+        F.col(f"o.{key}").isNull(), F.array(image("insert", "n"))
+    ).when(
+        F.col(f"n.{key}").isNull(), F.array(image("delete", "o"))
+    ).when(
+        _fp([F.col(f"o.{c}") for c in common])
+        != _fp([F.col(f"n.{c}") for c in common]),
+        F.array(image("update_preimage", "o"),
+                image("update_postimage", "n"))
+    ).otherwise(F.array())
+    return (joined.select(F.explode(change).alias("c"))
+            .select(F.col("c._change_type").alias("_change_type"),
+                    "c.p.*"))
+
+
 def _merge_changes(base: DataFrame, updates: DataFrame, key: str,
                    detect_cols: list[str] | None = None,
                    broadcast_batch: bool = True) -> DataFrame:
     """Change feed of a keyed merge, computed AT COMMIT TIME from
-    base × updates: one join whose probe side is the (usually small)
-    update batch — broadcast-able, never a full-outer diff of two
-    whole snapshots.  A merge can only insert (update key absent from
-    base) or update (present, content differs); rewriting a row with
-    identical content emits nothing.  Output columns, change-type
-    vocabulary, and the content fingerprint are identical to
-    :func:`read_changes` over the same transition, so stored ≡ diff
-    by construction.
+    base × updates: the :func:`_key_diff` of the base rows whose key
+    the batch holds against the batch, right-outer (a merge can only
+    insert or update) — never a full-outer diff of two whole
+    snapshots.
 
     ``detect_cols`` restricts change DETECTION (not payloads) to the
     given columns — :func:`merge_versioned` passes the PARENT
@@ -1602,39 +1682,143 @@ def _merge_changes(base: DataFrame, updates: DataFrame, key: str,
     matched = base.join(
         F.broadcast(keyset) if broadcast_batch else keyset,
         key, "left_semi")
-    o, n = matched.alias("o"), updates.alias("n")
-    common = sorted(set(base.columns) & set(updates.columns) - {key}) \
-        if detect_cols is None else sorted(detect_cols)
-    all_cols = [key] + sorted((set(base.columns) | set(updates.columns))
-                              - {key})
+    return _key_diff(matched, updates, key, "right_outer", detect_cols)
 
-    def fp(side: str, cols: list[str]):
-        return F.md5(F.to_json(F.struct(
-            *[F.col(f"{side}.{c}") for c in cols])))
 
-    def payload(side: str, has: set):
-        return F.struct(*[
-            (F.col(f"{side}.{c}") if c in has else F.lit(None)).alias(c)
-            for c in all_cols])
+def _head_manifest(path: str) -> dict:
+    """The manifest of the table head — the parent of a row-level
+    commit."""
+    parent = latest_version(path)
+    if parent is None:
+        raise ValueError(
+            f"versioned table {path!r} has no base snapshot — "
+            "write_versioned the initial table first")
+    return _read_manifest(path, parent)
 
-    o_has, n_has = set(base.columns), set(updates.columns)
-    joined = o.join(n, F.col(f"o.{key}") == F.col(f"n.{key}"),
-                    "right_outer")
-    change = F.when(
-        F.col(f"o.{key}").isNull(),
-        F.array(F.struct(F.lit("insert").alias("_change_type"),
-                         payload("n", n_has).alias("p")))
-    ).when(
-        fp("o", common) != fp("n", common),
-        F.array(
-            F.struct(F.lit("update_preimage").alias("_change_type"),
-                     payload("o", o_has).alias("p")),
-            F.struct(F.lit("update_postimage").alias("_change_type"),
-                     payload("n", n_has).alias("p")))
-    ).otherwise(F.array())
-    return (joined.select(F.explode(change).alias("c"))
-            .select(F.col("c._change_type").alias("_change_type"),
-                    "c.p.*"))
+
+def _row_commit(spark: SparkSession, path: str, m: dict, mode: str, *,
+                op: str, name: str, key: str | None, touch, replace,
+                post=None, inserts: DataFrame | None = None, feed=None,
+                expected_parent: int | None = None,
+                extra_meta: dict | None = None) -> dict:
+    """Commit a row-level op (merge, delete, update) on parent manifest
+    ``m`` in one of three LAYOUTS — the one place they are written.
+
+    - ``mode='full'`` — FULL REWRITE: ``replace(live)`` over the whole
+      parent, written with the parent's ``partition_by``.  Also taken
+      by ``'cow'`` on a partitioned parent: directory columns do not
+      resolve across snapshot dirs, so files cannot be reused.
+    - ``mode='cow'`` — COPY-ON-WRITE file reuse: one scan of the live
+      rows (:func:`_detect_frame`) aggregated per file finds the files
+      holding touched rows; only those are re-read (DV-applied) and
+      rewritten as ``replace(slice)``, every other file is carried by
+      reference.  Nothing touched and no ``inserts`` ⇒ a data-less
+      commit (no junk empty file).
+    - ``mode='mor'`` — MERGE-ON-READ: the touched rows are persisted
+      once; the CHANGED ones (``_chg``) are killed by a ``(file tail,
+      key)`` delete-vector sidecar and ``post(changed)`` is appended
+      as the commit's own files, together with the ``inserts`` rows
+      whose key no live row holds.  Every parent file is carried by
+      reference.  Flat layouts only (the file-tail binding) and a
+      UNIQUE ``key`` is required.
+
+    The op supplies only what is its own: ``touch(live)`` — the rows
+    of a live frame it touches, plus a boolean ``_chg`` (content
+    changes; ``live``'s ``_f`` column carried when present), and under
+    MOR the columns ``post`` reads; ``replace(rows)`` — the rewrite
+    of a slice of live rows; ``post(changed)`` — what replaces its
+    changed rows under MOR (None: they are removed); ``inserts`` — a
+    batch whose unmatched keys insert; ``feed(live, touched)`` — its
+    change feed, from the live rows read and the touched rows (None:
+    no stored feed).  ``touch=None`` commits a full rewrite without
+    counting.  Sidecar and stats config carry from the parent.
+
+    Counts come from ONE action — the per-file aggregate of touched
+    rows and changed rows, one row per file (a global row in the full
+    layout).  Returns ``{"version", "n", "n_changed",
+    "files_rewritten", "files_reused"}``."""
+    if mode == "mor":
+        if m.get("partition_by"):
+            raise ValueError(
+                f"{name}: delete vectors require a flat layout (the "
+                "file-tail binding) — partitioned tables commit "
+                "copy-on-write")
+        if key is None:
+            raise ValueError(
+                f"{name}: merge-on-read requires key= (a unique row "
+                "identity column the vectors bind to)")
+        if key not in _schema(m).fieldNames():
+            raise ValueError(
+                f"{name}: key {key!r} not in table columns")
+    elif m.get("partition_by"):
+        mode = "full"
+    parent_files = _root_files(path, m)
+    reuse = dv_df = None
+    no_data = False
+    # live: the live rows the commit reads (COW narrows it to the
+    # touched slice below); hits: touch() of them, with ``_f``
+    # outside the full layout
+    if mode == "full":
+        live = read_version(spark, path, m["version"])
+        hits = touch(live) if touch is not None else None
+        rows = replace(live)
+        rewritten = m["n_files"]
+    else:
+        det = _detect_frame(spark, path, m)
+        live = det.drop("_f")
+        hits = touch(det)
+        if mode == "mor":
+            hits = hits.persist()
+    try:
+        per_file = [] if hits is None else (
+            hits.groupBy(*[c for c in ["_f"] if c in hits.columns])
+            .agg(F.count(F.lit(1)).alias("_n"),
+                 F.sum(F.col("_chg").cast("int")).alias("_c"))
+            .collect())
+        n = sum(r["_n"] for r in per_file) if hits is not None else None
+        n_chg = sum(r["_c"] or 0 for r in per_file)
+        if mode == "cow":
+            touched = sorted({_rel_uri(path, r["_f"]) for r in per_file})
+            reuse = [f for f in parent_files if f not in set(touched)]
+            live = _read_files(spark, path, m, touched)
+            hits = touch(live)
+            rows = replace(live)
+            rewritten = len(touched)
+            no_data = not touched and inserts is None
+        elif mode == "mor":
+            reuse = parent_files
+            rewritten = 0
+            changed = hits.where(F.col("_chg"))
+            if n_chg:
+                dv_df = changed.select(
+                    F.regexp_extract(F.col("_f"), _DV_TAIL, 1)
+                    .alias("_file"), key)
+            rows = post(changed.drop("_f", "_chg")) \
+                if post is not None else None
+            if inserts is not None:
+                new = inserts.join(hits.select(key), key, "left_anti")
+                rows = new if rows is None else rows.unionByName(new)
+            no_data = rows is None or (not n_chg and inserts is None)
+            extra_meta = {**(extra_meta or {}), f"{op}_mode": "mor"}
+        if no_data:
+            rows = _local_frame(spark, [], _schema(m))
+        changes = None if feed is None else feed(
+            live, hits.drop("_f", "_chg") if hits is not None else None)
+        version = write_versioned(
+            rows, path,
+            expected_parent=m["version"] if expected_parent is None
+            else expected_parent,
+            _op=op, extra_meta=extra_meta, changes_df=changes,
+            stats_cols=m.get("stats_cols"),
+            partition_by=m.get("partition_by"), reuse_files=reuse,
+            dv_df=dv_df, dv_key=key if mode == "mor" else None,
+            _no_data=no_data)
+    finally:
+        if mode == "mor":
+            hits.unpersist()
+    return {"version": version, "n": n, "n_changed": n_chg,
+            "files_rewritten": rewritten,
+            "files_reused": len(reuse or [])}
 
 
 def merge_versioned(spark: SparkSession, path: str, updates: DataFrame,
@@ -1672,15 +1856,13 @@ def merge_versioned(spark: SparkSession, path: str, updates: DataFrame,
     old files read under the widened manifest schema via
     schema-on-read (absent columns null out).
 
-    ``file_reuse=True`` commits copy-on-write at FILE granularity
-    (the :func:`delete_where` shape): one semi-join against the
-    update keys finds the files whose rows the merge touches, the
-    upsert runs over THAT SLICE plus the update batch (unmatched
-    updates insert there), and every untouched file is carried by
-    reference — a small CDC batch against a 100 TB table rewrites
-    the touched slice, not the table.  Flat layouts only
-    (partitioned parents fall back to the full materialization);
-    parent ``stats_cols`` carry forward like delete_where's.
+    The commit layout (contract on :func:`_row_commit`): by default a
+    full rewrite.  ``file_reuse=True`` commits copy-on-write at FILE
+    granularity: the files holding a batch key are rewritten with the
+    upsert of their rows and the batch (unmatched updates insert
+    there); every untouched file is carried by reference — a small
+    CDC batch against a 100 TB table rewrites the touched slice, not
+    the table.  Partitioned parents fall back to the full rewrite.
 
     ``broadcast_batch`` (default True) pins explicit ``F.broadcast``
     hints on the update-batch side of the internal joins: the batch
@@ -1693,197 +1875,76 @@ def merge_versioned(spark: SparkSession, path: str, updates: DataFrame,
     ``dedup._guard_unblocked_cross`` escape-hatch discipline without
     paying a count job on every CDC merge.
 
-    ``mor=True`` (merge-on-read — the r11 deletion-vector machinery,
-    overriding ``file_reuse``): matched keys whose content CHANGES
-    get their old copies killed by a delete-sized vector sidecar and
-    their new versions appended as the commit's own files; inserts
+    ``mor=True`` (merge-on-read, overriding ``file_reuse``): matched
+    keys whose content CHANGES get their old copies killed by a
+    delete-vector sidecar and their new versions appended; inserts
     append; unchanged matches neither move nor version (the
-    ``_merge_changes`` fingerprint discipline, detect-cols-scoped so
-    an ``evolve_schema`` merge stays diff-equivalent); EVERY parent
-    file carries by reference.  A scattered update batch against a
-    100 TB table writes vectors + the batch — zero files rewritten,
-    beating even the file-reuse slice rewrite when touched rows
-    spread across many files.  Requires a UNIQUE ``key``; flat
-    layouts only (raises on partitioned parents)."""
+    fingerprint discipline, detect-cols-scoped so an
+    ``evolve_schema`` merge stays diff-equivalent); zero files
+    rewritten — the right shape when touched rows spread across many
+    files.  Requires a UNIQUE ``key``; flat layouts only (raises on
+    partitioned parents)."""
     from ..plans.joins import upsert
 
-    parent = latest_version(path)
-    if parent is None:
-        raise ValueError(
-            f"merge_versioned: {path!r} has no base snapshot — "
-            "write_versioned the initial table first")
-    if expected_parent is None:
-        expected_parent = parent
-    m = _read_manifest(path, parent)
-    base = read_version(spark, path, parent)
-    parent_detect = sorted(set(base.columns) - {key})
+    m = _head_manifest(path)
+    schema = _schema(m)
+    parent_detect = sorted(set(schema.fieldNames()) - {key})
+    u_t = {f.name: f.dataType for f in updates.schema.fields}
+    types = {**u_t, **{f.name: f.dataType for f in schema.fields}}
+    all_cols = schema.fieldNames()
     if evolve_schema:
-        b_t = {f.name: f.dataType for f in base.schema.fields}
-        u_t = {f.name: f.dataType for f in updates.schema.fields}
-        conflicts = sorted(c for c in b_t
-                           if c in u_t and b_t[c] != u_t[c])
+        conflicts = sorted(f.name for f in schema.fields
+                           if f.name in u_t and u_t[f.name] != f.dataType)
         if conflicts:
             raise ValueError(
                 "merge_versioned(evolve_schema=True): column type "
                 f"conflicts {conflicts} — no silent type promotion; "
                 "cast the update batch explicitly")
-        all_cols = list(base.columns) + [c for c in updates.columns
-                                         if c not in b_t]
-        types = {**u_t, **b_t}
+        all_cols = all_cols + [c for c in updates.columns
+                               if c not in schema.fieldNames()]
 
-        def _align(df: DataFrame, have: set) -> DataFrame:
-            return df.select(*[
-                (F.col(c) if c in have
-                 else F.lit(None).cast(types[c])).alias(c)
-                for c in all_cols])
+    def widen(df: DataFrame) -> DataFrame:
+        """``df`` (and its ``_f``) under the merged column list: absent
+        columns NULL when the schema evolves, else strict."""
+        return df.select(*[c for c in ["_f"] if c in df.columns], *[
+            F.col(c) if c in df.columns or not evolve_schema
+            else F.lit(None).cast(types[c]).alias(c) for c in all_cols])
 
-        base = _align(base, set(b_t))
-        aligned = _align(updates, set(u_t))
-        _widen = lambda df: _align(df, set(b_t))  # noqa: E731
-    else:
-        aligned = updates.select(*base.columns)
-        _widen = None
     # The batch is CDC-sized by this operator's design, but its
     # LINEAGE may be arbitrarily expensive (a filtered scan, a codec
     # decode, a feed stitch) and the merge evaluates it 2-4 times
     # (feed keys + feed payload + touched detection + the upsert
     # write).  Persist once so the updates subtree runs exactly once
     # per merge (guide §5: reuse + recompute cost both argue for it).
-    aligned = aligned.persist()
+    aligned = widen(updates).persist()
+    batch = F.broadcast(aligned) if broadcast_batch else aligned
+
+    def touch(live: DataFrame) -> DataFrame:
+        # the matched rows with the batch's payload: MOR appends the
+        # changed ones as they are (broadcast hint: see _merge_changes)
+        o, n = widen(live).alias("o"), batch.alias("n")
+        return o.join(n, F.col(f"o.{key}") == F.col(f"n.{key}")).select(
+            *([F.col("o._f")] if "_f" in live.columns else []),
+            (_fp([F.col(f"o.{c}") for c in parent_detect])
+             != _fp([F.col(f"n.{c}") for c in parent_detect]))
+            .alias("_chg"),
+            *[F.col(f"n.{c}").alias(c) for c in aligned.columns])
+
+    mode = "mor" if mor else "cow" if file_reuse else "full"
     try:
-        return _merge_commit(
-            spark, path, key, m, base, aligned, parent_detect, _widen,
-            expected_parent, extra_meta, store_changes, file_reuse,
-            mor, broadcast_batch)
+        return _row_commit(
+            spark, path, m, mode, op="merge", name="merge_versioned",
+            key=key, touch=touch if mode != "full" else None,
+            replace=lambda rows: upsert(widen(rows), aligned, key),
+            post=lambda changed: changed, inserts=aligned,
+            feed=(lambda live, _touched: _merge_changes(
+                widen(live), aligned, key, detect_cols=parent_detect,
+                broadcast_batch=broadcast_batch))
+            if store_changes else None,
+            expected_parent=expected_parent,
+            extra_meta=extra_meta)["version"]
     finally:
         aligned.unpersist()
-
-
-def _merge_commit(spark, path, key, m, base, aligned, parent_detect,
-                  _widen, expected_parent, extra_meta, store_changes,
-                  file_reuse, mor, broadcast_batch=True) -> int:
-    from ..plans.joins import upsert
-
-    def _hint(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if broadcast_batch else df
-
-    if mor:
-        if m.get("partition_by"):
-            raise ValueError(
-                "merge_versioned(mor=True): delete vectors require a "
-                "flat layout — partitioned tables merge copy-on-write")
-        changes = _merge_changes(base, aligned, key,
-                                 detect_cols=parent_detect,
-                                 broadcast_batch=broadcast_batch) \
-            if store_changes else None
-        det = _detect_frame(spark, path, m)
-        if _widen is not None:
-            have = {f.name for f in
-                    T.StructType.fromJson(
-                        json.loads(m["schema_json"])).fields}
-            det = det.select(
-                "_f", *[(F.col(c) if c in have
-                         else F.lit(None)
-                         .cast(aligned.schema[c].dataType)).alias(c)
-                        for c in aligned.columns])
-        o, nn = det.alias("o"), aligned.alias("n")
-        common = parent_detect
-
-        def _fp(side: str):
-            return F.md5(F.to_json(F.struct(
-                *[F.col(f"{side}.{c}") for c in common])))
-
-        # ONE detection scan: the matched (file, changed?, new-payload)
-        # rows are batch-sized — persist them so the replacement
-        # write, the DV sidecar write, and the insert anti-join all
-        # read the cache instead of re-running the full-table join
-        # (was 3 scans of the table per MOR merge; guide §5).  The
-        # insert anti-join probes the persisted MATCHED KEYS (batch-
-        # sized) instead of building a hash over every table key.
-        # broadcast the batch side explicitly: it is RDD-backed (no
-        # size estimate), and without the hint the detection join
-        # plans as SMJ with a full hash exchange of the table
-        j = o.join(_hint(nn),
-                   F.col(f"o.{key}") == F.col(f"n.{key}"))
-        sel = j.select(
-            F.col("o._f").alias("_f"),
-            (_fp("o") != _fp("n")).alias("_chg"),
-            *[F.col(f"n.{c}").alias(c) for c in aligned.columns]
-        ).persist()
-        try:
-            n_changed = sel.where(F.col("_chg")).count()
-            changed = sel.where(F.col("_chg"))
-            changed_old = changed.select(
-                F.regexp_extract(F.col("_f"), _DV_TAIL, 1)
-                .alias("_file"), key)
-            changed_new = changed.select(*aligned.columns)
-            inserts = aligned.join(sel.select(key), key, "left_anti")
-            replacement = changed_new.unionByName(inserts)
-            dv_df = changed_old if n_changed else None
-            return write_versioned(
-                replacement, path, expected_parent=expected_parent,
-                _op="merge", extra_meta={**(extra_meta or {}),
-                                         "merge_mode": "mor"},
-                changes_df=changes, stats_cols=m.get("stats_cols"),
-                reuse_files=_root_files(path, m),
-                dv_df=dv_df, dv_key=key)
-        finally:
-            sel.unpersist()
-    if file_reuse and not m.get("partition_by"):
-        schema = T.StructType.fromJson(json.loads(m["schema_json"]))
-        parent_files = _root_files(path, m)
-        hit = (_detect_frame(spark, path, m)
-               .join(_hint(aligned.select(key).distinct()),
-                     key, "left_semi").select("_f"))
-        # a CDC-sized batch (broadcast_batch) collects one row per
-        # MATCHED base row — the set dedups, and a .distinct() would
-        # add a full exchange + an AQE stage per merge for nothing; a
-        # backfill-sized batch dedups executor-side so the collect
-        # stays bounded by the file count
-        if not broadcast_batch:
-            hit = hit.distinct()
-        touched = sorted({_rel_uri(path, r["_f"])
-                          for r in hit.collect()})
-        untouched = [f for f in parent_files if f not in set(touched)]
-        sub = (apply_delete_vectors(
-            spark, path, m, spark.read.schema(schema).parquet(
-                *[os.path.join(path, f) for f in touched]))
-            if touched else _local_frame(spark, [], schema))
-        # The stored feed only needs BASE rows whose key the batch
-        # touches, and every such row lives in a touched file (that
-        # is the definition of touched) — so the feed's base side is
-        # the TOUCHED SLICE, not the whole table: a CDC-sized merge
-        # against a 100 TB table diffs megabytes, not the table
-        # (payload values are identical; missing columns NULL-pad the
-        # same way on both paths).
-        changes = _merge_changes(sub, aligned, key,
-                                 detect_cols=parent_detect,
-                                 broadcast_batch=broadcast_batch) \
-            if store_changes else None
-        if _widen is not None:
-            sub = _widen(sub)       # carried files null-pad via
-            #                         schema-on-read; the rewritten
-            #                         slice widens here
-        merged = upsert(sub, aligned, key)
-        return write_versioned(
-            merged, path, expected_parent=expected_parent, _op="merge",
-            extra_meta=extra_meta, changes_df=changes,
-            stats_cols=m.get("stats_cols"),
-            reuse_files=untouched)
-    changes = _merge_changes(base, aligned, key,
-                             detect_cols=parent_detect,
-                             broadcast_batch=broadcast_batch) \
-        if store_changes else None
-    merged = upsert(base, aligned, key)
-    # the full-materialization path carries the parent's skipping /
-    # layout contract exactly like the file_reuse branch and
-    # delete_where do — an ordinary merge must not silently disarm
-    # where= pruning or flatten a partitioned table (ADVICE r9)
-    return write_versioned(merged, path,
-                           expected_parent=expected_parent, _op="merge",
-                           extra_meta=extra_meta, changes_df=changes,
-                           stats_cols=m.get("stats_cols"),
-                           partition_by=m.get("partition_by"))
 
 
 def _root_files(path: str, manifest: dict) -> list[str]:
@@ -1916,43 +1977,27 @@ def delete_where(spark: SparkSession, path: str, condition,
                  expected_parent: int | None = None,
                  store_changes_key: str | None = None,
                  mode: str = "cow", key: str | None = None) -> dict:
-    """Row-level DELETE as a FILE-REUSE commit (Delta DELETE's
-    copy-on-write shape — the upgrade path the module docstring
-    names): one pass finds the files that CONTAIN matching rows
-    (``input_file_name()`` + the predicate — with manifest stats this
-    is where a clustered table shines: most files never match), only
-    those are read back, filtered, and rewritten as the new version's
-    files; every untouched file is carried by REFERENCE in the
-    manifest.  Deleting 0.1% of a 100 TB table costs one scan plus a
-    rewrite of the touched slice, not a rewrite of the table.
+    """Row-level DELETE.  ``condition`` is a Column or SQL string; rows
+    where it is TRUE are deleted (NULL ⇒ kept, SQL DELETE semantics).
+    ``store_changes_key`` additionally persists the deleted rows as
+    this commit's change feed (the stored-CDC path — the writer knows
+    its delta exactly).
 
-    ``condition`` is a Column or SQL string; rows where it is TRUE
-    are deleted (NULL ⇒ kept, SQL DELETE semantics).  Partitioned
-    parents fall back to a plain filtered rewrite (directory columns
-    do not resolve across snapshot dirs).  ``store_changes_key``
-    additionally persists the deleted rows as this commit's change
-    feed (the stored-CDC path — the writer knows its delta exactly).
-    Parent manifest ``stats_cols`` are carried forward: new files get
-    fresh footer stats, reused files keep their parent entries.
-
-    ``mode='mor'`` (MERGE-ON-READ, Delta/Iceberg deletion vectors —
-    r10 VERDICT #2): instead of rewriting the touched files, the
-    matching rows' ``(file, key)`` pairs are written as a
-    delete-sized DV parquet sidecar (``dv/v=N/``) and EVERY parent
-    file is carried by reference; :func:`read_version` anti-joins the
-    vectors in.  This is the right shape for SCATTERED point deletes
-    (GDPR erasure, id-list takedowns) where the layout does not
-    localize the rows and copy-on-write would rewrite most of the
-    table to delete 0.01% of it: the commit costs one (prunable)
-    scan to find the matches plus a delete-sized write — zero data
-    rewritten.  Requires ``key`` (a UNIQUE row identity column — a
-    DV entry deletes every row of that key in that file);
-    ``read_changes`` still sees the deletes (the diff reads both
-    sides DV-applied, and ``store_changes_key`` stores them);
-    :func:`optimize_versioned` folds vectors into rewritten files;
-    vacuum reference-counts the sidecars.  Flat layouts only (the
-    file-tail binding — partitioned parents raise; use the default
-    copy-on-write there).
+    The commit layout (contract on :func:`_row_commit`):
+    ``mode='cow'`` (Delta DELETE's copy-on-write shape) rewrites only
+    the files that CONTAIN matching rows and carries every other file
+    by reference — with manifest stats on a clustered table most files
+    never match, so deleting 0.1% of a 100 TB table costs one scan
+    plus a rewrite of the touched slice; partitioned parents take a
+    filtered full rewrite.  ``mode='mor'`` (Delta/Iceberg deletion
+    vectors) writes the matching rows' ``(file, key)`` pairs as a
+    delete-sized vector sidecar and rewrites nothing — the right shape
+    for SCATTERED point deletes (GDPR erasure, id-list takedowns) that
+    copy-on-write would turn into a rewrite of most of the table.  It
+    requires ``key`` (a UNIQUE row identity column — a vector entry
+    deletes every row of that key in that file) and a flat layout;
+    ``read_changes`` still sees the deletes; :func:`optimize_versioned`
+    folds vectors into rewritten files; vacuum reference-counts them.
 
     Returns ``{"version", "n_deleted", "files_rewritten",
     "files_reused"}`` (MOR commits always report
@@ -1960,117 +2005,44 @@ def delete_where(spark: SparkSession, path: str, condition,
     if mode not in ("cow", "mor"):
         raise ValueError(f"delete_where: mode must be 'cow' or 'mor', "
                          f"got {mode!r}")
-    parent = latest_version(path)
-    if parent is None:
-        raise ValueError(f"versioned table {path!r} has no snapshots")
-    if expected_parent is None:
-        expected_parent = parent
-    m = _read_manifest(path, parent)
+    m = _head_manifest(path)
     cond = F.expr(condition) if isinstance(condition, str) else condition
     hit = F.coalesce(cond, F.lit(False))
-    base = read_version(spark, path, parent)
-    schema = T.StructType.fromJson(json.loads(m["schema_json"]))
-    stats_cols = m.get("stats_cols")
 
-    def changes_of(deleted: DataFrame) -> DataFrame | None:
-        if store_changes_key is None:
-            return None
-        key = store_changes_key
-        cols = [key] + sorted(set(deleted.columns) - {key})
+    def feed(_live: DataFrame, deleted: DataFrame) -> DataFrame:
+        cols = [store_changes_key] + sorted(set(deleted.columns)
+                                            - {store_changes_key})
         return deleted.select(F.lit("delete").alias("_change_type"),
                               *cols)
 
-    if mode == "mor":
-        if m.get("partition_by"):
-            raise ValueError(
-                "delete_where(mode='mor'): delete vectors require a "
-                "flat layout (file-tail binding) — partitioned tables "
-                "delete copy-on-write")
-        if key is None:
-            raise ValueError(
-                "delete_where(mode='mor') requires key= (a unique row "
-                "identity column the vectors bind to)")
-        if key not in base.columns:
-            raise ValueError(
-                f"delete_where: key {key!r} not in table columns")
-        # the detect frame is DV-applied, so already-deleted rows
-        # can't re-hit; ONE (stats/bloom-prunable) scan finds the
-        # matches and the delete-sized hit set is PERSISTED, so the
-        # count, the DV sidecar write, and the stored-feed write all
-        # read the cache instead of re-scanning the table (was 3 full
-        # scans per MOR delete; guide §5).
-        hits = _detect_frame(spark, path, m).where(hit).persist()
-        try:
-            n_deleted = hits.count()
-            dv_df = (hits.select(
-                F.regexp_extract(F.col("_f"), _DV_TAIL, 1)
-                .alias("_file"), key) if n_deleted else None)
-            changes = changes_of(hits.drop("_f")) if n_deleted \
-                else changes_of(_local_frame(spark, [], schema))
-            parent_files = _root_files(path, m)
-            version = write_versioned(
-                _local_frame(spark, [], schema), path,
-                expected_parent=expected_parent, _op="delete",
-                extra_meta={"delete_mode": "mor"},
-                stats_cols=stats_cols, changes_df=changes,
-                reuse_files=parent_files,
-                dv_df=dv_df, dv_key=key, _no_data=True)
-        finally:
-            hits.unpersist()
-        return {"version": version, "n_deleted": int(n_deleted),
-                "files_rewritten": 0,
-                "files_reused": len(parent_files)}
-    if m.get("partition_by"):
-        kept = base.where(~hit)
-        deleted = base.where(hit)
-        n_deleted = deleted.count()
-        version = write_versioned(
-            kept, path, expected_parent=expected_parent, _op="delete",
-            partition_by=m["partition_by"], stats_cols=stats_cols,
-            changes_df=changes_of(deleted))
-        return {"version": version, "n_deleted": int(n_deleted),
-                "files_rewritten": m["n_files"], "files_reused": 0}
-    parent_files = _root_files(path, m)
-    # ONE detection scan returns both the touched files AND the
-    # per-file match counts (bounded: one row per touched file) —
-    # the separate n_deleted count over the touched slice is free
-    # (guide §1.2: fold passes).
-    per_file = (_detect_frame(spark, path, m)
-                .where(hit).groupBy("_f")
-                .agg(F.count(F.lit(1)).alias("_n")).collect())
-    touched = sorted({_rel_uri(path, r["_f"]) for r in per_file})
-    n_deleted = sum(r["_n"] for r in per_file)
-    untouched = [f for f in parent_files if f not in set(touched)]
-    if touched:
-        # the raw slice re-read must be DV-applied or rows deleted by
-        # EARLIER merge-on-read commits resurrect into the rewrite
-        sub = apply_delete_vectors(
-            spark, path, m, spark.read.schema(schema).parquet(
-                *[os.path.join(path, f) for f in touched]))
-        replacement = sub.where(~hit)
-        changes = changes_of(sub.where(hit))
-    else:
-        replacement = _local_frame(spark, [], schema)
-        changes = changes_of(replacement)
-    version = write_versioned(
-        replacement, path, expected_parent=expected_parent,
-        _op="delete", stats_cols=stats_cols, changes_df=changes,
-        reuse_files=untouched, _no_data=not touched)
-    return {"version": version, "n_deleted": int(n_deleted),
-            "files_rewritten": len(touched),
-            "files_reused": len(untouched)}
+    r = _row_commit(
+        spark, path, m, mode, op="delete", name="delete_where", key=key,
+        touch=lambda live: live.where(hit).withColumn("_chg", F.lit(True)),
+        replace=lambda rows: rows.where(~hit),
+        feed=feed if store_changes_key is not None else None,
+        expected_parent=expected_parent)
+    return {"version": r["version"], "n_deleted": int(r["n"]),
+            "files_rewritten": r["files_rewritten"],
+            "files_reused": r["files_reused"]}
 
 
 def update_where(spark: SparkSession, path: str, condition,
                  assignments: dict, expected_parent: int | None = None,
                  store_changes_key: str | None = None,
                  mode: str = "cow", key: str | None = None) -> dict:
-    """Row-level UPDATE as a FILE-REUSE commit — :func:`delete_where`'s
-    natural sibling (Delta UPDATE's copy-on-write shape): one pass
-    finds the files CONTAINING matching rows, only those are read
-    back and rewritten with ``assignments`` applied to the matching
-    rows, and every untouched file is carried by REFERENCE.  Updating
-    0.1% of a 100 TB table costs one scan plus the touched slice.
+    """Row-level UPDATE — :func:`delete_where`'s sibling, with the same
+    layouts (contract on :func:`_row_commit`): ``mode='cow'`` rewrites
+    only the files CONTAINING matching rows with ``assignments``
+    applied and carries every other file by reference (partitioned
+    parents take a full rewrite); ``mode='mor'`` (Iceberg's MOR update
+    shape) kills the CHANGED rows' old copies with a delete-vector
+    sidecar and appends their updated versions, ``files_rewritten =
+    0`` — the right shape for scattered updates a clustered layout
+    can't localize.  MOR requires ``key`` (unique row identity;
+    assigning the key column itself is refused — that is a
+    delete+insert, use ``merge_versioned``) and a flat layout;
+    unchanged-content rows are neither vectored nor re-appended (the
+    fingerprint discipline).
 
     ``condition`` is a Column or SQL string; rows where it is TRUE
     are updated (NULL ⇒ untouched, SQL UPDATE semantics).
@@ -2085,21 +2057,6 @@ def update_where(spark: SparkSession, path: str, condition,
     actually changed (an assignment that rewrites a row with
     identical values emits nothing, matching the diff path's
     fingerprint semantics exactly, so stored ≡ diff holds).
-    Partitioned parents fall back to a full rewrite; parent
-    ``stats_cols`` carry forward.
-
-    ``mode='mor'`` (merge-on-read — Iceberg's MOR update shape, the
-    :func:`delete_where` deletion-vector machinery): instead of
-    rewriting the touched files, the CHANGED rows' old copies are
-    killed by a delete-sized ``(file, key)`` vector sidecar and their
-    updated versions append as the commit's own new files — every
-    parent file carries by reference, ``files_rewritten = 0``.  The
-    right shape for scattered updates a clustered layout can't
-    localize.  Requires ``key`` (unique row identity; assigning the
-    key column itself is refused — that is a delete+insert, use
-    ``merge_versioned``); flat layouts only; unchanged-content rows
-    are neither vectored nor re-appended (the fingerprint
-    discipline).
 
     Returns ``{"version", "n_updated", "n_changed",
     "files_rewritten", "files_reused"}`` — ``n_updated`` counts
@@ -2108,48 +2065,42 @@ def update_where(spark: SparkSession, path: str, condition,
     if mode not in ("cow", "mor"):
         raise ValueError(f"update_where: mode must be 'cow' or 'mor', "
                          f"got {mode!r}")
-    parent = latest_version(path)
-    if parent is None:
-        raise ValueError(f"versioned table {path!r} has no snapshots")
-    if expected_parent is None:
-        expected_parent = parent
-    m = _read_manifest(path, parent)
+    m = _head_manifest(path)
     cond = F.expr(condition) if isinstance(condition, str) else condition
     hit = F.coalesce(cond, F.lit(False))
-    base = read_version(spark, path, parent)
-    schema = T.StructType.fromJson(json.loads(m["schema_json"]))
-    unknown = sorted(set(assignments) - set(base.columns))
+    schema = _schema(m)
+    unknown = sorted(set(assignments) - set(schema.fieldNames()))
     if unknown:
         raise ValueError(
             f"update_where: unknown column(s) {unknown} — UPDATE "
             "cannot add columns (use merge_versioned(evolve_schema="
             "True))")
+    if mode == "mor" and key is not None and key in assignments:
+        raise ValueError(
+            f"update_where(mode='mor'): assigning the key column "
+            f"{key!r} is a delete+insert — use merge_versioned")
     sets = {c: (F.expr(e) if isinstance(e, str) else e)
-            for c, e in assignments.items()}
+            .cast(schema[c].dataType) for c, e in assignments.items()}
+    cols = sorted(schema.fieldNames())
 
-    def apply_to(df: DataFrame, when_hit) -> DataFrame:
+    def post_image(c: str) -> Column:
+        return sets[c].alias(c) if c in sets else F.col(c)
+
+    def apply_to(df: DataFrame) -> DataFrame:
         return df.select(*[
-            (F.when(when_hit, sets[c].cast(schema[c].dataType))
-             .otherwise(F.col(c)).alias(c) if c in sets else F.col(c))
-            for c in df.columns])
+            F.when(hit, sets[c]).otherwise(F.col(c)).alias(c)
+            if c in sets else F.col(c) for c in df.columns])
 
-    def changes_of(pre: DataFrame) -> DataFrame | None:
-        # pre holds ONLY hit rows; emit pairs where content changed
-        if store_changes_key is None:
-            return None
-        key = store_changes_key
-        cols = [key] + sorted(set(pre.columns) - {key})
-        post_exprs = {c: sets[c].cast(schema[c].dataType)
-                      for c in sets}
-        pre_s = F.struct(*[F.col(c).alias(c) for c in cols])
-        post_s = F.struct(*[
-            (post_exprs[c] if c in post_exprs else F.col(c)).alias(c)
-            for c in cols])
-        others = [c for c in cols if c != key]
-        fp = lambda s: F.md5(F.to_json(F.struct(  # noqa: E731
-            *[s[c] for c in others])))
-        staged = pre.select(pre_s.alias("_pre"), post_s.alias("_post")) \
-            .where(fp(F.col("_pre")) != fp(F.col("_post")))
+    def feed(_live: DataFrame, pre: DataFrame) -> DataFrame:
+        # pairs only where the non-key content changed
+        k = store_changes_key
+        out = [k] + [c for c in cols if c != k]
+        staged = pre.select(
+            F.struct(*[F.col(c) for c in out]).alias("_pre"),
+            F.struct(*[post_image(c) for c in out]).alias("_post"))
+        staged = staged.where(
+            _fp([F.col("_pre")[c] for c in out[1:]])
+            != _fp([F.col("_post")[c] for c in out[1:]]))
         ev = staged.select(F.explode(F.array(
             F.struct(F.lit("update_preimage").alias("_change_type"),
                      F.col("_pre").alias("p")),
@@ -2158,124 +2109,18 @@ def update_where(spark: SparkSession, path: str, condition,
         return ev.select(F.col("c._change_type").alias("_change_type"),
                          "c.p.*")
 
-    def n_changed_of(pre: DataFrame) -> int:
-        others = sorted(set(pre.columns))
-        old_fp = F.md5(F.to_json(F.struct(*[F.col(c) for c in others])))
-        new_fp = F.md5(F.to_json(F.struct(*[
-            (sets[c].cast(schema[c].dataType) if c in sets
-             else F.col(c)).alias(c) for c in others])))
-        return pre.where(old_fp != new_fp).count()
-
-    if mode == "mor":
-        if m.get("partition_by"):
-            raise ValueError(
-                "update_where(mode='mor'): delete vectors require a "
-                "flat layout — partitioned tables update copy-on-write")
-        if key is None:
-            raise ValueError(
-                "update_where(mode='mor') requires key= (a unique row "
-                "identity column the vectors bind to)")
-        if key in assignments:
-            raise ValueError(
-                f"update_where(mode='mor'): assigning the key column "
-                f"{key!r} is a delete+insert — use merge_versioned")
-        if key not in base.columns:
-            raise ValueError(
-                f"update_where: key {key!r} not in table columns")
-        det = _detect_frame(spark, path, m)
-        # only CHANGED rows move: old copy vectored out, new content
-        # appended as this commit's own files.  ONE detection scan:
-        # the update-sized hit set (with its changed-content flag) is
-        # PERSISTED so the two counts, the DV sidecar, the replacement
-        # write, and the stored feed all read the cache instead of
-        # re-scanning the table (was 5 full scans per MOR update;
-        # guide §5).
-        others = sorted(set(det.columns) - {"_f"})
-        old_fp = F.md5(F.to_json(F.struct(*[F.col(c)
-                                            for c in others])))
-        new_fp = F.md5(F.to_json(F.struct(*[
-            (sets[c].cast(schema[c].dataType) if c in sets
-             else F.col(c)).alias(c) for c in others])))
-        hits = det.where(hit).withColumn(
-            "_chg", old_fp != new_fp).persist()
-        try:
-            counts = hits.agg(
-                F.count(F.lit(1)).alias("_n"),
-                F.sum(F.col("_chg").cast("int")).alias("_c")).first()
-            n_updated = counts["_n"]
-            n_changed = counts["_c"] or 0
-            changed = hits.where(F.col("_chg"))
-            dv_df = (changed.select(
-                F.regexp_extract(F.col("_f"), _DV_TAIL, 1)
-                .alias("_file"), key) if n_changed else None)
-            replacement = (apply_to(changed.drop("_f", "_chg"),
-                                    F.lit(True))
-                           .select(*[f.name for f in schema.fields])
-                           if n_changed
-                           else _local_frame(spark, [], schema))
-            version = write_versioned(
-                replacement, path, expected_parent=expected_parent,
-                _op="update", extra_meta={"update_mode": "mor"},
-                stats_cols=m.get("stats_cols"),
-                changes_df=changes_of(hits.drop("_f", "_chg")),
-                reuse_files=_root_files(path, m),
-                dv_df=dv_df, dv_key=key,
-                _no_data=not n_changed)
-        finally:
-            hits.unpersist()
-        return {"version": version, "n_updated": int(n_updated),
-                "n_changed": int(n_changed), "files_rewritten": 0,
-                "files_reused": m["n_files"]}
-    if m.get("partition_by"):
-        pre = base.where(hit)
-        n_updated = pre.count()
-        n_changed = n_changed_of(pre)
-        version = write_versioned(
-            apply_to(base, hit), path,
-            expected_parent=expected_parent, _op="update",
-            partition_by=m["partition_by"],
-            stats_cols=m.get("stats_cols"), changes_df=changes_of(pre))
-        return {"version": version, "n_updated": int(n_updated),
-                "n_changed": int(n_changed),
-                "files_rewritten": m["n_files"], "files_reused": 0}
-    parent_files = _root_files(path, m)
-    # ONE detection scan returns the touched files AND the per-file
-    # match/changed counts (bounded: one row per touched file) — the
-    # two separate counts over the touched slice are free (guide
-    # §1.2: fold passes).
-    det = _detect_frame(spark, path, m)
-    _others = sorted(set(det.columns) - {"_f"})
-    _old_fp = F.md5(F.to_json(F.struct(*[F.col(c) for c in _others])))
-    _new_fp = F.md5(F.to_json(F.struct(*[
-        (sets[c].cast(schema[c].dataType) if c in sets
-         else F.col(c)).alias(c) for c in _others])))
-    per_file = (det.where(hit).groupBy("_f").agg(
-        F.count(F.lit(1)).alias("_n"),
-        F.sum((_old_fp != _new_fp).cast("int")).alias("_c"))
-        .collect())
-    touched = sorted({_rel_uri(path, r["_f"]) for r in per_file})
-    n_updated = sum(r["_n"] for r in per_file)
-    n_changed = sum(r["_c"] or 0 for r in per_file)
-    untouched = [f for f in parent_files if f not in set(touched)]
-    if touched:
-        sub = apply_delete_vectors(
-            spark, path, m, spark.read.schema(schema).parquet(
-                *[os.path.join(path, f) for f in touched]))
-        pre = sub.where(hit)
-        replacement = apply_to(sub, hit)
-        changes = changes_of(pre)
-    else:
-        replacement = _local_frame(spark, [], schema)
-        changes = changes_of(replacement)
-    version = write_versioned(
-        replacement, path, expected_parent=expected_parent,
-        _op="update", stats_cols=m.get("stats_cols"),
-        changes_df=changes, reuse_files=untouched,
-        _no_data=not touched)
-    return {"version": version, "n_updated": int(n_updated),
-            "n_changed": int(n_changed),
-            "files_rewritten": len(touched),
-            "files_reused": len(untouched)}
+    r = _row_commit(
+        spark, path, m, mode, op="update", name="update_where", key=key,
+        touch=lambda live: live.where(hit).withColumn(
+            "_chg", _fp([F.col(c) for c in cols])
+            != _fp([post_image(c) for c in cols])),
+        replace=apply_to, post=apply_to,
+        feed=feed if store_changes_key is not None else None,
+        expected_parent=expected_parent)
+    return {"version": r["version"], "n_updated": int(r["n"]),
+            "n_changed": int(r["n_changed"]),
+            "files_rewritten": r["files_rewritten"],
+            "files_reused": r["files_reused"]}
 
 
 def table_history(spark: SparkSession, path: str) -> DataFrame:
@@ -2388,7 +2233,7 @@ def restore_version(spark: SparkSession, path: str, version: int,
             f"restore_version: snapshot {version} of {path!r} was "
             f"vacuumed (delete-vector dirs {dv_gone} gone) — only "
             "retained versions can be restored")
-    schema = T.StructType.fromJson(json.loads(m_old["schema_json"]))
+    schema = _schema(m_old)
     empty = _local_frame(spark, [], schema)
     # Sidecar config and entries come FROM m_old (RESTORE restores
     # table properties too): inheriting the current HEAD's Bloom
@@ -2472,7 +2317,7 @@ def clone_versioned(spark: SparkSession, src: str, dst: str,
             f" of {m['n_files']} data files gone) — only retained "
             "versions can be cloned")
     refs = [_rebase(src, dst, f) for f in files]
-    schema = T.StructType.fromJson(json.loads(m["schema_json"]))
+    schema = _schema(m)
     empty = _local_frame(spark, [], schema)
     # Delete vectors are REWRITTEN into the clone's own tree (one
     # delete-sized copy, dv/v=1): the (file-tail, key) entries stay
@@ -2577,7 +2422,7 @@ def verify_versioned(path: str, strict: bool = False) -> list[str]:
                     f"{kind}: version {v} references vacuumed "
                     f"delete-vector dir dv/v={dvv}")
         if m.get("dv_dirs"):
-            schema = T.StructType.fromJson(json.loads(m["schema_json"]))
+            schema = _schema(m)
             if m.get("dv_key") not in {f.name for f in schema.fields}:
                 issues.append(
                     f"error: version {v} dv_key {m.get('dv_key')!r} "
@@ -2797,8 +2642,8 @@ def _net_stored_changes(ev: DataFrame, key: str) -> DataFrame:
     def mk(ct: str, p):
         return F.struct(F.lit(ct).alias("_change_type"), p.alias("p"))
 
-    fpo = F.md5(F.to_json(F.col("_old")))
-    fpn = F.md5(F.to_json(F.col("_new")))
+    fpo = _fp([F.col("_old")[c].alias(c) for c in others])
+    fpn = _fp([F.col("_new")[c].alias(c) for c in others])
     change = F.when(
         F.col("_old").isNull() & F.col("_new").isNull(), F.array()
     ).when(
@@ -2902,8 +2747,8 @@ def read_changes(spark: SparkSession, path: str, key: str,
             for v, f in zip(vers[1:], frames[1:]):
                 ev = ev.unionByName(f.withColumn("_v", F.lit(v)))
             return _net_stored_changes(ev, key)
-    old = read_version(spark, path, from_version).alias("o")
-    new = read_version(spark, path, to_version).alias("n")
+    old = read_version(spark, path, from_version)
+    new = read_version(spark, path, to_version)
     if key not in old.columns or key not in new.columns:
         raise ValueError(f"read_changes: key {key!r} missing from a "
                          f"snapshot schema")
@@ -2917,41 +2762,7 @@ def read_changes(spark: SparkSession, path: str, key: str,
                     f"snapshot {ver} of {path!r} (e.g. "
                     f"{dup[0][key]!r} × {dup[0]['count']}) — the "
                     "change feed requires a keyed table")
-    common = sorted(set(old.columns) & set(new.columns) - {key})
-    all_cols = [key] + sorted((set(old.columns) | set(new.columns))
-                              - {key})
-
-    def fp(side: str, cols: list[str]):
-        return F.md5(F.to_json(F.struct(
-            *[F.col(f"{side}.{c}") for c in cols])))
-
-    def payload(side: str, has: set):
-        fields = [(F.col(f"{side}.{c}") if c in has else F.lit(None))
-                  .alias(c) for c in all_cols]
-        return F.struct(*fields)
-
-    o_has, n_has = set(old.columns), set(new.columns)
-    joined = old.join(new, F.col(f"o.{key}") == F.col(f"n.{key}"),
-                      "full_outer")
-    change = F.when(
-        F.col(f"o.{key}").isNull(),
-        F.array(F.struct(F.lit("insert").alias("_change_type"),
-                         payload("n", n_has).alias("p")))
-    ).when(
-        F.col(f"n.{key}").isNull(),
-        F.array(F.struct(F.lit("delete").alias("_change_type"),
-                         payload("o", o_has).alias("p")))
-    ).when(
-        fp("o", common) != fp("n", common),
-        F.array(
-            F.struct(F.lit("update_preimage").alias("_change_type"),
-                     payload("o", o_has).alias("p")),
-            F.struct(F.lit("update_postimage").alias("_change_type"),
-                     payload("n", n_has).alias("p")))
-    ).otherwise(F.array())
-    return (joined.select(F.explode(change).alias("c"))
-            .select(F.col("c._change_type").alias("_change_type"),
-                    "c.p.*"))
+    return _key_diff(old, new, key, "full_outer")
 
 
 def read_changes_per_commit(spark: SparkSession, path: str, key: str,
@@ -3001,13 +2812,17 @@ def read_changes_per_commit(spark: SparkSession, path: str, key: str,
     # one scan over every feed dir; the version comes from the
     # path's own `changes/v=N/` segment (input_file_name is legal
     # here — single-source plan; the segment never needs
-    # percent-decoding: digits and '=' pass through URI encoding)
+    # percent-decoding: digits and '=' pass through URI encoding).  A
+    # path without the segment fails naming the path, not as an ANSI
+    # cast error on the empty match.
     ev = spark.read.schema(schema).parquet(
         *[_changes_dir(path, v) for v in vers])
-    return ev.withColumn(
-        "_commit_version",
-        F.regexp_extract(F.input_file_name(),
-                         r"/changes/v=(\d+)/", 1).cast("long"))
+    seg = F.regexp_extract(F.input_file_name(), r"/changes/v=(\d+)/", 1)
+    return ev.withColumn("_commit_version", F.when(
+        seg != "", seg.cast("long")).otherwise(F.raise_error(F.concat(
+            F.lit("read_changes_per_commit: change file "),
+            F.input_file_name(),
+            F.lit(" is not under a changes/v=N/ directory")))))
 
 
 def read_cursor(cursor_path: str) -> int | None:
@@ -3230,16 +3045,13 @@ def optimize_versioned(spark: SparkSession, path: str,
         if not small:
             return head                   # nothing to compact: no-op
         big = [f for f in files if sizes[f] >= min_file_bytes]
-        schema = T.StructType.fromJson(json.loads(m["schema_json"]))
         # the compacted slice is DV-applied (deleted rows FOLD OUT of
         # the rewrite — compacting them back in would resurrect
         # them), and the live vector set is re-filtered to entries
         # binding to still-carried files and rewritten as ONE fresh
         # sidecar, so dv history compacts along with the data.
-        packed = (apply_delete_vectors(
-            spark, path, m, spark.read.schema(schema).parquet(
-                *[os.path.join(path, f) for f in small]))
-            .repartition(min(n_files, len(small))))
+        packed = _read_files(spark, path, m, small).repartition(
+            min(n_files, len(small)))
         dv_df = None
         dv_key = None
         dv_dirs_override = None

@@ -24,7 +24,7 @@ N = 20_000
 JOB_PINS = {
     ("merge", "full"): 10, ("merge", "cow"): 11, ("merge", "mor"): 12,
     ("delete", "full"): 4, ("delete", "cow"): 4, ("delete", "mor"): 5,
-    ("update", "full"): 6, ("update", "cow"): 4, ("update", "mor"): 6,
+    ("update", "full"): 4, ("update", "cow"): 4, ("update", "mor"): 6,
 }
 
 MERGE_KEYS = list(range(0, 2000, 50))      # first file only
