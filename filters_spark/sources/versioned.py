@@ -1755,8 +1755,8 @@ def _row_commit(spark: SparkSession, path: str, m: dict, mode: str, *,
     parent_files = _root_files(path, m)
     reuse = dv_df = None
     no_data = False
-    # live: the live rows the commit reads (COW narrows it to the
-    # touched slice below); hits: touch() of them, with ``_f``
+    # live: the live rows the commit reads (under COW the touched
+    # slice, set below); hits: touch() of them, carrying ``_f``
     # outside the full layout
     if mode == "full":
         live = read_version(spark, path, m["version"])
@@ -1765,7 +1765,7 @@ def _row_commit(spark: SparkSession, path: str, m: dict, mode: str, *,
         rewritten = m["n_files"]
     else:
         det = _detect_frame(spark, path, m)
-        live = det.drop("_f")
+        live = det.drop("_f") if mode == "mor" else None
         hits = touch(det)
         if mode == "mor":
             hits = hits.persist()
@@ -1781,7 +1781,7 @@ def _row_commit(spark: SparkSession, path: str, m: dict, mode: str, *,
             touched = sorted({_rel_uri(path, r["_f"]) for r in per_file})
             reuse = [f for f in parent_files if f not in set(touched)]
             live = _read_files(spark, path, m, touched)
-            hits = touch(live)
+            hits = touch(live) if feed is not None else None
             rows = replace(live)
             rewritten = len(touched)
             no_data = not touched and inserts is None
@@ -1906,7 +1906,10 @@ def merge_versioned(spark: SparkSession, path: str, updates: DataFrame,
     def widen(df: DataFrame) -> DataFrame:
         """``df`` (and its ``_f``) under the merged column list: absent
         columns NULL when the schema evolves, else strict."""
-        return df.select(*[c for c in ["_f"] if c in df.columns], *[
+        keep = [c for c in ["_f"] if c in df.columns]
+        if df.columns == keep + all_cols:
+            return df
+        return df.select(*keep, *[
             F.col(c) if c in df.columns or not evolve_schema
             else F.lit(None).cast(types[c]).alias(c) for c in all_cols])
 
