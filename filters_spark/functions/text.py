@@ -1873,9 +1873,11 @@ def wordpiece_train(df: DataFrame, text_col: str = "text",
     # persist the UNPACKED fold too (r12): wordpiece_vocab and
     # wordpiece_token_counts fold the same corpus again otherwise —
     # the three calls of a train→vocab→apply pipeline share one
-    # cached (word, freq) evaluation (same plan → same semanticHash)
+    # cached (word, freq) evaluation (same plan → same semanticHash).
+    # Its own scope: the per-step states below would evict it from
+    # the bounded wp_words LRU before the trainer returns.
     if max_vocab is None:
-        wordfreq = scoped_persist(wordfreq, "wp_words")
+        wordfreq = scoped_persist(wordfreq, "wp_fold")
     state = scoped_persist(
         wordfreq.select(_wp_pack(F.col("w")).alias("sym"), "f"),
         "wp_words")
@@ -1935,12 +1937,12 @@ def wordpiece_vocab(df: DataFrame, merges: list[tuple],
     # ONE bounded action for both roles (r12, guide §1.2): the two
     # role alphabets used to be two separate collects, each
     # re-running the corpus fold (Catalyst shares no subtrees across
-    # actions) — persist the fold once (the bounded wp_words scope
-    # the trainer already uses) and union the two role projections
+    # actions) — persist the fold once (the wp_fold scope the
+    # trainer already fills) and union the two role projections
     # into a single distinct collect.
     from ._cache import scoped_persist
 
-    wf = scoped_persist(_wp_wordfreq(df, text_col, sep), "wp_words")
+    wf = scoped_persist(_wp_wordfreq(df, text_col, sep), "wp_fold")
     ich = wf.select(F.col("w").substr(1, 1).alias("p"))
     cch = (wf.select(F.explode(
         F.split(F.col("w").substr(F.lit(2), F.length("w")), ""))
@@ -2013,7 +2015,7 @@ def wordpiece_token_counts(df: DataFrame, vocab: list[str],
     vocabulary-sized rollup."""
     from ._cache import scoped_persist
 
-    wf = scoped_persist(_wp_wordfreq(df, text_col, sep), "wp_words")
+    wf = scoped_persist(_wp_wordfreq(df, text_col, sep), "wp_fold")
     pieces = wordpiece_segment(F.col("w"), vocab, unk=unk)
     return (wf.select(F.explode(pieces).alias("piece"), "f")
             .groupBy("piece").agg(F.sum("f").cast("long").alias("n")))

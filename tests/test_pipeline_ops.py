@@ -912,6 +912,30 @@ class TestWordpiece:
                text.wordpiece_token_counts(d, vocab).collect()}
         assert got == {"aa": 3}
 
+    def test_vocab_after_train_runs_no_fold_job(self, spark):
+        """The trainer's (word, freq) fold survives its own merge
+        steps in the cache, so the vocabulary built right after
+        training runs only the jobs of a warm repeat."""
+        from conftest import spark_jobs
+        from filters_spark.functions import text
+        from filters_spark.functions._cache import release_caches
+
+        words = ("hug hugs pug pun bun hugging bunny punning pugs "
+                 "hunger hung lung lunge plunge").split()
+        d = spark.createDataFrame(
+            [(" ".join(words[(i * 3 + j) % len(words)]
+                       for j in range(7)),) for i in range(40)],
+            "text string")
+        release_caches()
+        m = text.wordpiece_train(d, n_merges=10)
+        assert len(m) == 10
+        vocab, jobs = spark_jobs(spark,
+                                 lambda: text.wordpiece_vocab(d, m))
+        again, warm = spark_jobs(spark,
+                                 lambda: text.wordpiece_vocab(d, m))
+        assert vocab == again
+        assert jobs == warm, (jobs, warm)
+
     def test_empty_corpus(self, spark):
         from filters_spark.functions import text
         d = spark.createDataFrame([], "text string")
