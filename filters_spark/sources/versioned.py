@@ -32,10 +32,12 @@ observe):
    sees the old pointer or the new one — NEVER a half-written
    snapshot, because data and manifest are complete before the flip.
 
-A crashed writer leaves an orphan claim/dir that no pointer
-references; readers are unaffected and :func:`vacuum_versioned`
-cleans it.  Old snapshots stay readable (time travel) until
-retention removes them.
+A commit is COMMITTED once the flip lands: the committed versions
+are the head's parent chain (:func:`versions`).  A commit that fails
+before its flip removes its own manifest and files; a writer killed
+before it leaves an orphan claim/dir/manifest off that chain, which
+readers ignore and :func:`vacuum_versioned` cleans.  Old snapshots
+stay readable (time travel) until retention removes them.
 
 Scale notes: the manifest layer is O(1) metadata per commit — data
 files are written once and never rewritten by later snapshots of
@@ -122,9 +124,9 @@ def latest_version(path: str) -> int | None:
         return None
 
 
-def versions(path: str) -> list[int]:
-    """All COMMITTED versions, ascending (claims without a manifest —
-    crashed writers — are excluded)."""
+def _manifested(path: str) -> list[int]:
+    """Every version with a manifest file, ascending — committed or
+    not.  Version numbering skips all of them."""
     try:
         names = os.listdir(_manifest_dir(path))
     except FileNotFoundError:
@@ -139,6 +141,43 @@ def versions(path: str) -> list[int]:
     return sorted(out)
 
 
+def _load_manifest(path: str, version: int) -> dict | None:
+    try:
+        with open(os.path.join(_manifest_dir(path),
+                               f"{version}.json")) as fh:
+            manifest = json.load(fh)
+    except FileNotFoundError:
+        return None
+    # private back-pointer so prune_files can resolve the stats
+    # sidecar lazily from a bare manifest dict (never serialized)
+    manifest["_manifest_dir"] = _manifest_dir(path)
+    return manifest
+
+
+def _chain(path: str) -> list[dict]:
+    """The COMMITTED manifests, oldest first: the head's parent chain.
+    A manifest off the chain belongs to a commit whose head flip never
+    happened (a writer killed between manifest write and flip, or one
+    that lost the head race) — it holds no committed state."""
+    out = []
+    v = latest_version(path)
+    while v is not None:
+        m = _load_manifest(path, v)
+        if m is None:
+            break
+        out.append(m)
+        p = m.get("parent")
+        v = p if p is not None and p < v else None
+    return out[::-1]
+
+
+def versions(path: str) -> list[int]:
+    """All COMMITTED versions, ascending — the head's parent chain
+    (claims and manifests of writers that never flipped the head are
+    excluded)."""
+    return [m["version"] for m in _chain(path)]
+
+
 def version_as_of(path: str, ts: float) -> int:
     """TIMESTAMP AS OF resolution (Delta's time-travel-by-timestamp
     contract): the LATEST committed version whose ``committed_at`` is
@@ -146,11 +185,9 @@ def version_as_of(path: str, ts: float) -> int:
     manifests) sort as timestamp 0 — always eligible.  Raises when
     the table has no version that old."""
     best = None
-    for v in versions(path):
-        m = _read_manifest(path, v)
-        at = m.get("committed_at", 0.0)
-        if at <= ts and (best is None or v > best):
-            best = v
+    for m in _chain(path):
+        if m.get("committed_at", 0.0) <= ts:
+            best = m["version"]
     if best is None:
         raise ValueError(
             f"versioned table {path!r} has no version committed at or "
@@ -159,17 +196,11 @@ def version_as_of(path: str, ts: float) -> int:
 
 
 def _read_manifest(path: str, version: int) -> dict:
-    mf = os.path.join(_manifest_dir(path), f"{version}.json")
-    try:
-        with open(mf) as fh:
-            manifest = json.load(fh)
-    except FileNotFoundError:
+    manifest = _load_manifest(path, version)
+    if manifest is None:
         raise ValueError(
             f"versioned table {path!r} has no snapshot {version} "
             f"(committed versions: {versions(path)})")
-    # private back-pointer so prune_files can resolve the stats
-    # sidecar lazily from a bare manifest dict (never serialized)
-    manifest["_manifest_dir"] = _manifest_dir(path)
     return manifest
 
 
@@ -1118,7 +1149,7 @@ def _detect_frame(spark: SparkSession, path: str,
                        _root_files(path, manifest), "_f")
 
 
-def write_versioned(df: DataFrame, path: str,
+def write_versioned(df: DataFrame | None, path: str,
                     expected_parent: int | None = None,
                     _op: str = "write",
                     extra_meta: dict | None = None,
@@ -1134,9 +1165,12 @@ def write_versioned(df: DataFrame, path: str,
                     dv_dirs: list[int] | None = None,
                     ndv_cols: list[str] | None = None,
                     hdr_cols: list[str] | None = None,
-                    _no_data: bool = False,
                     _carry_from: tuple[str, dict] | None = None) -> int:
     """Commit ``df`` as the next snapshot; returns the new version.
+    ``df=None`` commits no new rows (a data-less commit: a MOR delete,
+    a no-change update, restore, clone) under the carry source's
+    schema — no write job and no junk empty part file, which would
+    join ``data_files`` and be opened by every later read.
 
     ``expected_parent`` is optimistic concurrency control: pass the
     version you READ when deriving ``df`` and the commit fails with
@@ -1217,10 +1251,12 @@ def write_versioned(df: DataFrame, path: str,
     them) while full rewrites reset (``df`` comes from a DV-applied
     read, so the new files hold only live rows).
 
-    A commit that fails before its manifest is written leaves nothing
-    behind: after its side writes join, it removes the ``snap/``,
-    ``changes/`` and ``dv/v=N`` directories and the ``N.<kind>.json``
-    sidecars it created, then re-raises."""
+    A commit that fails before its head flip leaves nothing behind:
+    after its side writes join, it removes its ``N.json`` manifest, the
+    ``N.<kind>.json`` sidecars and the ``snap/``, ``changes/`` and
+    ``dv/v=N`` directories it created, then re-raises.  A writer killed
+    before the flip leaves a manifest off the head's parent chain,
+    which readers ignore (:func:`versions`)."""
     if reuse_files and partition_by:
         raise ValueError(
             "write_versioned: file-reuse commits require a flat "
@@ -1238,6 +1274,10 @@ def write_versioned(df: DataFrame, path: str,
         except ValueError:
             pass
     src_root, src_m = _carry_from or (path, pm)
+    if df is None and "schema_json" not in src_m:
+        raise ValueError(
+            f"write_versioned: df=None needs a base snapshot of {path!r}")
+    schema = _schema(src_m) if df is None else df.schema
     asked = {"stats_cols": stats_cols, "bloom_cols": bloom_cols,
              "bloom_bits": bloom_bits, "bloom_hashes": bloom_hashes,
              "ndv_cols": ndv_cols, "hdr_cols": hdr_cols}
@@ -1246,16 +1286,16 @@ def write_versioned(df: DataFrame, path: str,
         cfg = _sidecar_config(kind, asked, src_m)
         if cfg is not None:
             if sc.check is not None:
-                sc.check(cfg[f"{kind}_cols"], partition_by, df.schema)
+                sc.check(cfg[f"{kind}_cols"], partition_by, schema)
             armed[kind] = cfg
     # next version clears BOTH the head and any manifested-but-never-
     # flipped snapshot (a writer that crashed between manifest and
     # pointer flip must not block its number forever)
-    version = max(versions(path) + [parent or 0]) + 1
+    version = max(_manifested(path) + [parent or 0]) + 1
     claim = _claim(path, version)
     _pool: ThreadPoolExecutor | None = None
     _cfut = _dfut = None
-    manifested = False
+    flipped = False
     try:
         snap = _snap_dir(path, version)
         # The commit's SIDE WRITES (stored change feed, delete-vector
@@ -1288,16 +1328,7 @@ def write_versioned(df: DataFrame, path: str,
                 _dfut = _pool.submit(
                     lambda: dv_df.write.mode("overwrite").parquet(
                         _dv_dir(path, version)))
-        if _no_data:
-            # The caller declares ``df`` statically EMPTY (a MOR
-            # delete / no-change update whose rewrite set has no
-            # rows; df supplies only the schema).  Skip the parquet
-            # write job — and, more importantly, the junk empty part
-            # file it would leave in the snapshot: that file joins
-            # ``data_files`` and every later read of the table opens
-            # it forever (one extra scan split per MOR commit at
-            # 100 TB).  Readers handle zero-file snapshots: explicit
-            # manifest schema, n_files == 0 matches the empty dir.
+        if df is None:
             os.makedirs(snap, exist_ok=True)
             new_files: list[str] = []
         else:
@@ -1309,8 +1340,8 @@ def write_versioned(df: DataFrame, path: str,
         # new files' sidecar entries (a small commit builds them on the
         # driver while the side writes' jobs still run)
         built = _new_file_sidecars(snap, new_files, armed,
-                                   tuple(partition_by or ()), df.schema,
-                                   df.sparkSession)
+                                   tuple(partition_by or ()), schema,
+                                   None if df is None else df.sparkSession)
         if reuse_files is not None:
             data_files = sorted(
                 [f"snap/v={version}/{f}" for f in new_files]
@@ -1325,7 +1356,7 @@ def write_versioned(df: DataFrame, path: str,
             "version": version,
             "parent": parent,
             "op": _op,
-            "schema_json": df.schema.json(),
+            "schema_json": schema.json(),
             "n_files": n_files,
             # wall-clock commit stamp (manifest-write time — the flip
             # follows within the same commit call): arms timestamp
@@ -1385,7 +1416,6 @@ def write_versioned(df: DataFrame, path: str,
             manifest["dv_key"] = dv_key
         _write_json(os.path.join(_manifest_dir(path), f"{version}.json"),
                     manifest)
-        manifested = True
         # The head TRANSITION is the atomic commit point, and it needs
         # its own mutual exclusion: the per-version claim above only
         # serializes writers that computed the SAME version number —
@@ -1394,8 +1424,8 @@ def write_versioned(df: DataFrame, path: str,
         # lets both pass the re-check before either flips (r8 race
         # test): both report success, one lineage silently shadowed.
         # O_EXCL on head.{parent}.claim makes exactly one writer per
-        # parent state reach the flip; the loser's snapshot stays an
-        # unreferenced orphan (vacuum_versioned reclaims it).
+        # parent state reach the flip; the loser reclaims its
+        # snapshot below.
         hclaim = os.path.join(_manifest_dir(path),
                               f"head.{parent or 0}.claim")
         try:
@@ -1418,6 +1448,7 @@ def write_versioned(df: DataFrame, path: str,
                     f"table {path!r} moved during commit (head {head}); "
                     f"snapshot {version} written but not made latest")
             _flip_latest(path, version)
+            flipped = True
         finally:
             try:
                 os.remove(hclaim)
@@ -1434,21 +1465,22 @@ def write_versioned(df: DataFrame, path: str,
                     e.add_note(f"write_versioned: side write of "
                                f"version {version} also failed: "
                                f"{type(err).__name__}: {err}")
-        if not manifested:
-            # nothing references this version's files yet: reclaim
-            # them now (the side writes have joined above) instead of
-            # leaving orphans for vacuum or the retry to overwrite
+        if not flipped:
+            # the head never reached this version, so nothing
+            # references its manifest or files: reclaim them now (the
+            # side writes have joined above), manifest first, instead
+            # of leaving orphans for vacuum or the retry to overwrite
             import shutil
 
+            for name in [f"{version}.json", *(f"{version}.{kind}.json"
+                                              for kind in _SIDECARS)]:
+                try:
+                    os.remove(os.path.join(_manifest_dir(path), name))
+                except FileNotFoundError:
+                    pass
             for d in (_snap_dir(path, version),
                       _changes_dir(path, version), _dv_dir(path, version)):
                 shutil.rmtree(d, ignore_errors=True)
-            for kind in _SIDECARS:
-                try:
-                    os.remove(os.path.join(_manifest_dir(path),
-                                           f"{version}.{kind}.json"))
-                except FileNotFoundError:
-                    pass
         raise
     finally:
         if _pool is not None:
@@ -1515,6 +1547,32 @@ def prune_files(manifest: dict, where) -> list | None:
     return keep if any_stats else None
 
 
+def _retained_files(path: str, manifest: dict) -> list[str]:
+    """A snapshot's data files, TABLE-ROOT-relative — raising "was
+    vacuumed" when retention removed any of them (a directory-read
+    snapshot's dir gone, or left PARTIAL because newer file-reuse
+    versions keep some of its files alive) or a delete-vector dir it
+    references.  Reads, restores and clones refuse such a snapshot
+    instead of returning a subset of it."""
+    files = _root_files(path, manifest)
+    n = manifest["n_files"]
+    gone = sum(1 for f in files
+               if not os.path.exists(os.path.join(path, f))) \
+        + n - len(files)
+    gone_dir = manifest.get("data_files") is None and not os.path.isdir(
+        _snap_dir(path, manifest["version"]))
+    dv_gone = [v for v in (manifest.get("dv_dirs") or [])
+               if not os.path.isdir(_dv_dir(path, v))]
+    if gone or gone_dir or dv_gone:
+        what = f"{gone} of {n} data files" if gone or gone_dir else \
+            f"delete-vector dirs {dv_gone}"
+        raise ValueError(
+            f"snapshot {manifest['version']} of {path!r} was vacuumed "
+            f"({what} gone) — only retained versions can be read, "
+            "restored or cloned")
+    return files
+
+
 def read_version(spark: SparkSession, path: str,
                  version: int | None = None,
                  where: tuple | None = None,
@@ -1546,38 +1604,18 @@ def read_version(spark: SparkSession, path: str,
     manifest = _read_manifest(path, version)
     schema = _schema(manifest)
     snap = _snap_dir(path, version)
-    data_files = manifest.get("data_files")
-    if data_files is not None:
+    files = _retained_files(path, manifest)
+    if manifest.get("data_files") is not None:
         # file-reuse commit: the manifest's explicit TABLE-ROOT-
         # relative list IS the snapshot (files may live in ancestor
         # snapshot dirs).  No basePath: these are flat layouts, and a
         # basePath above snap/ would misread v=N as a partition col.
-        missing = sum(1 for f in data_files
-                      if not os.path.exists(os.path.join(path, f)))
-        if missing:
-            raise ValueError(
-                f"snapshot {version} of {path!r} was vacuumed "
-                f"({missing} of {len(data_files)} referenced files "
-                "gone)")
-        files = data_files
         if where is not None:
             kept = prune_files(manifest, where)
             if kept is not None:
                 files = kept
             files = bloom_prune_files(manifest, where, files)
         return _read_files(spark, path, manifest, files)
-    if not os.path.isdir(snap):
-        raise ValueError(
-            f"snapshot {version} of {path!r} was vacuumed — "
-            f"retained versions: "
-            f"{[v for v in versions(path) if os.path.isdir(_snap_dir(path, v))]}")
-    if len(_data_files(snap)) != manifest["n_files"]:
-        # reference-counting vacuum may keep a dropped version's dir
-        # alive for files later snapshots reuse — a PARTIAL dir must
-        # fail loudly, not silently return a subset of the snapshot
-        raise ValueError(
-            f"snapshot {version} of {path!r} was vacuumed (directory "
-            "retains only files referenced by newer versions)")
     if where is not None:
         files = prune_files(manifest, where)
         if files is None and load_file_blooms(manifest):
@@ -1800,19 +1838,16 @@ def _row_commit(spark: SparkSession, path: str, m: dict, mode: str, *,
                 rows = new if rows is None else rows.unionByName(new)
             no_data = rows is None or (not n_chg and inserts is None)
             extra_meta = {**(extra_meta or {}), f"{op}_mode": "mor"}
-        if no_data:
-            rows = _local_frame(spark, [], _schema(m))
         changes = None if feed is None else feed(
             live, hits.drop("_f", "_chg") if hits is not None else None)
         version = write_versioned(
-            rows, path,
+            None if no_data else rows, path,
             expected_parent=m["version"] if expected_parent is None
             else expected_parent,
             _op=op, extra_meta=extra_meta, changes_df=changes,
             stats_cols=m.get("stats_cols"),
             partition_by=m.get("partition_by"), reuse_files=reuse,
-            dv_df=dv_df, dv_key=key if mode == "mor" else None,
-            _no_data=no_data)
+            dv_df=dv_df, dv_key=key if mode == "mor" else None)
     finally:
         if mode == "mor":
             hits.unpersist()
@@ -2138,10 +2173,9 @@ def table_history(spark: SparkSession, path: str) -> DataFrame:
     operators, excluded from any hash-gated output by the usual
     rule."""
     rows = []
-    for v in versions(path):
-        m = _read_manifest(path, v)
+    for m in _chain(path):
         rows.append((
-            int(v), m.get("parent"), str(m.get("op", "write")),
+            int(m["version"]), m.get("parent"), str(m.get("op", "write")),
             int(m["n_files"]), bool(m.get("changes")),
             m.get("data_files") is not None,
             m.get("restored_from"),
@@ -2153,6 +2187,49 @@ def table_history(spark: SparkSession, path: str) -> DataFrame:
               "restored_from long, stream_query string, "
               "stream_batch long, committed_at double")
     return _local_frame(spark, rows, schema)
+
+
+def _carry(spark: SparkSession, src: str, m: dict, dst: str, *,
+           op: str, meta: dict, expected_parent: int | None = None,
+           changes: DataFrame | None = None) -> dict:
+    """Commit snapshot ``m`` of table root ``src`` as the next snapshot
+    of ``dst`` — restore (``dst`` is ``src``) and clone (a new table)
+    in one place.  ``m``'s schema, stats config and every sidecar kind
+    with its config carry forward from ``m`` itself, not from ``dst``'s
+    head: RESTORE restores table properties too (probing ``m``'s Bloom
+    bitmaps with the head's sizing would give silent false negatives).
+
+    A FLAT ``m`` is carried by reference in a data-less commit, its
+    files re-expressed ``dst``-root-relative (a clone's ``../src/...``).
+    Its delete vectors go with them: within one root the commit lists
+    ``m``'s live DV dirs (``[]`` when it had none — the head's later
+    vectors must not apply to the restored state); into another root
+    they are rewritten as the commit's own ``dv/v=N`` (one
+    delete-sized copy; the file-tail binding is root-invariant), so a
+    clone does not depend on the source's DV retention or collide with
+    its own DV numbering.  A PARTITIONED ``m`` cannot be carried by
+    reference (directory columns do not resolve across snapshot dirs)
+    and is rewritten in full with its ``partition_by``.  A vacuumed
+    ``m`` raises.  Returns ``{"version", "files_reused",
+    "files_rewritten"}``."""
+    files = _retained_files(src, m)
+    common = dict(expected_parent=expected_parent, _op=op,
+                  extra_meta=meta, stats_cols=m.get("stats_cols"),
+                  changes_df=changes, _carry_from=(src, m))
+    if m.get("partition_by"):
+        v = write_versioned(read_version(spark, src, m["version"]), dst,
+                            partition_by=m["partition_by"], **common)
+        return {"version": v, "files_reused": 0,
+                "files_rewritten": m["n_files"]}
+    same = os.path.abspath(src) == os.path.abspath(dst)
+    dvs = m.get("dv_dirs") or []
+    v = write_versioned(
+        None, dst, reuse_files=[_rebase(src, dst, f) for f in files],
+        dv_dirs=dvs if same else [], dv_key=m.get("dv_key"),
+        dv_df=_read_dv(spark, src, m) if dvs and not same else None,
+        **common)
+    return {"version": v, "files_reused": len(files),
+            "files_rewritten": 0}
 
 
 def restore_version(spark: SparkSession, path: str, version: int,
@@ -2188,8 +2265,6 @@ def restore_version(spark: SparkSession, path: str, version: int,
     head = latest_version(path)
     if head is None:
         raise ValueError(f"versioned table {path!r} has no snapshots")
-    if expected_parent is None:
-        expected_parent = head
     if version == head:
         raise ValueError(
             f"restore_version: {version} is already the head of "
@@ -2206,56 +2281,13 @@ def restore_version(spark: SparkSession, path: str, version: int,
              .when(t == "delete", "insert")
              .when(t == "update_preimage", "update_postimage")
              .otherwise("update_preimage"))
-    meta = {"restored_from": version}
-    if m_old.get("partition_by"):
-        df = read_version(spark, path, version)   # raises if vacuumed
-        new_v = write_versioned(
-            df, path, expected_parent=expected_parent, _op="restore",
-            extra_meta=meta, stats_cols=m_old.get("stats_cols"),
-            partition_by=m_old["partition_by"], changes_df=changes,
-            _carry_from=(path, m_old))
-        return {"version": new_v, "restored_from": version,
-                "files_reused": 0, "files_rewritten": m_old["n_files"]}
-    files = _root_files(path, m_old)
-    missing = [f for f in files
-               if not os.path.exists(os.path.join(path, f))]
-    # len(files) != n_files catches a vacuumed DIRECTORY-read
-    # manifest: its snap dir lists empty (or partial, when newer
-    # reuse-commits kept some files alive), which would otherwise
-    # silently "restore" a truncated table
-    if missing or len(files) != m_old["n_files"]:
-        raise ValueError(
-            f"restore_version: snapshot {version} of {path!r} was "
-            f"vacuumed ({len(missing) + m_old['n_files'] - len(files)}"
-            f" of {m_old['n_files']} data files gone) — only retained "
-            "versions can be restored")
-    dv_gone = [v for v in (m_old.get("dv_dirs") or [])
-               if not os.path.isdir(_dv_dir(path, v))]
-    if dv_gone:
-        raise ValueError(
-            f"restore_version: snapshot {version} of {path!r} was "
-            f"vacuumed (delete-vector dirs {dv_gone} gone) — only "
-            "retained versions can be restored")
-    schema = _schema(m_old)
-    empty = _local_frame(spark, [], schema)
-    # Sidecar config and entries come FROM m_old (RESTORE restores
-    # table properties too): inheriting the current HEAD's Bloom
-    # sizing would probe m_old's bitmaps with the wrong parameters —
-    # silent false negatives — and m_old without a kind restores the
-    # disarmed state.
-    new_v = write_versioned(
-        empty, path, expected_parent=expected_parent, _op="restore",
-        extra_meta=meta, stats_cols=m_old.get("stats_cols"),
-        changes_df=changes, reuse_files=files,
-        _carry_from=(path, m_old),
-        # the restored CONTENT includes m_old's delete vectors —
-        # inheriting the current head's list instead would apply
-        # post-restore deletes to the restored state ([] resets when
-        # m_old had none)
-        dv_dirs=m_old.get("dv_dirs") or [],
-        dv_key=m_old.get("dv_key"), _no_data=True)
-    return {"version": new_v, "restored_from": version,
-            "files_reused": len(files), "files_rewritten": 0}
+    r = _carry(spark, path, m_old, path, op="restore",
+               meta={"restored_from": version},
+               expected_parent=head if expected_parent is None
+               else expected_parent, changes=changes)
+    return {"version": r["version"], "restored_from": version,
+            "files_reused": r["files_reused"],
+            "files_rewritten": r["files_rewritten"]}
 
 
 def clone_versioned(spark: SparkSession, src: str, dst: str,
@@ -2300,52 +2332,12 @@ def clone_versioned(spark: SparkSession, src: str, dst: str,
         version = head
     m = _read_manifest(src, version)    # raises on unknown version
     src_abs = os.path.abspath(src)
-    meta = {"source_path": src_abs, "source_version": version}
-    if m.get("partition_by"):
-        df = read_version(spark, src, version)   # raises if vacuumed
-        v = write_versioned(
-            df, dst, _op="clone", extra_meta=meta,
-            stats_cols=m.get("stats_cols"),
-            partition_by=m["partition_by"], _carry_from=(src, m))
-        return {"version": v, "source_path": src_abs,
-                "source_version": version, "files_referenced": 0,
-                "files_rewritten": m["n_files"]}
-    files = _root_files(src, m)
-    missing = [f for f in files
-               if not os.path.exists(os.path.join(src, f))]
-    if missing or len(files) != m["n_files"]:
-        raise ValueError(
-            f"clone_versioned: snapshot {version} of {src!r} was "
-            f"vacuumed ({len(missing) + m['n_files'] - len(files)}"
-            f" of {m['n_files']} data files gone) — only retained "
-            "versions can be cloned")
-    refs = [_rebase(src, dst, f) for f in files]
-    schema = _schema(m)
-    empty = _local_frame(spark, [], schema)
-    # Delete vectors are REWRITTEN into the clone's own tree (one
-    # delete-sized copy, dv/v=1): the (file-tail, key) entries stay
-    # valid — the tail extraction is root-invariant — while keeping
-    # the clone independent of the source's dv retention and clear of
-    # dv-dir version-number collisions with the clone's own commits.
-    dv_df = None
-    dv_key = None
-    if m.get("dv_dirs"):
-        dv_gone = [dvv for dvv in m["dv_dirs"]
-                   if not os.path.isdir(_dv_dir(src, dvv))]
-        if dv_gone:
-            raise ValueError(
-                f"clone_versioned: snapshot {version} of {src!r} was "
-                f"vacuumed (delete-vector dirs {dv_gone} gone) — only "
-                "retained versions can be cloned")
-        dv_key = m.get("dv_key")
-        dv_df = _read_dv(spark, src, m)
-    v = write_versioned(
-        empty, dst, _op="clone", extra_meta=meta,
-        stats_cols=m.get("stats_cols"), reuse_files=refs,
-        dv_df=dv_df, dv_key=dv_key, _no_data=True, _carry_from=(src, m))
-    return {"version": v, "source_path": src_abs,
-            "source_version": version, "files_referenced": len(refs),
-            "files_rewritten": 0}
+    r = _carry(spark, src, m, dst, op="clone",
+               meta={"source_path": src_abs, "source_version": version})
+    return {"version": r["version"], "source_path": src_abs,
+            "source_version": version,
+            "files_referenced": r["files_reused"],
+            "files_rewritten": r["files_rewritten"]}
 
 
 def verify_versioned(path: str, strict: bool = False) -> list[str]:
@@ -2358,7 +2350,7 @@ def verify_versioned(path: str, strict: bool = False) -> list[str]:
     delete-vector dirs exist with their key in the snapshot schema,
     change dirs exist where the manifest claims them, and
     crashed-writer leftovers (orphan claims, snap dirs with no
-    manifest) are reported.  Pure driver metadata reads — no
+    manifest, manifests off the head's parent chain) are reported.  Pure driver metadata reads — no
     Spark session, no data pages; run it before/after vacuum or as a
     governance cadence job.
 
@@ -2366,14 +2358,19 @@ def verify_versioned(path: str, strict: bool = False) -> list[str]:
     reported as ``note:`` lines (expected state), real corruption as
     ``error:`` lines.  ``strict=True`` raises on any error."""
     issues: list[str] = []
+    manifested = _manifested(path)
     committed = versions(path)
-    if not committed:
+    if not manifested:
         issues.append(f"error: {path!r} has no committed manifests")
     head = latest_version(path)
-    if head is not None and head not in committed:
+    if head is not None and head not in manifested:
         issues.append(f"error: head pointer {head} has no manifest")
     seen_parents: dict[int, int | None] = {}
-    for v in committed:
+    for v in manifested:
+        if v not in committed:
+            issues.append(
+                f"note: orphan manifest {v}.json (its head flip never "
+                "happened — readers ignore it)")
         try:
             m = _read_manifest(path, v)
         except ValueError as e:
@@ -2450,7 +2447,7 @@ def verify_versioned(path: str, strict: bool = False) -> list[str]:
                     cv = int(n[:-6])
                 except ValueError:
                     continue
-                if cv not in committed:
+                if cv not in manifested:
                     issues.append(
                         f"note: orphan claim {n} (crashed writer — "
                         "vacuum_versioned reclaims it)")
@@ -2462,7 +2459,7 @@ def verify_versioned(path: str, strict: bool = False) -> list[str]:
                     sv = int(d[2:])
                 except ValueError:
                     continue
-                if sv not in committed:
+                if sv not in manifested:
                     issues.append(
                         f"note: orphan snapshot dir snap/{d} "
                         "(crashed writer — vacuum reclaims it)")
@@ -2496,9 +2493,13 @@ def vacuum_versioned(path: str, keep_last: int = 2) -> list[int]:
     # reuse) manifests pin individual files — possibly inside a
     # DROPPED version's directory — so removal is reference-counted
     # at file granularity; directory-read manifests pin their whole
-    # snap dir.
+    # snap dir.  Delete-vector dirs are reference-counted the same
+    # way: a retained manifest's dv_dirs may point at sidecars
+    # committed by dropped versions (reuse commits inherit the list),
+    # so a dv dir survives while ANY retained manifest references it.
     referenced: set[str] = set()
     protected_dirs: set[str] = set()
+    dv_referenced: set[int] = set()
     for v in sorted(keep):
         try:
             m = _read_manifest(path, v)
@@ -2510,16 +2511,6 @@ def vacuum_versioned(path: str, keep_last: int = 2) -> list[int]:
                 for f in m["data_files"]}
         else:
             protected_dirs.add(_snap_dir(path, v))
-    # delete-vector dirs are REFERENCE-COUNTED like reused data
-    # files: a retained manifest's dv_dirs may point at sidecars
-    # committed by dropped versions (reuse commits inherit the list),
-    # so a dv dir survives while ANY retained manifest references it.
-    dv_referenced: set[int] = set()
-    for v in sorted(keep):
-        try:
-            m = _read_manifest(path, v)
-        except ValueError:
-            continue
         dv_referenced |= {int(x) for x in (m.get("dv_dirs") or [])}
     removed = []
     for v in committed:
@@ -2801,13 +2792,6 @@ def read_changes_per_commit(spark: SparkSession, path: str, key: str,
     if span is None:
         return None
     vers, schema = span
-    # the per-pair loop this replaces pairs MANIFESTED versions while
-    # the chain follows parent links — on a healthy table they are
-    # identical; on a table with orphaned manifests (a lost head
-    # race) defer to the loop rather than silently diverge
-    if vers != [v for v in versions(path)
-                if from_version < v <= to_version]:
-        return None
     if key not in schema.fieldNames():
         raise ValueError(
             f"read_changes_per_commit: key {key!r} missing from the "

@@ -33,11 +33,13 @@ than silently skipping span.
 
 The write half, :func:`apply_changes_sink`, maintains a REPLICA
 versioned table from the stream — upserts and deletes applied as ONE
-copy-on-write commit per micro-batch (touched-slice rewrite, the
-``delete_where`` shape), idempotent under Spark's at-least-once
-foreachBatch replay via the ``versioned_merge_sink`` manifest-guard
-pattern.  End to end this is CDC replication: table → stored feed →
-readStream → exactly-once replica.
+row-level commit per micro-batch through the versioned table's
+row-commit core (``sources.versioned._row_commit``, which owns the
+copy-on-write, merge-on-read and full-rewrite layouts), idempotent
+under Spark's at-least-once foreachBatch replay via the sinks' shared
+manifest guard (``streaming.validate._replayed``).  End to end this is
+CDC replication: table → stored feed → readStream → exactly-once
+replica.
 """
 
 from __future__ import annotations
@@ -45,6 +47,7 @@ from __future__ import annotations
 import json
 import os
 
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.datasource import (
@@ -76,8 +79,7 @@ def _change_schema(path: str) -> T.StructType:
     if head is None:
         raise ValueError(
             f"versioned_changes: {path!r} has no snapshots")
-    for v in sorted(V.versions(path), reverse=True):
-        m = V._read_manifest(path, v)
+    for m in reversed(V._chain(path)):
         sj = m.get("changes_schema_json")
         if sj:
             return T.StructType.fromJson(json.loads(sj))
@@ -178,8 +180,9 @@ class _ChangeFeedStreamReader(DataSourceStreamReader):
                            else lo, lo, hi)
         self._cursor = max(self._cursor, lo, hi)
         parts: list[_ChangeFilePartition] = []
+        committed = set(V.versions(self._path))
         for v in range(served_from + 1, hi + 1):
-            if v not in set(V.versions(self._path)):
+            if v not in committed:
                 continue                    # skipped number (orphan)
             m = V._read_manifest(self._path, v)
             if not m.get("changes"):
@@ -334,47 +337,45 @@ def apply_changes_sink(table_path: str, key: str,
     half.  Each micro-batch (which may span several source commits)
     is NETTED to one final state per key — the event at the highest
     ``_commit_version``, postimage winning over preimage within a
-    commit — then applied as ONE copy-on-write commit: the touched
-    file slice (keys present in the batch) is rewritten with upserts
-    applied and deleted keys dropped, every untouched file carried by
-    reference (the ``delete_where`` shape — a small CDC batch against
-    a 100 TB replica rewrites the touched slice, not the table).
-    Partitioned replicas fall back to a full materialization, exactly
-    like ``merge_versioned``.
+    commit — then applied as ONE row-level commit: upserts replace or
+    insert, deleted keys are dropped.  The first batch of an empty
+    replica initializes it.
+
+    The commit layout is the row-commit core's (contract on
+    ``sources.versioned._row_commit``): ``mode='cow'`` (default)
+    rewrites only the files holding a batch key and carries every
+    other file by reference — a small CDC batch against a 100 TB
+    replica rewrites the touched slice, not the table.
+    ``mode='mor'`` (merge-on-read) rewrites no file: the old copies
+    of the keys the batch CHANGES or deletes are killed by a
+    delete-vector sidecar and the changed and inserted rows are
+    appended; upserts equal to the live row neither move nor version
+    (the fingerprint discipline).  Vectors accumulate per batch; fold
+    them on cadence with ``optimize_versioned``.  A partitioned
+    replica takes the full rewrite in either mode.
 
     Exactly-once under Spark's at-least-once foreachBatch replay via
-    the ``versioned_merge_sink`` manifest guard: each commit records
-    ``(stream_query, stream_batch)`` and a replayed batch is skipped.
-    Pass ``sink_id`` (stable across restarts) — required for the
-    same silent-batch-loss reason versioned_merge_sink requires it.
-
-    ``mode='mor'`` (merge-on-read — the r11 deletion-vector
-    machinery): the batch applies as a delete-sized vector sidecar
-    (old copies of every key the batch touches) plus the upsert rows
-    appended as the commit's own files — ZERO replica files
-    rewritten per micro-batch, the right shape when a small CDC
-    batch's keys scatter across a 100 TB replica (the COW slice
-    rewrite touches every file containing a batch key).  Vectors
-    accumulate per batch; fold them on cadence with
-    ``optimize_versioned``.  Flat replicas only (partitioned fall
-    back to the full materialization either way)."""
+    the sinks' manifest guard (``streaming.validate._replayed``): each
+    commit records ``(stream_query, stream_batch)`` and a replayed
+    batch is skipped.  Pass ``sink_id`` (stable across restarts) —
+    required for the same silent-batch-loss reason
+    ``versioned_merge_sink`` requires it.  Each commit names the
+    version it read as its expected parent, so a replica head that
+    moves under the batch fails it with ``ConcurrentWriteError``
+    instead of being overwritten."""
     if mode not in ("cow", "mor"):
         raise ValueError(
             f"apply_changes_sink: mode must be 'cow' or 'mor', got "
             f"{mode!r}")
     from ..plans.joins import upsert
     from ..sources import versioned as V
-    from .validate import _sink_identity
+    from .validate import _replayed, _sink_identity
 
-    def write(batch_df, batch_id: int) -> None:
-        spark = batch_df.sparkSession
+    def write(batch_df: DataFrame, batch_id: int) -> None:
         qid = _sink_identity(batch_df, sink_id, require=True,
                              where=f"apply_changes_sink({table_path})")
-        for v in V.versions(table_path):
-            m = V._read_manifest(table_path, v)
-            if m.get("stream_query") == qid \
-                    and m.get("stream_batch") == batch_id:
-                return                       # at-least-once replay
+        if _replayed(table_path, qid, batch_id):
+            return                           # at-least-once replay
         meta = {"stream_query": qid, "stream_batch": batch_id}
         payload_cols = [c for c in batch_df.columns
                         if c not in ("_change_type", COMMIT_COL)]
@@ -392,59 +393,43 @@ def apply_changes_sink(table_path: str, key: str,
                      .alias("_f"))
                  .select(F.col(f"_f._ct").alias("_ct"),
                          *[F.col(f"_f.{c}").alias(c)
-                           for c in payload_cols]))
-        upserts = final.where(F.col("_ct").isin(
-            "insert", "update_postimage")).drop("_ct")
-        del_keys = final.where(F.col("_ct") == "delete") \
-            .select(key).drop_duplicates()
+                           for c in payload_cols])
+                 .where(F.col("_ct") != "update_preimage"))
+        upserts = final.where(F.col("_ct") != "delete").drop("_ct")
         if V.latest_version(table_path) is None:
             V.write_versioned(upserts, table_path, _op="cdc-init",
                               extra_meta=meta)
             return
-        m = V._read_manifest(table_path, V.latest_version(table_path))
-        base = V.read_version(spark, table_path)
-        aligned = upserts.select(*base.columns)
-        if m.get("partition_by"):
-            merged = upsert(base, aligned, key) \
-                .join(del_keys, key, "left_anti")
-            V.write_versioned(merged, table_path, _op="cdc-apply",
-                              extra_meta=meta,
-                              partition_by=m["partition_by"],
-                              stats_cols=m.get("stats_cols"))
-            return
-        schema = T.StructType.fromJson(json.loads(m["schema_json"]))
-        parent_files = V._root_files(table_path, m)
-        batch_keys = aligned.select(key).unionByName(del_keys) \
-            .drop_duplicates()
-        if mode == "mor":
-            old = (V._detect_frame(spark, table_path, m)
-                   .join(batch_keys, key, "left_semi")
-                   .select(F.regexp_extract(F.col("_f"),
-                                            V._DV_TAIL, 1)
-                           .alias("_file"), key))
-            dv_df = old if old.limit(1).count() else None
-            V.write_versioned(
-                aligned, table_path, _op="cdc-apply",
-                extra_meta={**meta, "apply_mode": "mor"},
-                stats_cols=m.get("stats_cols"),
-                reuse_files=parent_files,
-                dv_df=dv_df, dv_key=key)
-            return
-        touched = sorted({
-            V._rel_uri(table_path, r["_f"]) for r in
-            V._detect_frame(spark, table_path, m)
-            .join(batch_keys, key, "left_semi")
-            .select("_f").distinct().collect()
-        })                                  # bounded: one row per file
-        untouched = [f for f in parent_files if f not in set(touched)]
-        sub = (V.apply_delete_vectors(
-            spark, table_path, m, spark.read.schema(schema).parquet(
-                *[os.path.join(table_path, f) for f in touched]))
-            if touched else spark.createDataFrame([], schema))
-        merged = upsert(sub, aligned, key) \
-            .join(del_keys, key, "left_anti")
-        V.write_versioned(
-            merged, table_path, _op="cdc-apply", extra_meta=meta,
-            stats_cols=m.get("stats_cols"), reuse_files=untouched)
+        m = V._head_manifest(table_path)
+        cols = V._schema(m).fieldNames()
+        detect = sorted(set(cols) - {key})
+        aligned = upserts.select(*cols)
+        deleted = final.where(F.col("_ct") == "delete").select(key)
+        layout = "full" if m.get("partition_by") else mode
+
+        def touch(live: DataFrame) -> DataFrame:
+            # the live rows of batch keys with the batch's final state;
+            # a delete or a new fingerprint changes the row
+            o, n = live.alias("o"), final.alias("n")
+            return o.join(n, F.col(f"o.{key}") == F.col(f"n.{key}")) \
+                .select(
+                    *([F.col("o._f")] if "_f" in live.columns else []),
+                    ((F.col("n._ct") == "delete")
+                     | (V._fp([F.col(f"o.{c}") for c in detect])
+                        != V._fp([F.col(f"n.{c}") for c in detect])))
+                    .alias("_chg"),
+                    "n._ct", *[F.col(f"n.{c}").alias(c) for c in cols])
+
+        V._row_commit(
+            batch_df.sparkSession, table_path, m, layout,
+            op="cdc-apply", name="apply_changes_sink", key=key,
+            touch=touch if layout != "full" else None,
+            replace=lambda rows: upsert(rows, aligned, key)
+            .join(deleted, key, "left_anti"),
+            post=lambda changed: changed.where(
+                F.col("_ct") != "delete").drop("_ct"),
+            inserts=aligned,
+            extra_meta={**meta, "apply_mode": "mor"}
+            if layout == "mor" else meta)
 
     return write

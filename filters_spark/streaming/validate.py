@@ -99,6 +99,21 @@ def _sink_identity(batch_df: DataFrame, sink_id: str | None,
     return "unknown"
 
 
+def _replayed(table_path: str, qid: str, batch_id: int) -> bool:
+    """The replay guard of the versioned-table sinks: True when a
+    COMMITTED version of ``table_path`` already records micro-batch
+    ``(qid, batch_id)``, so Spark's at-least-once foreachBatch replay
+    of it must be skipped.  Only the head's parent chain counts — a
+    manifest whose head flip never happened (a writer killed between
+    manifest write and flip) committed nothing, and its batch must
+    land on replay.  O(committed versions) manifest reads per batch."""
+    from ..sources import versioned as V
+
+    return any(m.get("stream_query") == qid
+               and m.get("stream_batch") == batch_id
+               for m in V._chain(table_path))
+
+
 def events_stream(spark, sf_dir: str, max_files_per_trigger: int = 1) -> DataFrame:
     """Replay the events table as a file-source stream (the test/bench
     harness for streaming ops).  The file source requires a DIRECTORY,
@@ -547,8 +562,8 @@ def versioned_merge_sink(table_path: str, key: str,
     Exactly-once: each commit's manifest records
     ``(stream_query, stream_batch)``, and a replayed batch (Spark's
     at-least-once foreachBatch contract after a crash) is detected by
-    scanning committed manifests and SKIPPED — merging a batch twice
-    would double-apply inserts.  The stream identity comes from
+    scanning committed manifests (:func:`_replayed`) and SKIPPED —
+    merging a batch twice would double-apply inserts.  The stream identity comes from
     :func:`_sink_identity`, and THIS sink requires one that resolves:
     the ``sql.streaming.queryId`` fallback is often unset in PySpark
     foreachBatch callbacks, and if every query collapsed to one
@@ -557,11 +572,12 @@ def versioned_merge_sink(table_path: str, key: str,
     fallback raises here instead of warning (ADVICE r7).  Pass
     ``sink_id=...`` (stable across restarts — replay detection after
     a crash depends on the restarted stream presenting the SAME
-    identity).  A crash BETWEEN the snapshot write
-    and the pointer flip leaves an unreferenced orphan (never visible
-    to readers); the replay re-merges cleanly because the orphan was
-    never latest and version numbering skips past it.  The first
-    batch of an empty table initializes it.
+    identity).  A commit that fails BETWEEN the snapshot write and the
+    pointer flip removes its manifest and files; a writer killed there
+    leaves a manifest off the head's parent chain, which readers and
+    the replay guard ignore.  Either way the replay re-merges cleanly:
+    the batch was never committed, and version numbering skips past
+    any orphan.  The first batch of an empty table initializes it.
 
     Manifest scan cost is O(committed versions) per batch — run
     ``vacuum_versioned`` on retention anyway; for very long streams
@@ -581,11 +597,8 @@ def versioned_merge_sink(table_path: str, key: str,
         spark = batch_df.sparkSession
         qid = _sink_identity(batch_df, sink_id, require=True,
                              where=f"versioned_merge_sink({table_path})")
-        for v in V.versions(table_path):
-            m = V._read_manifest(table_path, v)
-            if m.get("stream_query") == qid \
-                    and m.get("stream_batch") == batch_id:
-                return                      # at-least-once replay
+        if _replayed(table_path, qid, batch_id):
+            return                          # at-least-once replay
         meta = {"stream_query": qid, "stream_batch": batch_id}
         if V.latest_version(table_path) is None:
             init_changes = None

@@ -184,6 +184,70 @@ class TestCommitProtocol:
                                  stats_cols=["k"]) == 2
         assert V.read_version(spark, tpath).count() == 2
 
+    @pytest.mark.parametrize("at", ["manifest", "flip"])
+    def test_failed_commit_point_does_not_count(self, spark, tpath,
+                                                monkeypatch, at):
+        """A sink commit that fails at its manifest write (after the
+        file landed) or at its head flip does not count as committed:
+        the error surfaces, the head stays, the version is not listed,
+        its manifest and dirs are gone, the table verifies clean, and
+        Spark's replay of the batch lands."""
+        from filters_spark.streaming.validate import versioned_merge_sink
+
+        sink = versioned_merge_sink(tpath, "k", sink_id="s")
+        sink(_df(spark, [(1, "a", 1)]), 0)                    # v1
+        batch = _df(spark, [(2, "b", 2)])
+        real_write = V._write_json
+
+        def write_json(dest, obj):
+            real_write(dest, obj)
+            if os.path.basename(dest) == "2.json":
+                raise OSError("manifest boom")
+
+        def flip(path, version):
+            raise OSError("flip boom")
+
+        if at == "manifest":
+            monkeypatch.setattr(V, "_write_json", write_json)
+        else:
+            monkeypatch.setattr(V, "_flip_latest", flip)
+        with pytest.raises(OSError, match=f"{at} boom"):
+            sink(batch, 1)
+        monkeypatch.undo()
+        self._reclaimed(tpath, 2)
+        assert V.versions(tpath) == [1]
+        assert V.table_history(spark, tpath).count() == 1
+        sink(batch, 1)                                        # replay
+        assert V.latest_version(tpath) == 2
+        assert sorted(r["k"] for r in
+                      V.read_version(spark, tpath).collect()) == [1, 2]
+        V.verify_versioned(tpath, strict=True)
+
+    def test_unflipped_manifest_is_not_committed(self, spark, tpath):
+        """A writer killed between manifest write and head flip leaves
+        a manifest off the head's parent chain: versions, history,
+        timestamp travel and the sink replay guard ignore it, verify
+        notes it, and the next commit numbers past it."""
+        import time
+
+        from filters_spark.streaming.validate import versioned_merge_sink
+
+        sink = versioned_merge_sink(tpath, "k", sink_id="s")
+        sink(_df(spark, [(1, "a", 1)]), 0)                    # v1
+        sink(_df(spark, [(2, "b", 2)]), 1)                    # v2
+        V._flip_latest(tpath, 1)          # as if the flip never ran
+        assert V.versions(tpath) == [1]
+        assert [r["version"] for r in
+                V.table_history(spark, tpath).collect()] == [1]
+        assert V.version_as_of(tpath, time.time()) == 1
+        issues = V.verify_versioned(tpath, strict=True)
+        assert any(i.startswith("note: orphan manifest 2.json")
+                   for i in issues), issues
+        sink(_df(spark, [(2, "b", 2)]), 1)                    # replay
+        assert V.versions(tpath) == [1, 3]
+        assert sorted(r["k"] for r in
+                      V.read_version(spark, tpath).collect()) == [1, 2]
+
 
 class TestVacuum:
     def test_retention_keeps_recent_drops_old(self, spark, tpath):
@@ -2112,7 +2176,7 @@ class TestMorDelete:
         m = V._read_manifest(t, 2)
         assert m["dv_dirs"] == [2] and m["dv_key"] == "k"
         # every parent file carried, and NOTHING else: the r11
-        # _no_data commit path skips the empty replacement write, so
+        # data-less commit path skips the empty replacement write, so
         # a MOR delete adds ZERO data files (no schema-only junk part
         # that every later read would open forever)
         extra = [f for f in m["data_files"]
@@ -2126,8 +2190,8 @@ class TestMorDelete:
 
     def test_no_data_commits_write_zero_files(self, spark, tmp_path):
         """r11 optimization pin: metadata-only commits (MOR delete,
-        no-change MOR update, RESTORE, CLONE) declare their empty
-        replacement frame via _no_data — the snapshot dir exists but
+        no-change MOR update, RESTORE, CLONE) commit no replacement
+        frame (``df=None``) — the snapshot dir exists but
         holds no parquet, n_files counts carried files only, and
         reads / fsck are unaffected."""
         t = self._mk(spark, tmp_path)
