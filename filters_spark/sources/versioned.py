@@ -142,6 +142,7 @@ def _manifested(path: str) -> list[int]:
 
 
 def _load_manifest(path: str, version: int) -> dict | None:
+    """Version ``version``'s manifest, or None when it has none."""
     try:
         with open(os.path.join(_manifest_dir(path),
                                f"{version}.json")) as fh:
@@ -2350,9 +2351,9 @@ def verify_versioned(path: str, strict: bool = False) -> list[str]:
     delete-vector dirs exist with their key in the snapshot schema,
     change dirs exist where the manifest claims them, and
     crashed-writer leftovers (orphan claims, snap dirs with no
-    manifest, manifests off the head's parent chain) are reported.  Pure driver metadata reads — no
-    Spark session, no data pages; run it before/after vacuum or as a
-    governance cadence job.
+    manifest, manifests off the head's parent chain) are reported.
+    Pure driver metadata reads — no Spark session, no data pages; run
+    it before/after vacuum or as a governance cadence job.
 
     Returns the issue list (empty = healthy); VACUUMED history is
     reported as ``note:`` lines (expected state), real corruption as

@@ -563,13 +563,13 @@ def versioned_merge_sink(table_path: str, key: str,
     ``(stream_query, stream_batch)``, and a replayed batch (Spark's
     at-least-once foreachBatch contract after a crash) is detected by
     scanning committed manifests (:func:`_replayed`) and SKIPPED —
-    merging a batch twice would double-apply inserts.  The stream identity comes from
-    :func:`_sink_identity`, and THIS sink requires one that resolves:
-    the ``sql.streaming.queryId`` fallback is often unset in PySpark
-    foreachBatch callbacks, and if every query collapsed to one
-    lineage, two queries sharing a ``batch_id`` would wrongly skip
-    each other's batches — SILENT BATCH LOSS, so the 'unknown'
-    fallback raises here instead of warning (ADVICE r7).  Pass
+    merging a batch twice would double-apply inserts.  The stream
+    identity comes from :func:`_sink_identity`, and THIS sink requires
+    one that resolves: the ``sql.streaming.queryId`` fallback is often
+    unset in PySpark foreachBatch callbacks, and if every query
+    collapsed to one lineage, two queries sharing a ``batch_id`` would
+    wrongly skip each other's batches — SILENT BATCH LOSS, so the
+    'unknown' fallback raises here instead of warning (ADVICE r7).  Pass
     ``sink_id=...`` (stable across restarts — replay detection after
     a crash depends on the restarted stream presenting the SAME
     identity).  A commit that fails BETWEEN the snapshot write and the
