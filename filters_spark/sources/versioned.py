@@ -56,6 +56,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 from concurrent.futures import ThreadPoolExecutor
 from typing import Callable, NamedTuple
 
@@ -1735,6 +1736,12 @@ def _head_manifest(path: str) -> dict:
     return _read_manifest(path, parent)
 
 
+#: Changed rows per file a merge-on-read commit appends: ~1M rows is
+#: a right-sized parquet file at typical row widths, so a CDC commit
+#: writes one file.
+_APPEND_ROWS_PER_FILE = 1 << 20
+
+
 def _row_commit(spark: SparkSession, path: str, m: dict, mode: str, *,
                 op: str, name: str, key: str | None, touch, replace,
                 post=None, inserts: DataFrame | None = None, feed=None,
@@ -1759,7 +1766,12 @@ def _row_commit(spark: SparkSession, path: str, m: dict, mode: str, *,
       as the commit's own files, together with the ``inserts`` rows
       whose key no live row holds.  Every parent file is carried by
       reference.  Flat layouts only (the file-tail binding) and a
-      UNIQUE ``key`` is required.
+      UNIQUE ``key`` is required.  The append is sized from the
+      changed-row count — one file per :data:`_APPEND_ROWS_PER_FILE`
+      changed rows, the ``inserts`` (a CDC-sized batch by the merge
+      and sink contracts) riding along — so a CDC commit adds ONE
+      file for every later read to open, and a large one still
+      writes in parallel.
 
     The op supplies only what is its own: ``touch(live)`` — the rows
     of a live frame it touches, plus a boolean ``_chg`` (content
@@ -1838,6 +1850,8 @@ def _row_commit(spark: SparkSession, path: str, m: dict, mode: str, *,
                 new = inserts.join(hits.select(key), key, "left_anti")
                 rows = new if rows is None else rows.unionByName(new)
             no_data = rows is None or (not n_chg and inserts is None)
+            if not no_data:
+                rows = rows.coalesce(1 + n_chg // _APPEND_ROWS_PER_FILE)
             extra_meta = {**(extra_meta or {}), f"{op}_mode": "mor"}
         changes = None if feed is None else feed(
             live, hits.drop("_f", "_chg") if hits is not None else None)
@@ -3037,7 +3051,9 @@ def optimize_versioned(spark: SparkSession, path: str,
         # the rewrite — compacting them back in would resurrect
         # them), and the live vector set is re-filtered to entries
         # binding to still-carried files and rewritten as ONE fresh
-        # sidecar, so dv history compacts along with the data.
+        # sidecar, so dv history compacts along with the data.  DV
+        # entries bind the file TAIL, so the carried set is compared
+        # as tails (a clone's files sit under ``../src/``).
         packed = _read_files(spark, path, m, small).repartition(
             min(n_files, len(small)))
         dv_df = None
@@ -3046,8 +3062,8 @@ def optimize_versioned(spark: SparkSession, path: str,
         if m.get("dv_dirs"):
             dv_key = m.get("dv_key")
             dv_dirs_override = []
-            live = _read_dv(spark, path, m).where(
-                F.col("_file").isin(big))
+            live = _read_dv(spark, path, m).where(F.col("_file").isin(
+                [re.search(_DV_TAIL, f).group(1) for f in big]))
             if live.limit(1).count():
                 dv_df = live
         return write_versioned(

@@ -103,6 +103,8 @@ def test_replica_matrix(spark, tmp_path, layout):
         # vectors kill only the changed and deleted keys' old copies
         dv = sorted(r["k"] for r in V._read_dv(spark, t, m).collect())
         assert dv == sorted(CHANGED + DELETED)
+        # the changed and inserted rows append as ONE file
+        assert m["n_files"] == V._read_manifest(t, 1)["n_files"] + 1
     if layout == "full":
         assert m["partition_by"] == ["p"]
     else:

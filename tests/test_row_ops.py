@@ -126,6 +126,9 @@ def test_op_matrix(spark, tmp_path, op, layout):
     m = V._read_manifest(t, 2)
     assert m.get("changes") is True
     assert bool(m.get("dv_dirs")) == (layout == "mor")
+    if layout == "mor":
+        # a MOR commit appends its rows as ONE file (a delete: none)
+        assert m["n_files"] == n_parent + (op != "delete")
     assert _feed(V.read_changes(spark, t, "k", 1, 2)) == _feed(
         V.read_changes(spark, t, "k", 1, 2, use_stored=False))
     V.verify_versioned(t, strict=True)

@@ -3181,3 +3181,29 @@ class TestSelectiveCompaction:
         assert m.get("bloom_cols") == ["k"]
         assert V.read_version(spark, t, where=("k", 4242, 4242)).where(
             F.col("k") == 4242).count() == 1
+
+    def test_clone_keeps_deleted_rows_deleted(self, spark, tmp_path):
+        """A clone carries the source's files as ``../src/snap/...``
+        paths while its delete vectors bind the ``snap/v=N/...``
+        tail: compaction must match the two, or the carried files'
+        vector entries drop and their deleted rows read again."""
+        src, dst = str(tmp_path / "src"), str(tmp_path / "dst")
+        V.write_versioned(spark.range(0, 4000).select(
+            F.col("id").alias("k"), (F.col("id") * 3).alias("v"))
+            .repartitionByRange(2, "k"), src)
+        V.delete_where(spark, src, "k % 10 = 0", mode="mor", key="k")
+        V.clone_versioned(spark, src, dst)
+        V.merge_versioned(spark, dst, spark.range(1, 4).select(
+            F.col("id").alias("k"), F.lit(-1).cast("bigint").alias("v")),
+            "k", mor=True)
+        assert V.read_version(spark, dst).count() == 3600
+        m = V._read_manifest(dst, V.latest_version(dst))
+        sizes = {f: os.path.getsize(os.path.join(dst, f))
+                 for f in m["data_files"]}
+        carried = [s for f, s in sizes.items() if f.startswith("../")]
+        assert len(carried) == 2 and len(sizes) > 2
+        V.optimize_versioned(spark, dst, min_file_bytes=min(carried))
+        back = V.read_version(spark, dst)
+        assert back.count() == 3600
+        assert back.select("k").distinct().count() == 3600
+        assert back.where("k % 10 = 0").count() == 0

@@ -11,6 +11,25 @@ duplicates), embeddings rotated by a per-replica deterministic
 nudge.  Non-scaled tables are symlinked from sf0.1 so every query's
 loader works unchanged.
 
+This is the repo's one stress tool.  Scale checks are rows, not
+scripts:
+
+* A ``HEAVY`` row maps a REGISTERED query name to an invariant on
+  that query's output rows; each row runs cold, then steady.  An
+  operator is stressed through its oracle-gated query, never a
+  private generator.  ``tests/test_stress_table.py`` fails when a
+  row names an unregistered query.
+* Only queries that read documents, embeddings or orders qualify —
+  every other table is the unscaled sf0.1 file.
+* Ids a query plants must sit clear of the replica offsets: 10M per
+  document or vector replica, 100M per orders replica (an orders
+  gate's +10M inserts and ``rel_bloom_skipping``'s 1.7B absent keys
+  are clear; an id inside a replica's range collides with a
+  replicated row instead of being new).  The v7/v8 pipelines predate
+  the rule: their +10M document ids land in replica 1, and only
+  their content dedup, which drops the planted copies first, keeps
+  them deterministic.
+
 Usage: python tools/stress_sf1.py [outdir]
 """
 
@@ -198,6 +217,120 @@ HEAVY = {
     "rel_continuous_rollup": lambda rows: _inv(
         len(rows) > 0 and all(r["n_mismatch"] == 0 for r in rows),
         "continuous rollup: incremental == full at 10x"),
+    # the operators the retired per-round synthetic stress scripts
+    # covered, each through its registered gate (SCALE.md §35)
+    "ds_minhash_lsh": lambda rows: _inv(len(rows) > 0 and all(
+        r["a_id"] != r["b_id"] and r["jaccard"] >= 0.8 for r in rows),
+        "minhash lsh: verified pairs at or above 0.8"),
+    "ds_dedup_components_star": lambda rows: _inv(len(rows) > 0 and all(
+        r["component_id"] <= r["doc_id"] and r["comp_size"] >= 2
+        for r in rows), "star components: min-id labels, size >= 2"),
+    "ds_dedup_components": lambda rows: _inv(len(rows) > 0 and all(
+        r["component_id"] <= r["doc_id"] and r["comp_size"] >= 2
+        for r in rows), "components: min-id labels, size >= 2"),
+    "ds_global_shuffle": lambda rows: _inv(
+        len(rows) == 8 and sum(r["n_docs"] for r in rows) == 50_000,
+        "global shuffle: 8 shards hold every doc"),
+    "rel_scd2": lambda rows: _inv(len(rows) > 0 and sum(
+        r["is_current"] for r in rows) == len({r["o_custkey"] for r in rows}),
+        "scd2: one current interval per key"),
+    "ds_semdedup": lambda rows: _inv(len(rows) > 0 and all(
+        r["kept_id_sum"] < 10_000_000 for r in rows),
+        "semdedup: every replica dropped as its original's twin"),
+    "ds_bm25_topk": lambda rows: _inv(all(r["rank"] <= 10 for r in rows)
+        and any(r["rank"] == 1 and r["doc_id"] == r["query_id"]
+                for r in rows), "bm25: top-10, query docs find themselves"),
+    "ds_kmeans": lambda rows: _inv(
+        0 < len(rows) <= 8 and sum(r["n"] for r in rows) == 20_000,
+        "kmeans: every vector in one of <= 8 clusters"),
+    "ds_knn_graph": lambda rows: _inv(len(rows) == 60_000 and all(
+        r["src_id"] != r["neighbor_id"] for r in rows),
+        "knn graph: 3 neighbours per vector"),
+    "ds_corpus_pipeline_v3": lambda rows: _inv(
+        len(rows) == 8 and 0 < sum(r["n_docs"] for r in rows) <= 2_000,
+        "v3: semantic dedup drops every replica"),
+    "ds_duplicate_spans": lambda rows: _inv(len(rows) == 20 and all(
+        r["n_docs"] == 2_500 and r["docs_with_dup_span"] > 0 for r in rows),
+        "duplicate spans: replicas repeat spans in every source"),
+    "ds_stratified_fixed_n": lambda rows: _inv(
+        len(rows) == 20 and all(r["n_kept"] == 10 for r in rows),
+        "stratified: exactly 10 per source"),
+    "ds_span_removal": lambda rows: _inv(len(rows) == 20 and all(
+        r["n_docs"] == 2_500 and r["tokens_removed"] > 0 for r in rows),
+        "span removal: replica spans excised in every source"),
+    "ds_postings_append": lambda rows: _inv(
+        len(rows) > 0 and all(r["rank"] <= 10 for r in rows),
+        "postings append: nonempty top-10"),
+    "ds_incremental_dedup": lambda rows: _inv(len(rows) > 0 and all(
+        r["jaccard"] >= 0.8 for r in rows),
+        "incremental dedup: batch pairs against the store"),
+    "txt_bpe_merges": lambda rows: _inv(
+        len(rows) == 3 and all(r["pair_count"] > 0 for r in rows),
+        "bpe: 3 merges"),
+    "ds_incremental_clusters": lambda rows: _inv(
+        len(rows) == 1 and rows[0]["n_docs"] == 50_000
+        and rows[0]["max_cluster_size"] >= 10,
+        "incremental clusters: every doc, replicas clustered"),
+    "txt_gopher_rules": lambda rows: _inv(len(rows) == 20 and all(
+        r["n_docs"] == 2_500 and r["n_pass"] <= 2_500 for r in rows),
+        "gopher: every doc screened"),
+    "txt_lm_perplexity": lambda rows: _inv(
+        sum(r["n_docs"] for r in rows) == 50_000, "lm: every doc scored"),
+    "prof_hdr_by_group": lambda rows: _inv(
+        len(rows) == 40 and all(r["within_bound"] == 1 for r in rows),
+        "hdr by group: 12.5% bound holds per source"),
+    "ds_corpus_pipeline_v5": lambda rows: _inv(len(rows) > 0 and all(
+        r["n_docs"] > 0 and r["bin_tokens"] > 0 for r in rows),
+        "v5: nonempty packed bins"),
+    "ds_pps_sample": lambda rows: _inv(
+        len(rows) == 100 and all(r["n_hits"] == 1 for r in rows),
+        "pps: exactly n distinct points"),
+    "ds_centroid_outliers": lambda rows: _inv(
+        sum(r["n"] for r in rows) == 20_000
+        and all(0 <= r["n_outliers"] < r["n"] for r in rows),
+        "centroid outliers: a minority flagged per cluster"),
+    "ds_random_projection": lambda rows: _inv(
+        len(rows) == 120_000, "random projection: 6 coords per vector"),
+    "prof_covariance": lambda rows: _inv(
+        len(rows) == 36 and all(r["n"] == 20_000 for r in rows),
+        "covariance: d(d+1)/2 pairs over every vector"),
+    "txt_hashing_features": lambda rows: _inv(0 < len(rows) <= 64 and all(
+        r["l1"] >= abs(r["total_weight"]) for r in rows),
+        "hashing features: <= 64 buckets, l1 bounds mass"),
+    "ds_text_clusters": lambda rows: _inv(
+        0 < len(rows) <= 8 and sum(r["n"] for r in rows) == 50_000,
+        "text clusters: every doc in one of <= 8 clusters"),
+    "rel_merge_snapshot": lambda rows: _inv(
+        len(rows) == 1 and rows[0]["v1_rows"] == 1_500_000
+        and rows[0]["v2_rows"] > rows[0]["v1_rows"],
+        "merge snapshot: v1 intact, planted keys inserted"),
+    "rel_hilbert_layout": lambda rows: _inv(
+        sum(r["n"] for r in rows) == 1_500_000, "hilbert: every order keyed"),
+    "rel_bloom_skipping": lambda rows: _inv(sorted(
+        (r["probe_key"], r["n_rows"]) for r in rows) == [
+        (0, 1), (1, 1), (2, 1), (1_700_000_001, 0), (1_700_000_002, 0)],
+        "bloom: present keys found once, absent keys pruned"),
+    "ds_percentile_select": lambda rows: _inv(len(rows) == 20 and all(
+        r["n_total"] == 2_500 and 0 < r["n_kept"] <= 625 for r in rows),
+        "percentile select: top 25% per source"),
+    "ds_opq_adc": lambda rows: _inv(
+        len(rows) > 0 and all(1 <= r["rank"] <= 10 for r in rows),
+        "opq adc: nonempty top-10"),
+    "txt_wordpiece_tokens": lambda rows: _inv(
+        len(rows) > 0 and all(r["n"] > 0 for r in rows),
+        "wordpiece: nonempty piece table"),
+    "ds_warc_ingest": lambda rows: _inv(len(rows) == 50_000 and all(
+        r["http_status"] == 200 for r in rows), "warc: every doc back"),
+    "rel_window_funnel": lambda rows: _inv(len(rows) > 0 and all(
+        0 <= r["funnel_level"] <= 3 and r["n_users"] > 0 for r in rows),
+        "window funnel: levels 0..3 populated"),
+    "rel_stats_ndv": lambda rows: _inv(
+        len(rows) == 1 and rows[0]["exact_k"] == 1_500_000
+        and abs(rows[0]["ndv_k"] / 1_500_000 - 1) < 0.2,
+        "stats ndv: sidecar HLL within 3 sigma"),
+    "ds_chunk_documents": lambda rows: _inv(len(rows) == 20 and all(
+        r["n_chunks"] >= 2_500 for r in rows),
+        "chunking: every doc chunked"),
 }
 
 
