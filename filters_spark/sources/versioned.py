@@ -1736,10 +1736,19 @@ def _head_manifest(path: str) -> dict:
     return _read_manifest(path, parent)
 
 
-#: Changed rows per file a merge-on-read commit appends: ~1M rows is
-#: a right-sized parquet file at typical row widths, so a CDC commit
-#: writes one file.
-_APPEND_ROWS_PER_FILE = 1 << 20
+def _fits_one_split(spark: SparkSession, rows: DataFrame) -> bool:
+    """Whether ``rows`` fits one read split
+    (``spark.sql.files.maxPartitionBytes``) by the optimizer's size of
+    it — an upper bound, read without a job, that is exact at the
+    leaves when each has a known row count (a cache an earlier action
+    loaded, a local relation).  False when some leaf's size is only a
+    default guess (an unloaded cache, an RDD, a bare scan)."""
+    plan = rows._jdf.queryExecution().optimizedPlan()
+    leaves = plan.collectLeaves()
+    return all(leaves.apply(i).stats().rowCount().isDefined()
+               for i in range(leaves.length())) \
+        and plan.stats().sizeInBytes() <= spark._jsparkSession \
+        .sessionState().conf().filesMaxPartitionBytes()
 
 
 def _row_commit(spark: SparkSession, path: str, m: dict, mode: str, *,
@@ -1766,12 +1775,13 @@ def _row_commit(spark: SparkSession, path: str, m: dict, mode: str, *,
       as the commit's own files, together with the ``inserts`` rows
       whose key no live row holds.  Every parent file is carried by
       reference.  Flat layouts only (the file-tail binding) and a
-      UNIQUE ``key`` is required.  The append is sized from the
-      changed-row count — one file per :data:`_APPEND_ROWS_PER_FILE`
-      changed rows, the ``inserts`` (a CDC-sized batch by the merge
-      and sink contracts) riding along — so a CDC commit adds ONE
-      file for every later read to open, and a large one still
-      writes in parallel.
+      UNIQUE ``key`` is required.  An append that fits one read
+      split (:func:`_fits_one_split`, measured from the persisted
+      touched rows and the ``inserts``, which a caller persists so
+      the detection action loads them) is written as ONE file — a
+      CDC commit adds one file for every later read to open.  A
+      larger append, or one of unknown size, keeps its upstream
+      partitioning: one task per input partition.
 
     The op supplies only what is its own: ``touch(live)`` — the rows
     of a live frame it touches, plus a boolean ``_chg`` (content
@@ -1850,8 +1860,8 @@ def _row_commit(spark: SparkSession, path: str, m: dict, mode: str, *,
                 new = inserts.join(hits.select(key), key, "left_anti")
                 rows = new if rows is None else rows.unionByName(new)
             no_data = rows is None or (not n_chg and inserts is None)
-            if not no_data:
-                rows = rows.coalesce(1 + n_chg // _APPEND_ROWS_PER_FILE)
+            if not no_data and _fits_one_split(spark, rows):
+                rows = rows.coalesce(1)
             extra_meta = {**(extra_meta or {}), f"{op}_mode": "mor"}
         changes = None if feed is None else feed(
             live, hits.drop("_f", "_chg") if hits is not None else None)

@@ -420,16 +420,25 @@ def apply_changes_sink(table_path: str, key: str,
                     .alias("_chg"),
                     "n._ct", *[F.col(f"n.{c}").alias(c) for c in cols])
 
-        V._row_commit(
-            batch_df.sparkSession, table_path, m, layout,
-            op="cdc-apply", name="apply_changes_sink", key=key,
-            touch=touch if layout != "full" else None,
-            replace=lambda rows: upsert(rows, aligned, key)
-            .join(deleted, key, "left_anti"),
-            post=lambda changed: changed.where(
-                F.col("_ct") != "delete").drop("_ct"),
-            inserts=aligned,
-            extra_meta={**meta, "apply_mode": "mor"}
-            if layout == "mor" else meta)
+        # a file-level layout reads the netted batch twice (touch, then
+        # the append or rewrite): persist it so the source is read once
+        # and a MOR append's size is measured (V._fits_one_split).  The
+        # full rewrite reads it once.
+        if layout != "full":
+            final.persist()
+        try:
+            V._row_commit(
+                batch_df.sparkSession, table_path, m, layout,
+                op="cdc-apply", name="apply_changes_sink", key=key,
+                touch=touch if layout != "full" else None,
+                replace=lambda rows: upsert(rows, aligned, key)
+                .join(deleted, key, "left_anti"),
+                post=lambda changed: changed.where(
+                    F.col("_ct") != "delete").drop("_ct"),
+                inserts=aligned,
+                extra_meta={**meta, "apply_mode": "mor"}
+                if layout == "mor" else meta)
+        finally:
+            final.unpersist()
 
     return write

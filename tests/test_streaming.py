@@ -1169,9 +1169,11 @@ class TestChangeFeedStream:
         m = V._read_manifest(dst, V.latest_version(dst))
         assert m.get("apply_mode") == "mor"
         assert m.get("dv_dirs")
-        # every v1 replica file still carried by reference
+        # every v1 replica file still carried by reference, and the
+        # batch's changed and inserted rows appended as ONE file
         assert sum(1 for f in m["data_files"]
                    if f.startswith("snap/v=1/")) == 4
+        assert len(m["data_files"]) == 5
         # second batch on the same checkpoint stacks on the vectors
         V.merge_versioned(spark, src, spark.createDataFrame(
             [(5, "V", 1)], "k bigint, val string, n bigint"), "k",

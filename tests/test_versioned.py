@@ -2456,6 +2456,34 @@ class TestMorDelete:
                g.where(F.col("k").isin(7, 8, 3000)).collect()}
         assert got == {7: (71, "x"), 8: (80, None), 3000: (1, "y")}
 
+    def test_mor_append_fits_one_split_as_one_file(self, spark, tmp_path):
+        """A MOR merge whose append fits one read split writes ONE
+        file; an insert-heavy batch larger than a split keeps a task
+        per input partition (the batch's four, here)."""
+        t = str(tmp_path / "t")
+        V.write_versioned(spark.range(0, 1000).select(
+            F.col("id").alias("k"), F.col("id").alias("c"))
+            .repartitionByRange(2, "k"), t)
+
+        def added(lo, hi):
+            # keys lo..999 change, the rest insert
+            before = V._head_manifest(t)["n_files"]
+            V.merge_versioned(spark, t, spark.range(
+                lo, hi, numPartitions=4).select(
+                F.col("id").alias("k"), F.lit(-1).cast("bigint")
+                .alias("c")), "k", mor=True)
+            return V._head_manifest(t)["n_files"] - before
+
+        assert added(990, 1010) == 1
+        spark.conf.set("spark.sql.files.maxPartitionBytes", "16k")
+        try:
+            assert added(900, 40_900) >= 4
+        finally:
+            spark.conf.unset("spark.sql.files.maxPartitionBytes")
+        back = V.read_version(spark, t)
+        assert back.count() == 40_900
+        assert back.where(F.col("c") == -1).count() == 40_000
+
     def test_guards(self, spark, tmp_path):
         import pytest
         t = self._mk(spark, tmp_path)
