@@ -831,16 +831,12 @@ def repetition_gate(df, id_col: str = "doc_id", text_col: str = "text",
 _BPE_SEP = "\x1f"
 
 
-#: bpe_train(engine='spark'): driver round-trip the (vocab-sized)
-#: symbol state every N merges to cap persisted-lineage depth.
-_BPE_TRUNCATE_EVERY = 8
-
-
 def _bpe_merge_word(syms: list, a: str, b: str, ab: str) -> list:
     """Greedy left-to-right merge of pair (a, b) in one word — the
     exact semantics of ``replace(sym, '␟a␟␟b␟', '␟ab␟')`` on the
-    wrapped packed form: scanning resumes AFTER each replacement, so
-    an odd run 'a a a' merges the first pair only."""
+    wrapped packed form (:func:`bpe_apply`, the DuckDB oracles):
+    scanning resumes AFTER each replacement, so an odd run 'a a a'
+    merges the first pair only."""
     out, i, n = [], 0, len(syms)
     while i < n:
         if i + 1 < n and syms[i] == a and syms[i + 1] == b:
@@ -852,17 +848,21 @@ def _bpe_merge_word(syms: list, a: str, b: str, ab: str) -> list:
     return out
 
 
-def _bpe_train_driver(wordfreq: list, n_merges: int) -> list:
-    """In-process incremental BPE over the folded (word, freq)
-    vocabulary — the O(Δ)-per-merge half of :func:`bpe_train`'s
-    ``engine='driver'``.  State: per-word symbol lists, a pair→count
-    map, a pair→word-ids index, and a lazy-deletion max-heap of
-    (−count, left, right).  Per merge only the words CONTAINING the
-    merged pair are rewritten and only pairs adjacent to the merge
-    site change counts; every changed pair is re-pushed and stale
-    heap entries are discarded at pop (entry valid iff its count
-    matches the live map).  Tie-break (count desc, left, right) is
-    the heap order itself."""
+def _collect_fold(wordfreq: DataFrame) -> list[tuple[str, int]]:
+    """The (word, freq) fold as a driver list — the trainers' one
+    bounded collect (distinct words, not documents)."""
+    return [(r["w"], int(r["f"])) for r in wordfreq.collect()]
+
+
+def _bpe_learn(wordfreq: list, n_merges: int) -> list:
+    """Incremental BPE over the folded (word, freq) vocabulary.
+    State: per-word symbol lists, a pair→count map, a pair→word-ids
+    index, and a lazy-deletion max-heap of (−count, left, right).
+    Per merge only the words CONTAINING the merged pair are rewritten
+    and only pairs adjacent to the merge site change counts; every
+    changed pair is re-pushed and stale heap entries are discarded at
+    pop (entry valid iff its count matches the live map).  Tie-break
+    (count desc, left, right) is the heap order itself."""
     import heapq
     from collections import defaultdict
 
@@ -918,7 +918,6 @@ def _bpe_train_driver(wordfreq: list, n_merges: int) -> list:
 
 def bpe_train(df: DataFrame, text_col: str = "text",
               n_merges: int = 10, sep: str = " ",
-              engine: str = "spark",
               max_vocab: int | None = None) -> list[tuple]:
     """Byte-pair-encoding merge training (Sennrich, Haddow & Birch
     2016, ACL "Neural Machine Translation of Rare Words with Subword
@@ -927,66 +926,30 @@ def bpe_train(df: DataFrame, text_col: str = "text",
     ``[(step, left, right, pair_count), ...]`` — the merge table a
     tokenizer applies in order.
 
-    Scale shape — everything beyond the first rollup is
-    VOCABULARY-sized, not corpus-sized:
+    Scale shape — the corpus is read once:
 
-    1. one corpus pass folds the token stream to (word, freq) — the
-       classic BPE trick: a pair inside a word occurring f times
-       counts f, so iterations never touch the corpus again;
-    2. each word's symbol state is a PACKED STRING with every symbol
-       WRAPPED in its own ``\\x1f`` pair ("␟h␟␟e␟␟l␟␟l␟␟o␟" — see
-       the _BPE_SEP note: full wrapping is what makes the merge
-       pattern boundary-anchored on BOTH sides while still matching
-       adjacent occurrences).  Greedy left-to-right merge
-       application — the part that looks inherently sequential — is
-       exactly the semantics of ``replace(sym, '␟a␟␟b␟', '␟ab␟')``:
-       both engines scan left to right and resume AFTER each
-       replacement, so an odd run "a a a" merges the first pair
-       only, byte-for-byte like the reference algorithm.  No
-       per-symbol explode, no HOF in the merge pass — one codegen'd
-       replace per iteration;
-    3. pair counts per iteration: split the packed string, zip with
-       its shift, explode, weighted groupBy — an aggregation over
-       the vocabulary;
-    4. the argmax pair (count desc, then left, right — a total
-       order) is ONE collected row per iteration (the k-means
-       centroid contract: by-contract-small driver state).
+    1. one distributed pass folds the token stream to (word, freq) —
+       the classic BPE trick: a pair inside a word occurring f times
+       counts f, so training never touches the corpus again;
+    2. the fold is collected (distinct words: heavy-tail bounded,
+       ~10⁶–10⁷ entries even for web-scale corpora, hard-boundable
+       with ``max_vocab`` — keep the top-N word forms by (freq desc,
+       word), deterministic; the hapax tail contributes no merge
+       above min count 2 in practice);
+    3. merges train in-process with the incremental pair-count cache
+       (Sennrich's learn_bpe trick, :func:`_bpe_learn`): per-merge
+       cost is O(Δ) — only the words containing the merged pair are
+       touched — so the Spark job count does not grow with
+       ``n_merges`` (SCALE.md §25: 256 merges on 2M docs in 2.8 s).
 
-    Training stops early if no pair occurs twice.  Deterministic
-    across engines, partitionings, and retries; the DuckDB oracle
-    unrolls the same iterations in SQL.
-
-    ``engine`` (r5 VERDICT #3 — the per-merge-scan wall):
-
-    - ``'spark'`` (default): one vocabulary-sized Spark job per
-      merge.  Fine to a few hundred merges and the SQL-replayable
-      gate shape, but a 32k-merge production tokenizer would mean
-      32k sequential jobs each scanning O(vocab) state — a
-      wall-clock scale-killer regardless of per-job efficiency.
-    - ``'driver'``: the production path.  The CORPUS-sized work is
-      unchanged (one distributed pass folding the token stream to
-      (word, freq) — after that no engine ever touches the corpus
-      again); the folded vocabulary is collected and merges train
-      in-process with the classic incremental pair-count cache
-      (Sennrich's learn_bpe trick): only the words containing the
-      just-merged pair are touched per step (pair→word index), count
-      deltas are O(affected word length), and the argmax is a
-      lazy-deletion heap — per-merge cost is O(Δ), not O(vocab), so
-      32k merges is 32k heap pops, zero Spark jobs.  Driver memory
-      is the DISTINCT-WORD vocabulary (heavy-tail bounded; ~10⁶–10⁷
-      entries even for web-scale corpora), hard-boundable with
-      ``max_vocab`` (keep the top-N word forms by (freq desc, word)
-      — deterministic; the long tail of hapax words contributes no
-      merge above min count 2 in practice).
-
-    The two engines are EXACTLY equal on the same input (pytest-
-    pinned): identical greedy left-to-right word semantics, identical
-    overlap counting, identical (count desc, left, right) tie-break
-    (Python code-point string order == UTF-8 binary order — UTF-8 is
-    order-preserving)."""
-    if engine not in ("spark", "driver"):
-        raise ValueError(f"engine must be 'spark' or 'driver', got {engine!r}")
-    spark = df.sparkSession
+    Greedy left-to-right merge application is exactly the semantics
+    of ``replace(sym, '␟a␟␟b␟', '␟ab␟')`` on the wrapped packed form
+    (see _BPE_SEP) — an odd run "a a a" merges the first pair only —
+    so :func:`bpe_apply` and the DuckDB oracle replay the table
+    byte for byte.  Training stops early if no pair occurs twice.
+    The (count desc, left, right) tie-break is a total order (Python
+    code-point string order == UTF-8 binary order), so the result is
+    deterministic across partitionings and retries."""
     wordfreq = (
         df.select(F.explode(F.split(F.col(text_col), sep)).alias("w"))
         .where((F.col("w") != "") & (~F.col("w").contains(_BPE_SEP)))
@@ -994,60 +957,7 @@ def bpe_train(df: DataFrame, text_col: str = "text",
     )
     if max_vocab is not None:
         wordfreq = wordfreq.orderBy(F.col("f").desc(), "w").limit(max_vocab)
-    if engine == "driver":
-        return _bpe_train_driver(
-            [(r["w"], int(r["f"])) for r in wordfreq.collect()], n_merges)
-    words = wordfreq.select(
-        F.regexp_replace("w", "(.)", _BPE_SEP + "$1" + _BPE_SEP)
-        .alias("sym"), "f")
-    from ._cache import scoped_persist
-
-    state = scoped_persist(words, "bpe_words")
-    merges: list[tuple] = []
-    for step in range(1, n_merges + 1):
-        syms = F.split(F.col("sym"), _BPE_SEP)
-        l = F.filter(syms, lambda x: x != "")  # drop inter-symbol ''
-        shifted = F.slice(l, 2, F.greatest(F.size(l) - 1, F.lit(0)))
-        z = F.zip_with(l, shifted,
-                       lambda x, y: F.struct(x.alias("a"), y.alias("b")))
-        best = (
-            state.select(F.explode(z).alias("p"), "f")
-            .where(F.col("p.b").isNotNull())
-            .groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
-            .agg(F.sum("f").alias("c"))
-            .orderBy(F.col("c").desc(), "a", "b")
-            .limit(1)
-            .collect()
-        )
-        if not best or best[0]["c"] < 2:
-            break
-        a, b, c = best[0]["a"], best[0]["b"], best[0]["c"]
-        merges.append((step, a, b, int(c)))
-        state = state.select(
-            F.replace(F.col("sym"),
-                      F.lit(_BPE_SEP + a + _BPE_SEP + _BPE_SEP
-                            + b + _BPE_SEP),
-                      F.lit(_BPE_SEP + a + b + _BPE_SEP)).alias("sym"),
-            "f")
-        if step < n_merges:
-            if step % _BPE_TRUNCATE_EVERY == 0:
-                # LINEAGE TRUNCATION (r6 measured finding): each
-                # persisted iteration nests another InMemoryRelation,
-                # and driver-side plan work on the deepening chain
-                # (analysis + the SQL-listener plan description)
-                # grows superlinearly — at ~20 nested persists the
-                # per-action gap reached MINUTES with sub-second
-                # execution (see SCALE.md §25; explainMode=simple in
-                # get_spark removes the worst term but not the
-                # growth).  The state is vocabulary-sized by
-                # contract, so a driver round-trip every
-                # _BPE_TRUNCATE_EVERY merges resets plan depth to 1
-                # for O(vocab) traffic — and the 8-merge gate plan is
-                # untouched (no truncation below 9 merges).
-                state = spark.createDataFrame(
-                    state.collect(), "sym string, f bigint")
-            state = scoped_persist(state, "bpe_words")
-    return merges
+    return _bpe_learn(_collect_fold(wordfreq), n_merges)
 
 
 def bpe_apply(col: Column, merges: list[tuple]) -> Column:
@@ -1055,7 +965,7 @@ def bpe_apply(col: Column, merges: list[tuple]) -> Column:
     array<string> of subword tokens.
 
     The whole text is packed (every char wrapped in its own ``\\x1f``
-    pair — the bpe_train convention) and each merge is ONE codegen'd
+    pair — see _BPE_SEP) and each merge is ONE codegen'd
     ``replace`` pass in training order — merges can never cross word
     boundaries because the space character is itself a symbol no
     learned merge contains.  Space symbols (and the inter-symbol
@@ -1236,10 +1146,10 @@ def hashing_vectors_dense(df: DataFrame, id_col: str = "doc_id",
 # in a DuckDB oracle (txt_unigram_tokenize).
 #
 # Scale shape mirrors bpe_train: ONE corpus pass folds the token
-# stream to (word, freq) and a second builds weighted substring
-# counts; every later iteration works on the VOCABULARY (distinct
-# words), never the corpus.  Application to a corpus goes through
-# the same fold: segment each DISTINCT word once, join back.
+# stream to (word, freq), collected once; the substring seed and
+# every segment-then-prune round run in-process over the VOCABULARY
+# (distinct words), never the corpus.  Application to a corpus goes
+# through the same fold: segment each DISTINCT word once, join back.
 
 def _by_len(vocab: list[str]) -> dict[int, list[str]]:
     out: dict[int, list[str]] = {}
@@ -1294,10 +1204,9 @@ def _wordfreq(df: DataFrame, text_col: str, sep: str) -> DataFrame:
 def _unigram_loop(wordfreq: list[tuple[str, int]], seed_size: int,
                   vocab_size: int, max_piece_len: int,
                   prune_iters: int) -> list[str]:
-    """Driver-side trainer core over the folded (word, freq) list —
-    the ``bpe_train(engine='driver')`` boundary: corpus-sized work
-    already happened; this is pure vocabulary-sized Python, and the
-    Spark engine must produce EXACTLY this (pytest-pinned)."""
+    """Trainer core over the collected (word, freq) fold — the
+    :func:`bpe_train` boundary: corpus-sized work already happened;
+    this is pure vocabulary-sized Python."""
     chars = sorted({c for w, _ in wordfreq for c in w})
     subs: dict[str, int] = {}
     for w, f in wordfreq:
@@ -1341,8 +1250,7 @@ def _unigram_loop(wordfreq: list[tuple[str, int]], seed_size: int,
 def unigram_train(df: DataFrame, text_col: str = "text",
                   sep: str = " ", seed_size: int = 48,
                   vocab_size: int = 24, max_piece_len: int = 4,
-                  prune_iters: int = 2,
-                  engine: str = "spark") -> list[str]:
+                  prune_iters: int = 2) -> list[str]:
     """Train the unigram-style piece vocabulary (module note above).
     Returns the final vocabulary, sorted — single characters (never
     pruned: they are the coverage floor) plus the top ``vocab_size``
@@ -1350,59 +1258,14 @@ def unigram_train(df: DataFrame, text_col: str = "text",
     ``prune_iters`` segment-then-prune rounds over a ``seed_size``
     frequent-substring seed.
 
-    ``engine='driver'`` collects the folded (word, freq) vocabulary
-    once and trains in-process (the production path — iterations are
-    pure Python over distinct words); ``engine='spark'`` runs each
-    segment+usage round as a vocabulary-sized Spark job (the
-    SQL-replayable gate shape).  Both are exactly equal on the same
-    input (pytest-pinned: identical greedy longest-match semantics
-    and (usage desc, piece) tie-break)."""
-    if engine not in ("spark", "driver"):
-        raise ValueError(
-            f"engine must be 'spark' or 'driver', got {engine!r}")
-    wf = _wordfreq(df, text_col, sep)
-    if engine == "driver":
-        return _unigram_loop(
-            [(r["w"], int(r["f"])) for r in wf.collect()],
-            seed_size, vocab_size, max_piece_len, prune_iters)
-    from ._cache import scoped_persist
-
-    words = scoped_persist(wf, "unigram_words")
-    sub_arrays = F.flatten(F.filter(F.transform(
-        F.sequence(F.lit(2), F.lit(max_piece_len)),
-        lambda ln: F.when(
-            F.length("w") >= ln,
-            F.transform(F.sequence(F.lit(1), F.length("w") - ln + 1),
-                        lambda i: F.col("w").substr(i, ln)))
-        .otherwise(F.array().cast("array<string>"))),
-        lambda a: a.isNotNull()))
-    # ONE bounded action for the alphabet AND the seed (r12, guide
-    # §1.2 — was two sequential collects): the char alphabet is the
-    # distinct length-1 piece set, the seed the top multi-char
-    # substrings; union both projections in a single plan over the
-    # persisted fold.
-    seed_rows = (words.select(F.explode(sub_arrays).alias("p"), "f")
-                 .groupBy("p").agg(F.sum("f").alias("c"))
-                 .orderBy(F.col("c").desc(), "p")
-                 .limit(seed_size)
-                 .select("p")
-                 .unionByName(
-                     words.select(
-                         F.explode(F.split("w", "")).alias("p"))
-                     .where(F.col("p") != "").distinct())
-                 .collect())
-    pieces = {r["p"] for r in seed_rows}
-    chars = sorted(p for p in pieces if len(p) == 1)
-    vocab = sorted(pieces)
-    for _ in range(prune_iters):
-        pieces = unigram_segment(F.col("w"), vocab, max_piece_len)
-        kept = (words.select(F.explode(pieces).alias("p"), "f")
-                .where(F.length("p") > 1)
-                .groupBy("p").agg(F.sum("f").alias("c"))
-                .orderBy(F.col("c").desc(), "p")
-                .limit(vocab_size).collect())       # bounded: vocab_size
-        vocab = sorted(set(chars) | {r["p"] for r in kept})
-    return vocab
+    One distributed corpus fold to (word, freq), collected once; the
+    seed and every round then run in-process over distinct words
+    (:func:`_unigram_loop`), so the Spark job count does not grow
+    with ``prune_iters``.  Greedy longest-match semantics equal
+    :func:`unigram_segment`'s, and the (usage desc, piece) tie-break
+    is a total order."""
+    return _unigram_loop(_collect_fold(_wordfreq(df, text_col, sep)),
+                         seed_size, vocab_size, max_piece_len, prune_iters)
 
 
 def unigram_token_counts(df: DataFrame, vocab: list[str],
@@ -1770,11 +1633,11 @@ def fix_mojibake(df: DataFrame, text_col: str = "text",
 # (count(a) * count(b)), and applies per-word greedy longest-match
 # with '##' continuation markers and whole-word [UNK] fallback.
 #
-# The '##' marker is used LITERALLY inside the packed symbol strings
-# (the bpe_train machinery), which is exact because training DROPS
-# words containing '#' (documented contract — the HF display format
-# is ambiguous for words that themselves start with '#'; excluding
-# them makes piece roles unambiguous on both engines).
+# The '##' marker is used LITERALLY inside the symbols (and the
+# oracle's packed symbol strings), which is exact because training
+# DROPS words containing '#' (documented contract — the HF display
+# format is ambiguous for words that themselves start with '#';
+# excluding them makes piece roles unambiguous in Spark and SQL).
 # ---------------------------------------------------------------------------
 
 _WP_UNK = "[UNK]"
@@ -1787,28 +1650,16 @@ def _wp_wordfreq(df: DataFrame, text_col: str, sep: str) -> DataFrame:
             .groupBy("w").agg(F.count(F.lit(1)).alias("f")))
 
 
-def _wp_pack(w: Column) -> Column:
-    """'hello' -> '␟h␟␟##e␟␟##l␟␟##l␟␟##o␟': first char plain, every
-    later char '##'-continuation-marked, each symbol WRAPPED in its
-    own ␟ pair (the bpe_train packed-string form, so merges are
-    boundary-anchored codegen replace() passes — see _BPE_SEP)."""
-    return F.concat(
-        F.lit(_BPE_SEP), w.substr(1, 1), F.lit(_BPE_SEP),
-        F.regexp_replace(w.substr(F.lit(2), F.length(w)),
-                         "(.)", _BPE_SEP + "##$1" + _BPE_SEP))
-
-
 def _wp_strip(piece: str) -> str:
     return piece[2:] if piece.startswith("##") else piece
 
 
-def _wp_train_driver(wordfreq: list, n_merges: int) -> list[tuple]:
-    """In-process WordPiece trainer over the folded (word, freq)
-    vocabulary.  Unlike BPE's O(Δ) heap (counts only), the WordPiece
-    score couples every pair containing a touched SYMBOL, so this
-    recomputes the vocabulary-sized score table per merge — still
-    zero Spark jobs after the one corpus fold, and exactly equal to
-    the spark engine (pytest-pinned)."""
+def _wp_learn(wordfreq: list, n_merges: int) -> list[tuple]:
+    """WordPiece trainer over the collected (word, freq) fold.
+    Unlike BPE's O(Δ) heap (counts only), the WordPiece score couples
+    every pair containing a touched SYMBOL, so this recomputes the
+    vocabulary-sized score table per merge — still zero Spark jobs
+    after the one corpus fold."""
     wsyms = []
     for w, f in wordfreq:
         wsyms.append(([w[0]] + ["##" + c for c in w[1:]], f))
@@ -1840,90 +1691,34 @@ def _wp_train_driver(wordfreq: list, n_merges: int) -> list[tuple]:
 
 def wordpiece_train(df: DataFrame, text_col: str = "text",
                     n_merges: int = 10, sep: str = " ",
-                    engine: str = "spark",
                     max_vocab: int | None = None) -> list[tuple]:
     """Learn ``n_merges`` WordPiece merges.  Returns ``[(step, left,
     right, pair_count, left_count, right_count), ...]`` in HF display
     form ('##'-prefixed continuation symbols) — the integer counts
     are returned instead of the float score so gates stay
-    BIGINT-exact (score = pair/(left*right), one IEEE division both
-    engines replay identically).
+    BIGINT-exact (score = pair/(left*right), one correctly-rounded
+    IEEE division of exact integers that Python and the DuckDB
+    oracle replay identically).
 
     Same scale shape as :func:`bpe_train`: one corpus fold to
-    (word, freq), then vocabulary-sized iterations (packed-string
-    replace() merges, pair+symbol rollups, one collected argmax row
-    per step — ordered by score desc with (left, right) tie-breaks; a
-    correctly-rounded double of exact integers, deterministic across
-    engines).  Stops early when no pair occurs twice.  Words
+    (word, freq), collected once, then in-process merges
+    (:func:`_wp_learn`) ordered by score desc with (left, right)
+    tie-breaks, so the Spark job count does not grow with
+    ``n_merges``.  Stops early when no pair occurs twice.  Words
     containing '#' or the packing separator are excluded (module
-    note).  ``engine='driver'`` trains in-process over the collected
-    fold (recompute-per-merge — the WordPiece score couples every
-    pair sharing a symbol, so there is no O(Δ) heap like BPE's);
-    both engines are exactly equal (pytest-pinned)."""
-    if engine not in ("spark", "driver"):
-        raise ValueError(f"engine must be 'spark' or 'driver', got {engine!r}")
-    wordfreq = _wp_wordfreq(df, text_col, sep)
-    if max_vocab is not None:
-        wordfreq = wordfreq.orderBy(F.col("f").desc(), "w").limit(max_vocab)
-    if engine == "driver":
-        return _wp_train_driver(
-            [(r["w"], int(r["f"])) for r in wordfreq.collect()], n_merges)
+    note); ``max_vocab`` caps the fold as in :func:`bpe_train`."""
     from ._cache import scoped_persist
 
-    # persist the UNPACKED fold too (r12): wordpiece_vocab and
-    # wordpiece_token_counts fold the same corpus again otherwise —
-    # the three calls of a train→vocab→apply pipeline share one
-    # cached (word, freq) evaluation (same plan → same semanticHash).
-    # Its own scope: the per-step states below would evict it from
-    # the bounded wp_words LRU before the trainer returns.
+    wordfreq = _wp_wordfreq(df, text_col, sep)
     if max_vocab is None:
+        # the wp_fold scope: wordpiece_vocab and wordpiece_token_counts
+        # persist the same fold, so the three calls of a
+        # train→vocab→apply pipeline share one cached (word, freq)
+        # evaluation (same plan → same semanticHash).
         wordfreq = scoped_persist(wordfreq, "wp_fold")
-    state = scoped_persist(
-        wordfreq.select(_wp_pack(F.col("w")).alias("sym"), "f"),
-        "wp_words")
-    spark = df.sparkSession
-    merges: list[tuple] = []
-    for step in range(1, n_merges + 1):
-        syms = F.split(F.col("sym"), _BPE_SEP)
-        l = F.filter(syms, lambda x: x != "")
-        shifted = F.slice(l, 2, F.greatest(F.size(l) - 1, F.lit(0)))
-        z = F.zip_with(l, shifted,
-                       lambda x, y: F.struct(x.alias("a"), y.alias("b")))
-        pairs = (state.select(F.explode(z).alias("p"), "f")
-                 .where(F.col("p.b").isNotNull())
-                 .groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
-                 .agg(F.sum("f").alias("c")))
-        sym_counts = (state.select(F.explode(l).alias("s"), "f")
-                      .groupBy("s").agg(F.sum("f").alias("sc")))
-        ua = sym_counts.select(F.col("s").alias("a"),
-                               F.col("sc").alias("ca"))
-        ub = sym_counts.select(F.col("s").alias("b"),
-                               F.col("sc").alias("cb"))
-        best = (pairs.where(F.col("c") >= 2)
-                .join(F.broadcast(ua), "a").join(F.broadcast(ub), "b")
-                .orderBy((F.col("c").cast("double")
-                          / (F.col("ca").cast("double")
-                             * F.col("cb").cast("double"))).desc(),
-                         "a", "b")
-                .limit(1).collect())
-        if not best:
-            break
-        r = best[0]
-        a, b = r["a"], r["b"]
-        merges.append((step, a, b, int(r["c"]), int(r["ca"]), int(r["cb"])))
-        state = state.select(
-            F.replace(F.col("sym"),
-                      F.lit(_BPE_SEP + a + _BPE_SEP + _BPE_SEP
-                            + b + _BPE_SEP),
-                      F.lit(_BPE_SEP + a + _wp_strip(b) + _BPE_SEP))
-            .alias("sym"),
-            "f")
-        if step < n_merges:
-            if step % _BPE_TRUNCATE_EVERY == 0:
-                state = spark.createDataFrame(
-                    state.collect(), "sym string, f bigint")
-            state = scoped_persist(state, "wp_words")
-    return merges
+    else:
+        wordfreq = wordfreq.orderBy(F.col("f").desc(), "w").limit(max_vocab)
+    return _wp_learn(_collect_fold(wordfreq), n_merges)
 
 
 def wordpiece_vocab(df: DataFrame, merges: list[tuple],

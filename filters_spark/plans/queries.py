@@ -7769,16 +7769,16 @@ def ds_bloom_membership(spark, sf_dir):
 def txt_bpe_merges(spark, sf_dir):
     """BPE merge training under the value hash (text.bpe_train —
     Sennrich et al. 2016): the 3 most frequent adjacent-symbol
-    merges over the corpus vocabulary, with greedy left-to-right
-    merge application expressed as a codegen'd replace() on a
-    trailing-separator symbol string (both engines resume scanning
-    AFTER each replacement — byte-identical to the reference
-    algorithm on odd runs like 'aaa').  Pair counts are
-    frequency-weighted integer sums; the argmax tie-breaks on
-    (count desc, left, right) — a total order; the oracle unrolls
-    the same three iterations in SQL (the kmeans/pagerank unrolled-
-    iteration discipline) including the stops-when-no-pair-repeats
-    rule."""
+    merges over the corpus vocabulary.  Spark folds the corpus to
+    (word, freq) in one pass and the merges train in-process over
+    the collected fold; the oracle unrolls the same three iterations
+    in SQL (the kmeans/pagerank unrolled-iteration discipline),
+    expressing greedy left-to-right merge application as replace()
+    on a wrapped-separator symbol string — scanning resumes AFTER
+    each replacement, byte-identical to the reference algorithm on
+    odd runs like 'aaa'.  Pair counts are frequency-weighted integer
+    sums; the argmax tie-breaks on (count desc, left, right) — a
+    total order — and both sides stop when no pair repeats."""
     from ..functions import text as _text
 
     d = _t(spark, sf_dir, "documents")
@@ -13360,17 +13360,16 @@ def txt_unigram_tokenize(spark, sf_dir):
     (recursive longest-match CTEs, keep top {voc} multi-char pieces
     by usage desc then piece), final application — a drifted
     tie-break, a wrong match length, or a prune off by one piece
-    shifts the (piece, n) table and fails the hash.  Engine parity
-    (spark ≡ driver trainer) is pytest-pinned (TestUnigram).  Scale
-    shape: two corpus folds (words, then weighted substrings);
-    every iteration touches only DISTINCT WORDS; the per-iteration
-    top-K collects are seed/vocab-sized driver boundaries (the BPE
-    argmax contract)."""
+    shifts the (piece, n) table and fails the hash.  Crafted-input
+    vocabularies are pytest-pinned (TestUnigram).  Scale shape: one
+    corpus fold to (word, freq), collected once (the bpe_train
+    boundary); the seed and every prune round run in-process over
+    DISTINCT WORDS; application folds again and segments distinct
+    words only."""
     d = _t(spark, sf_dir, "documents")
     vocab = text.unigram_train(
         d, seed_size=_UNI_SEED, vocab_size=_UNI_VOCAB,
-        max_piece_len=_UNI_MAXLEN, prune_iters=_UNI_ITERS,
-        engine="spark")
+        max_piece_len=_UNI_MAXLEN, prune_iters=_UNI_ITERS)
     return text.unigram_token_counts(d, vocab,
                                      max_piece_len=_UNI_MAXLEN)
 
@@ -14578,7 +14577,7 @@ def txt_wordpiece_tokens(spark, sf_dir):
     2012, the BERT tokenizer; the third subword family beside BPE and
     the unigram trainer): merges maximize LIKELIHOOD GAIN
     count(ab)/(count(a)·count(b)) — one correctly-rounded IEEE
-    division of exact integer counts, identical in both engines,
+    division of exact integer counts, identical in Python and SQL,
     (left, right) tie-breaks — and application is per-word greedy
     longest-match with '##' continuation roles and whole-word [UNK]
     fallback (NOT char fallback — that is the unigram contract; the
@@ -14586,13 +14585,14 @@ def txt_wordpiece_tokens(spark, sf_dir):
     beyond txt_unigram_tokenize).  Three merges trained in-gate; the
     oracle replays every iteration (packed-string states, pair AND
     symbol rollups, the score argmax) plus the role-aware
-    segmentation as a recursive CTE.  Engine parity (spark ≡ driver
-    trainer) pytest-pinned (TestWordpiece).  Scale shape: one corpus
-    fold to (word, freq); every iteration touches only the
-    vocabulary; per-merge argmax is one collected row (the BPE
-    contract); segmentation runs on DISTINCT words only."""
+    segmentation as a recursive CTE.  Crafted-input merge tables are
+    pytest-pinned (TestWordpiece).  Scale shape: one corpus fold to
+    (word, freq), persisted and collected once; merges train
+    in-process over the fold (the bpe_train boundary); the vocab and
+    the segmentation reuse the persisted fold and run on DISTINCT
+    words only."""
     d = _t(spark, sf_dir, "documents")
-    merges = text.wordpiece_train(d, n_merges=3, engine="spark")
+    merges = text.wordpiece_train(d, n_merges=3)
     vocab = text.wordpiece_vocab(d, merges)
     return text.wordpiece_token_counts(d, vocab)
 

@@ -62,11 +62,12 @@ def get_spark(app_name: str = "filters_spark", shuffle_partitions: int | None = 
                 os.environ.get("SPARK_GRAFT_UI", "false"))
         # the SQL-listener plan description defaults to FORMATTED
         # mode, whose ExplainUtils.generateOperatorIDs walk re-visits
-        # nested cached subtrees without memoization — measured (r6):
-        # iterative pipelines that persist each step (bpe_train) spent
-        # MINUTES per action in plan description by ~20 nested
-        # persists, with sub-second execution.  Simple mode is one
-        # linear toString; the description only feeds the UI/history.
+        # nested cached subtrees without memoization — measured (r6)
+        # on a per-merge BPE training loop: an iterative pipeline that
+        # persists each step on top of the last spent MINUTES per
+        # action in plan description by ~20 nested persists, with
+        # sub-second execution.  Simple mode is one linear toString;
+        # the description only feeds the UI/history.
         .config("spark.sql.ui.explainMode", "simple")
         # PySpark 4's per-API-call origin capture (error-message
         # call-site enrichment) inspects the Python stack AND makes

@@ -5,6 +5,10 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+# get_spark defaults to local[32] (the bench box); a test session
+# takes the CPUs this process may run on unless told otherwise.
+os.environ.setdefault("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
+
 
 @pytest.fixture(scope="session")
 def spark():

@@ -375,45 +375,44 @@ class TestBpeTrain:
         assert T.bpe_train(df, n_merges=5) == []
 
     def test_driver_engine_exactly_equals_spark(self, spark):
-        """The O(Δ)-per-merge incremental trainer (engine='driver')
-        must reproduce the Spark loop merge-for-merge: same pairs,
-        same counts, same tie-breaks, same greedy odd-run handling —
-        on a corpus crafted to hit all of them."""
+        """The incremental trainer pinned merge-for-merge on a corpus
+        crafted to hit count ties, (left, right) tie-breaks and greedy
+        odd runs.  The table is the one a per-merge Spark-job loop
+        (since removed) produced identically."""
         from filters_spark.functions import text as T
         df = spark.createDataFrame(
             [("low low lower",), ("aaaa newest widest",),
              ("aaaaa aaaaa banana bandana",), ("ab ab ba ba ba",),
              ("the cat sat on the mat",), ("",)],
             "text string")
-        ref = T.bpe_train(df, n_merges=12, engine="spark")
-        assert len(ref) >= 8
-        assert T.bpe_train(df, n_merges=12, engine="driver") == ref
+        assert T.bpe_train(df, n_merges=12) == [
+            (1, "a", "a", 11), (2, "b", "a", 5), (3, "a", "t", 3),
+            (4, "aa", "aa", 3), (5, "l", "o", 3), (6, "lo", "w", 3),
+            (7, "n", "a", 3), (8, "a", "b", 2), (9, "aaaa", "a", 2),
+            (10, "e", "s", 2), (11, "es", "t", 2), (12, "h", "e", 2)]
 
     def test_driver_engine_on_documents_table(self, spark):
-        """Engine parity on real corpus text (sf0.001 documents)."""
+        """Real corpus text (sf0.001 documents), pinned to the table
+        the removed Spark-job loop produced identically."""
         from filters_spark.functions import text as T
         df = spark.read.parquet(
             "/root/testdata/sf0.001/documents.parquet").select("text")
-        ref = T.bpe_train(df, n_merges=16, engine="spark")
-        assert T.bpe_train(df, n_merges=16, engine="driver") == ref
+        assert T.bpe_train(df, n_merges=16) == [
+            (1, "e", "r", 4650), (2, "o", "r", 2880), (3, "i", "n", 2858),
+            (4, "o", "w", 2763), (5, "s", "t", 2721), (6, "l", "u", 1928),
+            (7, "a", "r", 1873), (8, "p", "ar", 1873),
+            (9, "m", "er", 1824), (10, "a", "t", 1806),
+            (11, "a", "n", 984), (12, "c", "an", 984),
+            (13, "s", "can", 984), (14, "c", "o", 978),
+            (15, "co", "lu", 978), (16, "colu", "m", 978)]
 
     def test_max_vocab_caps_deterministically(self, spark):
         from filters_spark.functions import text as T
         df = spark.createDataFrame(
             [("low low lower",), ("aaaa newest widest",)], "text string")
-        capped_s = T.bpe_train(df, n_merges=4, engine="spark", max_vocab=2)
-        capped_d = T.bpe_train(df, n_merges=4, engine="driver", max_vocab=2)
-        assert capped_s == capped_d
         # top-2 word forms by (freq desc, word) = 'low' (2), 'aaaa'
-        assert capped_s[0] == (1, "a", "a", 3)
-
-    def test_bad_engine_raises(self, spark):
-        import pytest as _pt
-
-        from filters_spark.functions import text as T
-        df = spark.createDataFrame([("x",)], "text string")
-        with _pt.raises(ValueError, match="engine"):
-            T.bpe_train(df, engine="numpy")
+        assert T.bpe_train(df, n_merges=4, max_vocab=2) == [
+            (1, "a", "a", 3), (2, "l", "o", 2), (3, "lo", "w", 2)]
 
     def test_suffix_collision_corpus(self, spark):
         """r10 ADVICE regression: an unanchored trailing-separator
@@ -422,14 +421,15 @@ class TestBpeTrain:
         packed '...xa␟b␟' contains 'a␟b␟'), corrupting the spark
         engine's state.  The wrapped ␟a␟␟b␟ form is anchored at both
         symbol boundaries; this corpus is crafted so the buggy form
-        diverges from the exact driver engine."""
+        diverges from the exact in-process trainer, whose table is
+        pinned here (bpe_apply and the oracle replay it packed)."""
         from filters_spark.functions import text as T
         rows = ([("aba",)] * 1 + [("abba",)] * 4
                 + [("babaa",)] * 2 + [("babb",)] * 1)
         df = spark.createDataFrame(rows, "text string")
-        ref = T.bpe_train(df, n_merges=6, engine="driver")
-        assert T.bpe_train(df, n_merges=6, engine="spark") == ref
-        assert len(ref) >= 4
+        assert T.bpe_train(df, n_merges=6) == [
+            (1, "b", "a", 10), (2, "a", "b", 4), (3, "ab", "ba", 4),
+            (4, "ba", "a", 2), (5, "ba", "baa", 2)]
 
     def test_token_counts_engines_equal_corpus_direct(self, spark):
         """bpe_token_counts: the folded-vocabulary apply (expr
@@ -442,7 +442,7 @@ class TestBpeTrain:
         rows = ([("aba abba",)] * 3 + [("babaa babb low lower",)] * 2
                 + [("the cat sat low",)] * 2)
         df = spark.createDataFrame(rows, "text string")
-        merges = T.bpe_train(df, n_merges=8, engine="driver")
+        merges = T.bpe_train(df, n_merges=8)
         assert len(merges) >= 6
         direct = {r["s"]: r["n"] for r in
                   df.select(F.explode(T.bpe_apply(F.col("text"),
@@ -464,7 +464,7 @@ class TestBpeTrain:
         from filters_spark.functions import text as T
         df = spark.createDataFrame([("low lower lowest",)] * 4,
                                    "text string")
-        merges = T.bpe_train(df, n_merges=6, engine="driver")
+        merges = T.bpe_train(df, n_merges=6)
         # pad with merges that can never apply (symbols absent)
         pad = [(100 + i, f"Q{i}", f"R{i}", 2) for i in range(300)]
         got = {r["subword"]: r["n"] for r in
@@ -482,7 +482,7 @@ class TestBpeTrain:
         from filters_spark.functions import text as T
         import pyspark.sql.functions as F
         df = spark.createDataFrame([("ab ab",)], "text string")
-        merges = T.bpe_train(df, n_merges=1, engine="spark")
+        merges = T.bpe_train(df, n_merges=1)
         assert merges == [(1, "a", "b", 2)]
         [r] = (spark.range(1)
                .select(T.bpe_apply(F.lit("abab ababa"), merges)
@@ -710,7 +710,7 @@ class TestFrequentLinesMinChars:
 class TestUnigram:
     """unigram_train / unigram_segment / unigram_token_counts: greedy
     longest-match semantics, prune behavior, char-fallback coverage,
-    and spark ≡ driver engine parity (the corpus-scale arithmetic is
+    and crafted-input vocabularies (the corpus-scale arithmetic is
     hash-gated by txt_unigram_tokenize)."""
 
     def _df(self, spark, texts):
@@ -733,18 +733,18 @@ class TestUnigram:
             out["luxq"] == ["l", "u", "x", "q"]
 
     def test_engines_exactly_equal(self, spark):
+        """Pinned to the vocabulary the removed Spark-job loop
+        produced identically: usage ties resolve by piece."""
         from filters_spark.functions import text as T
 
         df = self._df(spark, [
             "spark spark sparkle park parking",
             "ark bark barking spar sparse",
             "mark market marking spark park"])
-        a = T.unigram_train(df, seed_size=20, vocab_size=8,
-                            prune_iters=3, engine="spark")
-        b = T.unigram_train(df, seed_size=20, vocab_size=8,
-                            prune_iters=3, engine="driver")
-        assert a == b
-        assert any(len(p) > 1 for p in a)        # real pieces learned
+        assert T.unigram_train(df, seed_size=20, vocab_size=8,
+                               prune_iters=3) == [
+            "a", "ark", "arki", "b", "e", "g", "i", "ing", "k", "l", "m",
+            "mark", "n", "ng", "p", "park", "r", "s", "spar", "t"]
 
     def test_prune_keeps_used_pieces_only(self, spark):
         from filters_spark.functions import text as T
@@ -754,7 +754,7 @@ class TestUnigram:
         # segmentation's own usage decides the survivors
         df = self._df(spark, ["abab abab abab ab cd"])
         vocab = T.unigram_train(df, seed_size=10, vocab_size=2,
-                                prune_iters=2, engine="driver")
+                                prune_iters=2)
         multi = [p for p in vocab if len(p) > 1]
         assert len(multi) <= 2 and "abab" in multi
         counts = {r["piece"]: r["n"] for r in
@@ -771,12 +771,6 @@ class TestUnigram:
                   T.unigram_token_counts(df, vocab).collect()}
         # 'aaa'x2 -> [aa, a] each; 'aa' -> [aa]; 'a' -> [a]
         assert counts == {"aa": 3, "a": 3}
-
-    def test_bad_engine(self, spark):
-        from filters_spark.functions import text as T
-
-        with pytest.raises(ValueError, match="engine"):
-            T.unigram_train(self._df(spark, ["x"]), engine="nope")
 
 
 class TestSemanticContaminated:
@@ -828,8 +822,7 @@ class TestWordpiece:
         (h,##ug) first, which is exactly the semantic difference
         this class pins."""
         from filters_spark.functions import text
-        m = text.wordpiece_train(self._corpus(spark), n_merges=3,
-                                 engine="spark")
+        m = text.wordpiece_train(self._corpus(spark), n_merges=3)
         assert [(s, a, b, c) for s, a, b, c, _, _ in m] == [
             (1, "##u", "##g", 8),
             (2, "##u", "##n", 3),
@@ -839,26 +832,29 @@ class TestWordpiece:
         assert m[0][4] == 11 and m[0][5] == 8
 
     def test_engines_exactly_equal(self, spark):
+        """Pinned to the table the removed Spark-job loop produced
+        identically."""
         from filters_spark.functions import text
         d = self._corpus(spark)
-        assert (text.wordpiece_train(d, n_merges=5, engine="spark")
-                == text.wordpiece_train(d, n_merges=5, engine="driver"))
+        assert text.wordpiece_train(d, n_merges=5) == [
+            (1, "##u", "##g", 8, 11, 8), (2, "##u", "##n", 3, 3, 3),
+            (3, "p", "##un", 2, 4, 3), (4, "h", "##ug", 6, 6, 8),
+            (5, "p", "##ug", 2, 2, 2)]
 
     def test_suffix_collision_corpus(self, spark):
         """r10 ADVICE regression: with '##'-marked continuations the
         trailing-separator replace collides constantly ('##a' ends
         with 'a', so the pattern for merge (a, ##b) matched inside
         '##a␟##b␟' states).  On this corpus the buggy form diverged
-        from the driver at merge 2 (picking (##ba, ##a) instead of
-        (a, ##b)); the wrapped packing must match the exact driver
-        engine merge-for-merge."""
+        at merge 2 (picking (##ba, ##a) instead of (a, ##b)); the
+        in-process trainer's table is pinned merge-for-merge."""
         from filters_spark.functions import text
         rows = ([("aba",)] * 1 + [("abba",)] * 4
                 + [("babaa",)] * 2 + [("babb",)] * 1)
         d = spark.createDataFrame(rows, "text string")
-        ref = text.wordpiece_train(d, n_merges=4, engine="driver")
-        assert text.wordpiece_train(d, n_merges=4, engine="spark") == ref
-        assert ref[1][1:3] == ("a", "##b")
+        assert text.wordpiece_train(d, n_merges=4) == [
+            (1, "b", "##a", 3, 3, 12), (2, "a", "##b", 5, 5, 13),
+            (3, "ba", "##b", 3, 3, 8), (4, "ab", "##b", 4, 5, 5)]
 
     def test_engines_equal_on_documents_sample(self, spark):
         from filters_spark.functions import text
@@ -867,13 +863,14 @@ class TestWordpiece:
              .limit(40))
         from filters_spark.functions._cache import scoped_persist
         d = scoped_persist(d.select("text"), "wp_test")
-        assert (text.wordpiece_train(d, n_merges=4, engine="spark")
-                == text.wordpiece_train(d, n_merges=4, engine="driver"))
+        assert text.wordpiece_train(d, n_merges=4) == [
+            (1, "q", "##u", 82, 82, 394), (2, "l", "##i", 93, 93, 410),
+            (3, "w", "##i", 84, 84, 317), (4, "li", "##n", 93, 93, 411)]
 
     def test_apply_roles_and_unk(self, spark):
         from filters_spark.functions import text
         d = self._corpus(spark)
-        merges = text.wordpiece_train(d, n_merges=3, engine="driver")
+        merges = text.wordpiece_train(d, n_merges=3)
         vocab = text.wordpiece_vocab(d, merges)
         # 'g' never appears word-initial -> the word 'gun' is [UNK]
         # even though ##g and ##u exist; 'q' unseen anywhere -> [UNK];
@@ -891,7 +888,7 @@ class TestWordpiece:
         from filters_spark.functions import text
         d = self._corpus(spark)
         vocab = text.wordpiece_vocab(d, text.wordpiece_train(
-            d, n_merges=3, engine="driver"))
+            d, n_merges=3))
         # 'hugq': matches 'hug' then fails at 'q'
         probe = spark.createDataFrame([("hugq",)], "text string")
         got = {r["piece"]: r["n"] for r in
@@ -905,7 +902,7 @@ class TestWordpiece:
         from filters_spark.functions import text
         d = spark.createDataFrame(
             [("aa aa ##aa #x aa",)], "text string")
-        m = text.wordpiece_train(d, n_merges=2, engine="spark")
+        m = text.wordpiece_train(d, n_merges=2)
         assert [(a, b) for _, a, b, _, _, _ in m] == [("a", "##a")]
         vocab = text.wordpiece_vocab(d, m)
         got = {r["piece"]: r["n"] for r in
@@ -939,11 +936,35 @@ class TestWordpiece:
     def test_empty_corpus(self, spark):
         from filters_spark.functions import text
         d = spark.createDataFrame([], "text string")
-        assert text.wordpiece_train(d, n_merges=3, engine="spark") == []
-        assert text.wordpiece_train(d, n_merges=3, engine="driver") == []
+        assert text.wordpiece_train(d, n_merges=3) == []
         vocab = text.wordpiece_vocab(d, [])
         assert vocab == []
         assert text.wordpiece_token_counts(d, vocab).count() == 0
+
+
+def test_trainer_jobs_do_not_grow_with_iterations(spark):
+    """Each tokenizer trainer reads the corpus in one fold and
+    iterates in-process, so its Spark job count is the same for 3 and
+    16 merges (1 and 3 prune rounds for unigram)."""
+    from conftest import spark_jobs
+    from filters_spark.functions import text
+    from filters_spark.functions._cache import release_caches
+    words = ("hug hugs pug pun bun hugging bunny punning pugs "
+             "hunger hung lung lunge plunge").split()
+    d = spark.createDataFrame(
+        [(" ".join(words[(i * 3 + j) % len(words)] for j in range(7)),)
+         for i in range(40)], "text string")
+
+    def jobs(train, **kw):
+        release_caches()
+        return spark_jobs(spark, lambda: train(d, **kw))[1]
+
+    for train, few, many in (
+            (text.bpe_train, dict(n_merges=3), dict(n_merges=16)),
+            (text.wordpiece_train, dict(n_merges=3), dict(n_merges=16)),
+            (text.unigram_train, dict(prune_iters=1),
+             dict(prune_iters=3))):
+        assert jobs(train, **few) == jobs(train, **many), train.__name__
 
 
 class TestKnBigram:

@@ -439,8 +439,8 @@ EXPECTATIONS: dict[str, dict] = {
     # LID: one n-gram shuffle keyed by doc + the confusion rollup;
     # the join-back side broadcasts.
     "ds_lang_id": dict(max_exchanges=2, pushed=True),
-    # unigram apply: word fold + piece rollup (training's iteration
-    # jobs ran eagerly; the returned plan is fold -> segment ->
+    # unigram apply: word fold + piece rollup (training's one fold
+    # collect ran eagerly; the returned plan is fold -> segment ->
     # rollup, vocabulary-sized after the fold).
     "txt_unigram_tokenize": dict(max_exchanges=3),
     "txt_wordpiece_tokens": dict(max_exchanges=3),
