@@ -1195,10 +1195,17 @@ def unigram_segment(col: Column, vocab: list[str],
 
 
 def _wordfreq(df: DataFrame, text_col: str, sep: str) -> DataFrame:
-    return (df.select(F.explode(F.split(F.col(text_col), sep))
-                      .alias("w"))
-            .where(F.col("w") != "")
-            .groupBy("w").agg(F.count(F.lit(1)).alias("f")))
+    """The (word, freq) fold, persisted under the ``unigram_fold``
+    scope: the trainer and :func:`unigram_token_counts` fold the same
+    corpus, so a train→apply pipeline evaluates it once (same plan →
+    same semanticHash — the ``wp_fold`` discipline)."""
+    from ._cache import scoped_persist
+
+    return scoped_persist(
+        df.select(F.explode(F.split(F.col(text_col), sep)).alias("w"))
+        .where(F.col("w") != "")
+        .groupBy("w").agg(F.count(F.lit(1)).alias("f")),
+        "unigram_fold")
 
 
 def _unigram_loop(wordfreq: list[tuple[str, int]], seed_size: int,
@@ -1276,7 +1283,7 @@ def unigram_token_counts(df: DataFrame, vocab: list[str],
     (:func:`unigram_segment` — the longest-match expression never
     touches raw documents), explode weighted.  Returns (piece,
     n bigint), n > 0.  One fold shuffle + one vocabulary-sized
-    rollup."""
+    rollup; the fold is the trainer's cached one when it ran first."""
     wf = _wordfreq(df, text_col, sep)
     pieces = unigram_segment(F.col("w"), vocab, max_piece_len)
     return (wf.select(F.explode(pieces).alias("piece"), "f")

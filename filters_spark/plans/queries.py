@@ -13364,8 +13364,8 @@ def txt_unigram_tokenize(spark, sf_dir):
     vocabularies are pytest-pinned (TestUnigram).  Scale shape: one
     corpus fold to (word, freq), collected once (the bpe_train
     boundary); the seed and every prune round run in-process over
-    DISTINCT WORDS; application folds again and segments distinct
-    words only."""
+    DISTINCT WORDS; application reuses the trainer's cached fold
+    (the ``unigram_fold`` scope) and segments distinct words only."""
     d = _t(spark, sf_dir, "documents")
     vocab = text.unigram_train(
         d, seed_size=_UNI_SEED, vocab_size=_UNI_VOCAB,
@@ -14714,9 +14714,11 @@ def rel_bloom_skipping(spark, sf_dir):
     file holding a probed key loses its row and fails the hash).
     Probes are the 3 smallest orderkeys (SQL-replayable) plus two
     absent keys at 1.7B (clear of the sf1 stress key spaces) that
-    must return ZERO rows through near-total pruning.  Positions use
-    the md5-bucket convention (seed '|' value, first 8 hex, mod
-    bits) — replayable in Python at planning time with no job.
+    must return ZERO rows through near-total pruning.  Positions
+    come from ONE md5 per key by double hashing: hash i sets bit
+    (h1 + i·h2) mod bits, h1 and h2 the digest's first two 32-bit
+    words (``conv(substr(md5(k), 1, 8), 16, 10)`` and offset 9 in
+    SQL) — replayable in Python at planning time with no job.
     Inheritance (table property), COW/restore/clone carry,
     partition-column rejection, and never-wrong-prune fuzz are
     pytest-pinned (TestBloomSkipping)."""

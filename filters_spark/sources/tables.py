@@ -8,6 +8,8 @@ pins the engine-wide session discipline:
   the DuckDB oracle (SURVEY.md §7.4).
 * AQE on (skew-join + coalesce partitions) — the 100 TB safety net.
 * Arrow enabled for the pandas-UDF leaves.
+* A codegen cache that holds every stage a long session compiles, so
+  repeated stages never recompile.
 """
 
 from __future__ import annotations
@@ -77,6 +79,13 @@ def get_spark(app_name: str = "filters_spark", shuffle_partitions: int | None = 
         # session factory trades the enriched tracebacks for build
         # throughput; re-enable when debugging operator internals.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # Spark keeps 100 compiled stage classes by default, evicted
+        # LRU in 4 segments of maxEntries/4.  Measured (SCALE.md §38):
+        # a steady perfbench table-lifecycle cycle recompiled 115.5
+        # classes at 100; the 90-query bench.py suite compiles 1,898
+        # distinct classes in one session (1,824 in its cold pass),
+        # and 2,500 keeps every segment below its share of them.
+        .config("spark.sql.codegen.cache.maxEntries", "2500")
     )
     return builder.getOrCreate()
 

@@ -315,8 +315,8 @@ def _partition_value(relpath: str, col: str, dtype: str | None = None):
 _STATS_DRIVER_MAX = 64
 
 #: ... and only while the new files' footer row count × armed sketch
-#: cells per row (a Bloom column costs one md5 per hash, an NDV or
-#: HDR column one cell) stays under this cap: past it one executor
+#: cells per row (a Bloom column counts one cell per hash, an NDV
+#: or HDR column one cell) stays under this cap: past it one executor
 #: job over the file list is faster than the driver loop.
 _SIDECAR_DRIVER_CELLS = 200_000
 
@@ -396,16 +396,23 @@ def _footer_stats(abs_path: str, cols: list[str], md=None) -> dict:
 # file (each spans the full key range).  The standard answer (Delta
 # bloom filter indexes) is a per-file Bloom filter: `where=(col, v, v)`
 # probes each file's bitmap and skips files that provably lack v.
-# Positions use the md5-bucket convention (seed '|' value, first 8 hex
-# digits, mod bits) so membership is replayable in ANSI SQL and in pure
-# Python: the commit-time build and the planning-time probe (no Spark
-# job) call the SAME _bloom_positions_py, so they cannot disagree.
-# Values hash as their canonical STRING form (Spark string cast ↔
-# Python str — exact for integer and string keys, the point-lookup
+# Positions use one md5 digest per value and Kirsch–Mitzenmacher
+# double hashing (ESA 2006): with h1, h2 the digest's first two
+# big-endian 32-bit words, hash i sets bit (h1 + i·h2) mod bits — the
+# false-positive rate of k independent hashes at one digest per value.
+# Membership stays replayable in ANSI SQL
+# (``conv(substr(md5(v), 1, 8), 16, 10)`` is h1, offset 9 gives h2)
+# and in pure Python: the commit-time build and the planning-time
+# probe (no Spark job) call the SAME _bloom_positions_py, so they
+# cannot disagree.  Manifests record the scheme as ``bloom_scheme``;
+# bitmaps without it came from an older hashing and are never pruned
+# on.  Values hash as their canonical STRING form (Spark string cast
+# ↔ Python str — exact for integer and string keys, the point-lookup
 # types).  NULLs are never added and never probed.
 
 _BLOOM_DEFAULT_BITS = 65536
 _BLOOM_DEFAULT_HASHES = 4
+_BLOOM_SCHEME = "md5-km"
 
 
 #: Column types whose Spark string cast provably equals the Python
@@ -431,22 +438,26 @@ def _canon_str(value) -> str:
     return str(value)
 
 
-def _bloom_positions_py(values: list, bits: int, hashes: int) -> list[int]:
-    """Every bit position of every value — the ONE implementation of
-    the convention, shared by the commit-time build and the
-    planning-time probe."""
+def _bloom_positions_py(values: list, bits: int, hashes: int):
+    """Bit positions of every value, an int64 array of shape
+    ``(len(values), hashes)`` — the ONE implementation of the scheme,
+    shared by the commit-time build and the planning-time probe: one
+    md5 per value, position i = (h1 + i·h2) mod bits."""
     from hashlib import md5
 
-    vs = [_canon_str(v).encode() for v in values]
-    return [int(md5(seed + v).hexdigest()[:8], 16) % bits
-            for seed in [f"{i}|".encode() for i in range(hashes)]
-            for v in vs]
+    import numpy as np
+
+    dig = b"".join(md5(_canon_str(v).encode()).digest()[:8]
+                   for v in values)
+    h = np.frombuffer(dig, dtype=">u4").astype(np.int64).reshape(-1, 2)
+    return (h[:, :1] + np.arange(hashes, dtype=np.int64) * h[:, 1:]) \
+        % bits
 
 
 def _bloom_member(hexmap: str, value, bits: int, hashes: int) -> bool:
     bm = int(hexmap, 16)
-    return all((bm >> p) & 1 for p in
-               _bloom_positions_py([value], bits, hashes))
+    return all((bm >> int(p)) & 1 for p in
+               _bloom_positions_py([value], bits, hashes)[0])
 
 
 def load_file_blooms(manifest: dict) -> dict | None:
@@ -459,11 +470,13 @@ def bloom_prune_files(manifest: dict, where, files: list) -> list:
     """Intersect ``files`` with Bloom membership for every POINT
     predicate (``lo == hi``, non-null) in ``where`` whose column has
     bitmaps.  Files without a bitmap for the column are kept
-    (conservative, like unknown min/max).  Pure driver arithmetic —
-    no job, no Spark session."""
+    (conservative, like unknown min/max), and so is every file of a
+    manifest whose ``bloom_scheme`` is not the current one (bitmaps
+    hashed some other way would skip files that hold the key).  Pure
+    driver arithmetic — no job, no Spark session."""
     blooms = load_file_blooms(manifest)
-    if not blooms:
-        return files
+    if not blooms or manifest.get("bloom_scheme") != _BLOOM_SCHEME:
+        return files                # none, or an older hashing
     cols = set(manifest.get("bloom_cols") or [])
     bits = manifest.get("bloom_bits") or _BLOOM_DEFAULT_BITS
     hashes = manifest.get("bloom_hashes") or _BLOOM_DEFAULT_HASHES
@@ -519,15 +532,16 @@ def _distinct(values) -> list:
 
 
 def _bloom_build(col: str, values, cfg: dict) -> str:
-    """Bitmap hex of every distinct value's positions, set in a
-    bytearray (an int ``|=`` copies the whole bitmap per bit); "0"
-    when the file has no non-null value."""
-    bits = cfg["bloom_bits"]
-    bm = bytearray((bits + 7) // 8)
-    for pos in _bloom_positions_py(_distinct(values), bits,
-                                   cfg["bloom_hashes"]):
-        bm[pos >> 3] |= 1 << (pos & 7)
-    return f"{int.from_bytes(bm, 'little'):x}"
+    """Bitmap hex of every distinct value's positions (bit p of the
+    hex number is position p); "0" when the file has no non-null
+    value."""
+    import numpy as np
+
+    bm = np.zeros(cfg["bloom_bits"], dtype=np.uint8)
+    bm[_bloom_positions_py(_distinct(values), cfg["bloom_bits"],
+                           cfg["bloom_hashes"]).ravel()] = 1
+    packed = np.packbits(bm, bitorder="little").tobytes()
+    return f"{int.from_bytes(packed, 'little'):x}"
 
 
 # --- NDV sketch sidecars (approximate distinct counts) ---------------------
@@ -618,7 +632,8 @@ _SIDECARS: dict[str, _Sidecar] = {
     "stats": _Sidecar("file_stats", inherit=False),
     "bloom": _Sidecar("file_blooms", inherit=True,
                       params={"bloom_bits": _BLOOM_DEFAULT_BITS,
-                              "bloom_hashes": _BLOOM_DEFAULT_HASHES},
+                              "bloom_hashes": _BLOOM_DEFAULT_HASHES,
+                              "bloom_scheme": _BLOOM_SCHEME},
                       check=_bloom_check, build=_bloom_build),
     "ndv": _Sidecar("file_ndv", inherit=True, check=_ndv_check,
                     build=_ndv_build),
@@ -1218,8 +1233,9 @@ def write_versioned(df: DataFrame | None, path: str,
     min/max, row and null counts (``read_version(where=)`` range
     skipping, :func:`stats_aggregate`; cluster the data on the column
     first or nothing prunes); ``bloom_cols`` — Bloom bitmaps of
-    ``bloom_bits`` bits and ``bloom_hashes`` md5-convention hashes
-    (point-lookup skipping where min/max can't prune; size bits ≈ 10×
+    ``bloom_bits`` bits and ``bloom_hashes`` hashes double-hashed from
+    one md5 per value, recorded as ``bloom_scheme`` (point-lookup
+    skipping where min/max can't prune; size bits ≈ 10×
     the rows per file for ~1% false positives at 4 hashes, a false
     positive only costs a read; partition columns and types whose
     string cast differs from the Python probe are rejected);
@@ -1232,11 +1248,13 @@ def write_versioned(df: DataFrame | None, path: str,
     files are immutable, so a file-reuse commit carries each kept
     file's entries from the carry source when the commit's config of
     that kind equals the source's, and records them unknown (never
-    pruned on) otherwise.  New files get fresh entries from ONE
-    per-file pyarrow kernel (footer facts for stats, the armed
-    columns' values for the sketches): a driver loop for a small
-    commit, which adds no Spark job, else one executor job over the
-    file list (:func:`_new_file_sidecars`).  The private
+    pruned on) otherwise — Bloom bitmaps of a manifest without
+    ``bloom_scheme`` were hashed another way, so they never carry.
+    New files get fresh entries from ONE per-file pyarrow kernel
+    (footer facts for stats, the armed columns' values for the
+    sketches): a driver loop for a small commit, which adds no Spark
+    job, else one executor job over the file list
+    (:func:`_new_file_sidecars`).  The private
     ``_carry_from=(root, manifest)`` swaps the carry source (restore:
     the restored manifest; clone: the source table, entries re-keyed
     root-relative to ``path``).
@@ -2435,7 +2453,13 @@ def verify_versioned(path: str, strict: bool = False) -> list[str]:
                     f"error: version {v} {sk} key {sorted(extra)[:3]}"
                     " not in the snapshot's file list")
             absent = [k for k in (f"{sk}_cols", *sc.params)
-                      if m.get(f"{sk}_file") and not m.get(k)]
+                      if m.get(f"{sk}_file") and not m.get(k)
+                      and k != "bloom_scheme"]
+            if sk == "bloom" and m.get("bloom_file") \
+                    and m.get("bloom_scheme") != _BLOOM_SCHEME:
+                issues.append(
+                    f"note: version {v} Bloom bitmaps are not "
+                    f"{_BLOOM_SCHEME!r}-hashed (never pruned on)")
             if absent:
                 issues.append(
                     f"error: version {v} has a {sk} sidecar but no "
@@ -2728,8 +2752,8 @@ def read_changes(spark: SparkSession, path: str, key: str,
     in the span persisted its change files
     (``merge_versioned(store_changes=True)`` /
     ``write_versioned(changes_df=...)``) under one schema, the feed
-    is served from those files — O(changes) scan + a per-key netting
-    aggregate for multi-commit spans — instead of the O(table)
+    is served from those files — one O(changes) scan + a per-key
+    netting aggregate for multi-commit spans — instead of the O(table)
     two-snapshot diff.  Missing/vacuumed change files or a mid-span
     schema change fall back to the diff automatically (the
     writer-independent path; results are identical by construction
@@ -2755,17 +2779,11 @@ def read_changes(spark: SparkSession, path: str, key: str,
                 raise ValueError(
                     f"read_changes: key {key!r} missing from the "
                     f"stored change schema")
-            frames = [
-                spark.read.schema(schema)
-                .parquet(_changes_dir(path, v))
-                for v in vers
-            ]
             if len(vers) == 1:
-                return frames[0]
-            ev = frames[0].withColumn("_v", F.lit(vers[0]))
-            for v, f in zip(vers[1:], frames[1:]):
-                ev = ev.unionByName(f.withColumn("_v", F.lit(v)))
-            return _net_stored_changes(ev, key)
+                return spark.read.schema(schema).parquet(
+                    _changes_dir(path, vers[0]))
+            return _net_stored_changes(
+                _stored_events(spark, path, vers, schema, "_v"), key)
     old = read_version(spark, path, from_version)
     new = read_version(spark, path, to_version)
     if key not in old.columns or key not in new.columns:
@@ -2821,18 +2839,26 @@ def read_changes_per_commit(spark: SparkSession, path: str, key: str,
         raise ValueError(
             f"read_changes_per_commit: key {key!r} missing from the "
             f"stored change schema")
-    # one scan over every feed dir; the version comes from the
-    # path's own `changes/v=N/` segment (input_file_name is legal
-    # here — single-source plan; the segment never needs
-    # percent-decoding: digits and '=' pass through URI encoding).  A
-    # path without the segment fails naming the path, not as an ANSI
-    # cast error on the empty match.
+    return _stored_events(spark, path, vers, schema, "_commit_version")
+
+
+def _stored_events(spark: SparkSession, path: str, vers: list[int],
+                   schema: T.StructType, vcol: str) -> DataFrame:
+    """The stored change rows of commits ``vers`` as ONE multi-path
+    scan, each row tagged in ``vcol`` with its commit version.  The
+    version comes from the path's own ``changes/v=N/`` segment, not a
+    per-commit literal, so the plan (and its generated code) is the
+    same for every span length (input_file_name is legal here —
+    single-source plan; the segment never needs percent-decoding:
+    digits and '=' pass through URI encoding).  A path without the
+    segment fails naming the path, not as an ANSI cast error on the
+    empty match."""
     ev = spark.read.schema(schema).parquet(
         *[_changes_dir(path, v) for v in vers])
     seg = F.regexp_extract(F.input_file_name(), r"/changes/v=(\d+)/", 1)
-    return ev.withColumn("_commit_version", F.when(
+    return ev.withColumn(vcol, F.when(
         seg != "", seg.cast("long")).otherwise(F.raise_error(F.concat(
-            F.lit("read_changes_per_commit: change file "),
+            F.lit("stored change file "),
             F.input_file_name(),
             F.lit(" is not under a changes/v=N/ directory")))))
 

@@ -746,6 +746,38 @@ class TestUnigram:
             "a", "ark", "arki", "b", "e", "g", "i", "ing", "k", "l", "m",
             "mark", "n", "ng", "p", "park", "r", "s", "spar", "t"]
 
+    def test_usage_tie_at_the_cut_keeps_smaller_pieces(self, spark):
+        """Three pieces tie on usage and the cut keeps two: the
+        (usage desc, piece) order keeps 'ab' and 'cd', not 'ef'."""
+        from filters_spark.functions import text as T
+
+        df = self._df(spark, ["ab cd ef"])
+        assert T.unigram_train(df, seed_size=10, vocab_size=2,
+                               max_piece_len=2, prune_iters=1) == [
+            "a", "ab", "b", "c", "cd", "d", "e", "f"]
+
+    def test_apply_after_train_runs_no_fold_job(self, spark):
+        """The trainer's (word, freq) fold stays cached, so counting
+        pieces right after training runs fewer jobs than the same
+        count with the fold evicted."""
+        from conftest import spark_jobs
+        from filters_spark.functions import text as T
+        from filters_spark.functions._cache import release_caches
+
+        df = self._df(spark, ["spark sparkle park", "bark spar park"])
+
+        def apply():
+            return sorted(map(tuple, T.unigram_token_counts(
+                df, vocab).collect()))
+
+        release_caches()
+        vocab = T.unigram_train(df, seed_size=10, vocab_size=4)
+        after_train, jobs = spark_jobs(spark, apply)
+        release_caches()
+        cold, cold_jobs = spark_jobs(spark, apply)
+        assert after_train == cold
+        assert jobs < cold_jobs, (jobs, cold_jobs)
+
     def test_prune_keeps_used_pieces_only(self, spark):
         from filters_spark.functions import text as T
 
@@ -908,6 +940,14 @@ class TestWordpiece:
         got = {r["piece"]: r["n"] for r in
                text.wordpiece_token_counts(d, vocab).collect()}
         assert got == {"aa": 3}
+
+    def test_score_tie_decided_by_left_symbol(self, spark):
+        """(a, ##d) and (c, ##b) tie on score; the left symbol decides
+        before the right one, so (a, ##d) merges first."""
+        from filters_spark.functions import text
+        d = spark.createDataFrame([("ad ad cb cb",)], "text string")
+        assert text.wordpiece_train(d, n_merges=3) == [
+            (1, "a", "##d", 2, 2, 2), (2, "c", "##b", 2, 2, 2)]
 
     def test_vocab_after_train_runs_no_fold_job(self, spark):
         """The trainer's (word, freq) fold survives its own merge

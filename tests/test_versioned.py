@@ -939,6 +939,24 @@ class TestStoredChanges:
         # retained span still serves stored
         assert V._stored_chain(tpath, 3, 4) is not None
 
+    def test_long_stored_span_plans_one_scan(self, spark, tpath):
+        """A 20-commit stored span nets from ONE scan of its change
+        directories: no per-commit union branch, no per-version
+        literal in the plan."""
+        rows = [(0, "a", 0)]
+        V.write_versioned(_df(spark, rows), tpath)
+        for i in range(1, 21):
+            rows.append((i, f"v{i}", i))
+            feed = spark.createDataFrame(
+                [("insert", i, i, f"v{i}")],
+                "_change_type string, k bigint, n bigint, val string")
+            V.write_versioned(_df(spark, rows), tpath, changes_df=feed)
+        ch = V.read_changes(spark, tpath, "k", 1)
+        assert ch._jdf.queryExecution().optimizedPlan() \
+            .collectLeaves().size() == 1
+        stored, diff = self._both(spark, tpath, 1, 21)
+        assert stored == diff
+
     def test_consume_changes_rides_stored_path(self, spark, tpath,
                                                tmp_path):
         cur = str(tmp_path / "cursor")
@@ -1964,6 +1982,121 @@ class TestBloomSkipping:
             got = V.read_version(spark, t, where=("k", k, k)).where(
                 F.col("k") == k).count()
             assert got == 1, k
+
+    @pytest.mark.parametrize("hashes", [3, 4, 7])
+    def test_never_wrong_prunes_any_hash_count(self, spark, tmp_path,
+                                               hashes):
+        """Every key of every file keeps that file, at any hash count
+        (exhaustive over random keys, at the driver), while absent
+        keys still prune."""
+        import random
+
+        import pyarrow.parquet as pq
+
+        keys = random.Random(hashes).sample(range(10 ** 12), 3000)
+        t = str(tmp_path / "t")
+        V.write_versioned(
+            spark.createDataFrame([(k, k % 13) for k in keys],
+                                  "k bigint, v bigint")
+            .repartition(6, "v"), t, bloom_cols=["k"],
+            bloom_bits=8192, bloom_hashes=hashes)
+        m = V._read_manifest(t, 1)
+        assert m["bloom_hashes"] == hashes
+        files = sorted(V.load_file_blooms(m))
+        for f in files:
+            for k in pq.read_table(os.path.join(V._snap_dir(t, 1), f),
+                                   columns=["k"])["k"].to_pylist():
+                assert f in V.bloom_prune_files(m, ("k", k, k), files), \
+                    (f, k)
+        kept = sum(len(V.bloom_prune_files(m, ("k", -k, -k), files))
+                   for k in range(1, 301))
+        assert kept < 0.1 * 300 * len(files)
+
+    def test_bitmap_literal_and_sql_replay(self, spark):
+        """A fixed key set's bitmap is pinned literally, and every
+        position replays in Spark SQL from one md5 per key:
+        (h1 + i·h2) mod bits over its first two 32-bit words."""
+        import pyarrow as pa
+
+        keys = [1, 2, 3, 42]
+        cfg = {"bloom_bits": 256, "bloom_hashes": 4}
+        assert V._bloom_build("k", pa.array(keys + [None, 2]), cfg) == (
+            "1010000000000444000000000200055000000200800001140000000008000")
+        h = "cast(conv(substr(md5(cast(k AS string)), {}, 8), 16, 10) " \
+            "AS bigint)"
+        sql = spark.createDataFrame([(k,) for k in keys], "k bigint") \
+            .selectExpr("k", "transform(sequence(0, 3), i -> pmod("
+                        f"{h.format(1)} + i * {h.format(9)}, 256)) AS p")
+        want = V._bloom_positions_py(keys, 256, 4).tolist()
+        assert [r["p"] for r in sql.orderBy("k").collect()] == want
+
+    def test_one_md5_per_distinct_value(self, monkeypatch):
+        import hashlib
+
+        import pyarrow as pa
+
+        real, calls = hashlib.md5, []
+
+        def counted(*a, **kw):
+            calls.append(1)
+            return real(*a, **kw)
+
+        monkeypatch.setattr(hashlib, "md5", counted)
+        V._bloom_build("k", pa.array([5, 1, 5, None, 2, 1, 9]),
+                       {"bloom_bits": 1024, "bloom_hashes": 7})
+        assert len(calls) == 4
+
+    def test_false_positive_rate_matches_theory(self):
+        """15k keys in 65,536 bits at 4 hashes: the measured
+        false-positive rate is within 1.2× of (1 − e^(−kn/m))^k."""
+        import math
+
+        import numpy as np
+        import pyarrow as pa
+
+        n, bits, k = 15_000, 65_536, 4
+        hexmap = V._bloom_build("k", pa.array(range(n)),
+                                {"bloom_bits": bits, "bloom_hashes": k})
+        bm = np.unpackbits(np.frombuffer(
+            int(hexmap, 16).to_bytes(bits // 8, "little"), np.uint8),
+            bitorder="little")
+        probes = list(range(10 ** 9, 10 ** 9 + 200_000))
+        fp = bm[V._bloom_positions_py(probes, bits, k)].all(axis=1).mean()
+        theory = (1 - math.exp(-k * n / bits)) ** k
+        assert theory / 1.2 <= fp <= theory * 1.2, (fp, theory)
+
+    def test_scheme_less_manifest_is_untrusted(self, spark, tmp_path):
+        """Bitmaps of a manifest without ``bloom_scheme`` were hashed
+        another way: they prune nothing, verify notes them (no error),
+        and a copy-on-write commit records the carried files' entries
+        unknown while its new files get trusted bitmaps."""
+        import json
+
+        t = self._mk(spark, tmp_path)
+        mpath = os.path.join(V._manifest_dir(t), "1.json")
+        with open(mpath) as fh:
+            raw = json.load(fh)
+        del raw["bloom_scheme"]
+        with open(mpath, "w") as fh:
+            json.dump(raw, fh)
+        m = V._read_manifest(t, 1)
+        files = list(V.load_file_blooms(m))
+        assert V.bloom_prune_files(
+            m, ("k", 123_456_789, 123_456_789), files) == files
+        issues = V.verify_versioned(t)
+        assert any("never pruned on" in i for i in issues), issues
+        assert not [i for i in issues if i.startswith("error")], issues
+        V.delete_where(spark, t, F.col("v") == 3)
+        m2 = V._read_manifest(t, 2)
+        assert m2["bloom_scheme"] == V._BLOOM_SCHEME
+        bl = V.load_file_blooms(m2)
+        carried = [b for f, b in bl.items() if f.startswith("snap/v=1/")]
+        fresh = [b for f, b in bl.items() if f.startswith("snap/v=2/")]
+        assert len(carried) >= 6
+        assert all(b == {"k": None} for b in carried)
+        assert fresh and all(b["k"] is not None for b in fresh)
+        assert V.read_version(spark, t, where=("k", 4242, 4242)).where(
+            F.col("k") == 4242).count() == 1
 
     def test_range_predicates_ignore_bloom(self, spark, tmp_path):
         """Bloom only fires on lo == hi points — a RANGE through
