@@ -11,11 +11,16 @@ staged-swap discipline of ``retrieval.compact_postings`` /
 
 ```
 path/
-  snap/v=N/                immutable parquet data files for snapshot N
-  changes/v=N/             optional stored change files for commit N
-  _manifests/N.json        {version, parent, op, schema_json, n_files}
-  _manifests/N.stats.json  per-file min/max sidecar (lazy; O(files))
-  _latest                  text pointer to the current version (atomic)
+  snap/v=N/                 immutable parquet data files for snapshot N
+  changes/v=N/              optional stored change files for commit N
+  dv/v=N/                   optional delete vectors of commit N
+                            ((_file, <key>) rows, merge-on-read)
+  _manifests/N.json         {version, parent, op, schema_json, n_files}
+  _manifests/N.<kind>.json  per-file sidecar of one _SIDECARS kind
+                            (stats, bloom, ndv, hdr; lazy, O(files))
+  _manifests/N.claim        a writer's claim on version N (O_EXCL)
+  _manifests/head.P.claim   the claim on the head transition from P
+  _latest                   text pointer to the current version (atomic)
 ```
 
 Commit protocol (single pointer flip — the only mutation readers can
@@ -55,6 +60,7 @@ rename — the single-pointer design makes that swap local to
 from __future__ import annotations
 
 import json
+import operator
 import os
 import re
 from concurrent.futures import ThreadPoolExecutor
@@ -86,9 +92,6 @@ __all__ = [
     "version_as_of",
     "vacuum_versioned",
     "prune_files",
-    "load_file_stats",
-    "load_file_blooms",
-    "bloom_prune_files",
     "apply_delete_vectors",
     "stats_aggregate",
     "StatsInsufficient",
@@ -150,8 +153,8 @@ def _load_manifest(path: str, version: int) -> dict | None:
             manifest = json.load(fh)
     except FileNotFoundError:
         return None
-    # private back-pointer so prune_files can resolve the stats
-    # sidecar lazily from a bare manifest dict (never serialized)
+    # private back-pointer so _load_sidecar can resolve a sidecar
+    # lazily from a bare manifest dict (never serialized)
     manifest["_manifest_dir"] = _manifest_dir(path)
     return manifest
 
@@ -315,9 +318,9 @@ def _partition_value(relpath: str, col: str, dtype: str | None = None):
 _STATS_DRIVER_MAX = 64
 
 #: ... and only while the new files' footer row count × armed sketch
-#: cells per row (a Bloom column counts one cell per hash, an NDV
-#: or HDR column one cell) stays under this cap: past it one executor
-#: job over the file list is faster than the driver loop.
+#: columns (one cell per row each) stays under this cap: past it one
+#: executor job over the file list is faster than the driver loop
+#: (SCALE.md §39).
 _SIDECAR_DRIVER_CELLS = 200_000
 
 
@@ -343,8 +346,8 @@ def _footer_stats(abs_path: str, cols: list[str], md=None) -> dict:
         # files and string-typing it above).  bytes min/max are
         # unusable (truncated statistics); date/Decimal/datetime
         # become their str() form — ISO strings order like their
-        # values, and a typed predicate bound hits prune_files'
-        # conservative TypeError keep.
+        # values, and a typed predicate bound compares as unknown
+        # (_range_rule): the file is kept, never wrongly pruned.
         if v is None or isinstance(v, (bool, int, float, str)):
             return v
         if isinstance(v, bytes):
@@ -454,45 +457,18 @@ def _bloom_positions_py(values: list, bits: int, hashes: int):
         % bits
 
 
-def _bloom_member(hexmap: str, value, bits: int, hashes: int) -> bool:
+def _bloom_prune(hexmap: str, lo, hi, manifest: dict) -> bool:
+    """The bloom row's prune rule: may a file with bitmap ``hexmap``
+    hold a row in ``[lo, hi]``?  Only a POINT (``lo == hi``, non-null)
+    can say no, and only under the current ``bloom_scheme`` (bitmaps
+    hashed some other way would skip files that hold the key)."""
+    if lo is None or lo != hi \
+            or manifest.get("bloom_scheme") != _BLOOM_SCHEME:
+        return True
     bm = int(hexmap, 16)
-    return all((bm >> int(p)) & 1 for p in
-               _bloom_positions_py([value], bits, hashes)[0])
-
-
-def load_file_blooms(manifest: dict) -> dict | None:
-    """Per-file Bloom bitmaps, resolving the lazy ``bloom_file``
-    sidecar (mirrors :func:`load_file_stats`)."""
-    return _load_sidecar(manifest, "bloom")
-
-
-def bloom_prune_files(manifest: dict, where, files: list) -> list:
-    """Intersect ``files`` with Bloom membership for every POINT
-    predicate (``lo == hi``, non-null) in ``where`` whose column has
-    bitmaps.  Files without a bitmap for the column are kept
-    (conservative, like unknown min/max), and so is every file of a
-    manifest whose ``bloom_scheme`` is not the current one (bitmaps
-    hashed some other way would skip files that hold the key).  Pure
-    driver arithmetic — no job, no Spark session."""
-    blooms = load_file_blooms(manifest)
-    if not blooms or manifest.get("bloom_scheme") != _BLOOM_SCHEME:
-        return files                # none, or an older hashing
-    cols = set(manifest.get("bloom_cols") or [])
-    bits = manifest.get("bloom_bits") or _BLOOM_DEFAULT_BITS
-    hashes = manifest.get("bloom_hashes") or _BLOOM_DEFAULT_HASHES
-    points = [(c, lo) for (c, lo, hi) in
-              (where if isinstance(where, list) else [where])
-              if c in cols and lo is not None and lo == hi]
-    if not points:
-        return files
-    kept = []
-    for f in files:
-        fb = blooms.get(f) or {}
-        if all(fb.get(c) is None
-               or _bloom_member(fb[c], v, bits, hashes)
-               for c, v in points):
-            kept.append(f)
-    return kept
+    return all((bm >> int(p)) & 1 for p in _bloom_positions_py(
+        [lo], manifest.get("bloom_bits") or _BLOOM_DEFAULT_BITS,
+        manifest.get("bloom_hashes") or _BLOOM_DEFAULT_HASHES)[0])
 
 
 def _str_cast_check(kind: str, cols: list[str], schema: T.StructType,
@@ -610,31 +586,58 @@ def _hdr_build(col: str, values, cfg: dict) -> dict:
     return out
 
 
+def _range_rule(rng, lo, hi) -> str:
+    """How a file's ``[min, max]`` stats range sits against the
+    predicate range ``[lo, hi]`` (inclusive; a None bound is open):
+    ``"disjoint"``, ``"inside"``, ``"partial"`` or ``"unknown"`` — no
+    range, or a bound whose type does not compare with the stored one
+    (an ISO-string date range against a ``date`` bound): unknowable,
+    never empty (ADVICE r8)."""
+    if rng is None:
+        return "unknown"
+    fmin, fmax = rng
+    try:
+        if (lo is not None and fmax < lo) or (hi is not None and fmin > hi):
+            return "disjoint"
+        if (lo is not None and fmin < lo) or (hi is not None and fmax > hi):
+            return "partial"
+    except TypeError:
+        return "unknown"
+    return "inside"
+
+
 class _Sidecar(NamedTuple):
     """One sidecar kind.  The manifest names it ``<kind>_file``
     (``_manifests/<v>.<kind>.json``) and arms it with ``<kind>_cols``
-    plus ``params`` (extra config keys → defaults)."""
+    plus ``params`` (extra config keys → defaults).  ``prune`` is the
+    kind's file-skipping rule for :func:`prune_files`: given a file's
+    known entry for a predicate column, the predicate's bounds and the
+    manifest, False means the file holds no matching row."""
     inline: str                  # manifest key of the parsed sidecar
     inherit: bool                # config is a table property
     params: dict = {}
     check: Callable | None = None     # (cols, partition_by, schema)
     build: Callable | None = None     # (col, values, cfg) -> entry;
     #                                   None: parquet footer facts
+    prune: Callable | None = None     # (entry, lo, hi, manifest) -> bool
 
 
-#: The sidecar spec table, one row per kind: loading,
-#: root re-keying, carrying, building and verification all iterate it.
+#: The sidecar spec table, one row per kind: loading, root re-keying,
+#: carrying, building, file skipping and verification all iterate it.
 #: ``stats`` is per-commit explicit and read from parquet footers; the
 #: sketch kinds are table properties built from a file's column values
 #: by the row's ``build``.  One per-file kernel (:func:`_file_sidecars`)
 #: serves every kind.
 _SIDECARS: dict[str, _Sidecar] = {
-    "stats": _Sidecar("file_stats", inherit=False),
+    "stats": _Sidecar("file_stats", inherit=False,
+                      prune=lambda rng, lo, hi, _m:
+                      _range_rule(rng, lo, hi) != "disjoint"),
     "bloom": _Sidecar("file_blooms", inherit=True,
                       params={"bloom_bits": _BLOOM_DEFAULT_BITS,
                               "bloom_hashes": _BLOOM_DEFAULT_HASHES,
                               "bloom_scheme": _BLOOM_SCHEME},
-                      check=_bloom_check, build=_bloom_build),
+                      check=_bloom_check, build=_bloom_build,
+                      prune=_bloom_prune),
     "ndv": _Sidecar("file_ndv", inherit=True, check=_ndv_check,
                     build=_ndv_build),
     "hdr": _Sidecar("file_hdr", inherit=True, build=_hdr_build),
@@ -660,15 +663,21 @@ def _load_sidecar(manifest: dict, kind: str) -> dict | None:
     return ents
 
 
+def _root_prefix(manifest: dict) -> str:
+    """What makes a manifest's sidecar keys TABLE-ROOT-relative:
+    nothing for an explicit ``data_files`` list (the file-reuse
+    keying), else the snapshot directory."""
+    if manifest.get("data_files") is not None:
+        return ""
+    return f"snap/v={manifest['version']}/"
+
+
 def _root_sidecar(manifest: dict, kind: str) -> dict:
     """A snapshot's per-file ``kind`` entries re-keyed TABLE-ROOT-
-    relative (the file-reuse sidecar keying), empty when none
-    recorded."""
-    ents = _load_sidecar(manifest, kind) or {}
-    if manifest.get("data_files") is not None:
-        return dict(ents)
-    v = manifest["version"]
-    return {f"snap/v={v}/{k}": e for k, e in ents.items()}
+    relative, empty when none recorded."""
+    pre = _root_prefix(manifest)
+    return {pre + k: e for k, e in
+            (_load_sidecar(manifest, kind) or {}).items()}
 
 
 def _sidecar_config(kind: str, asked: dict, source: dict) -> dict | None:
@@ -729,7 +738,7 @@ def _new_file_sidecars(snap: str, files: list[str], armed: dict,
 
     Placement, one rule for every kind: a driver loop (no Spark job)
     for ≤ :data:`_STATS_DRIVER_MAX` files whose footer rows × armed
-    sketch cells per row stay under :data:`_SIDECAR_DRIVER_CELLS`;
+    sketch columns stay under :data:`_SIDECAR_DRIVER_CELLS`;
     otherwise ONE executor job over the file list, each task running
     the same kernel — the collect is one small (file, json) row per
     file, so a 100k-file commit costs one short parallel job instead
@@ -742,8 +751,8 @@ def _new_file_sidecars(snap: str, files: list[str], armed: dict,
         per_file["stats"] = {"stats_cols": [
             c for c in armed["stats"]["stats_cols"]
             if c not in partition_by]}
-    cells = sum(len(cfg[f"{k}_cols"]) * cfg.get("bloom_hashes", 1)
-                for k, cfg in per_file.items() if _SIDECARS[k].build)
+    cells = sum(len(cfg[f"{k}_cols"]) for k, cfg in per_file.items()
+                if _SIDECARS[k].build)
     got: dict = {}
     if files and any(cfg[f"{k}_cols"] for k, cfg in per_file.items()):
         if spark is None or len(files) <= _STATS_DRIVER_MAX and (
@@ -982,54 +991,53 @@ def stats_aggregate(spark: SparkSession, path: str,
                 return _fallback(
                     f"file {f!r} lacks a range/null-count for "
                     f"{col!r}")
-            fmin, fmax = rng
-            if (lo is not None and fmax < lo) or \
-                    (hi is not None and fmin > hi):
-                continue                     # provably disjoint
-            if (lo is not None and fmin < lo) or \
-                    (hi is not None and fmax > hi):
+            rule = _range_rule(rng, lo, hi)
+            if rule == "disjoint":
+                continue
+            if rule == "partial":
                 return _fallback(
                     f"file {f!r} only partially overlaps the "
                     "predicate — its rows need reading")
+            if rule == "unknown":
+                return _fallback(
+                    f"file {f!r}'s {col!r} range does not compare "
+                    "with the predicate's bounds")
             count_files.append(f)            # fully contained
     else:
         count_files = files
-    ndv_regs = None
-    hdr_buckets = None
+
+    def merged(kind: str, col: str, what: str, merge: Callable):
+        """Every file's ``kind`` entry for ``col`` folded bucket by
+        bucket with ``merge`` — ``(merged, None)``, or ``(None, why)``
+        when some file has no entry (the scan path must answer)."""
+        ents = _root_sidecar(m, kind)
+        acc: dict = {}
+        for f in files:
+            e = (ents.get(f) or {}).get(col)
+            if e is None:
+                return None, (f"file {f!r} has no {what} for {col!r} "
+                              f"(commit with {kind}_cols=[{col!r}])")
+            for b, x in e.items():
+                acc[b] = merge(acc[b], x) if b in acc else x
+        return acc, None
+
     row: dict = {}
     out_fields: list[T.StructField] = []
     for fn, col, alias in aggs:
         if fn == "approx_quantile":
             cname, qn, qd = col
-            if hdr_buckets is None:
-                hdr_buckets = _root_sidecar(m, "hdr")
-            merged_h: dict = {}
-            for f in files:
-                b = (hdr_buckets.get(f) or {}).get(cname)
-                if b is None:
-                    return _fallback(
-                        f"file {f!r} has no HDR buckets for "
-                        f"{cname!r} (commit with hdr_cols="
-                        f"[{cname!r}])")
-                for key, n in b.items():
-                    merged_h[key] = merged_h.get(key, 0) + int(n)
-            row[alias] = _hdr_quantile_py(merged_h, int(qn), int(qd))
+            buckets, why = merged("hdr", cname, "HDR buckets",
+                                  operator.add)
+            if why:
+                return _fallback(why)
+            row[alias] = _hdr_quantile_py(buckets, int(qn), int(qd))
             out_fields.append(T.StructField(alias, T.LongType()))
             continue
         if fn == "approx_ndv":
-            if ndv_regs is None:
-                ndv_regs = _root_sidecar(m, "ndv")
-            merged: dict = {}
-            for f in files:
-                regs = (ndv_regs.get(f) or {}).get(col)
-                if regs is None:
-                    return _fallback(
-                        f"file {f!r} has no NDV registers for "
-                        f"{col!r} (commit with ndv_cols=[{col!r}])")
-                for b, r in regs.items():
-                    if merged.get(b, -1) < r:
-                        merged[b] = r
-            row[alias] = _hll_estimate_py(merged) if files else 0.0
+            regs, why = merged("ndv", col, "NDV registers", max)
+            if why:
+                return _fallback(why)
+            row[alias] = _hll_estimate_py(regs) if files else 0.0
             out_fields.append(T.StructField(alias, T.DoubleType()))
             continue
         if fn == "count":
@@ -1149,8 +1157,11 @@ def _read_files(spark: SparkSession, path: str, manifest: dict,
         empty = _local_frame(spark, [], schema)
         return empty.withColumn(file_col, F.lit("")) if file_col \
             else empty
-    raw = spark.read.schema(schema).parquet(
-        *[os.path.join(path, f) for f in files])
+    reader = spark.read.schema(schema)
+    if manifest.get("partition_by"):    # Hive columns from the paths
+        reader = reader.option(
+            "basePath", _snap_dir(path, manifest["version"]))
+    raw = reader.parquet(*[os.path.join(path, f) for f in files])
     if file_col:
         raw = raw.withColumn(file_col, F.input_file_name())
     return apply_delete_vectors(spark, path, manifest, raw,
@@ -1178,7 +1189,6 @@ def write_versioned(df: DataFrame | None, path: str,
                     bloom_bits: int | None = None,
                     bloom_hashes: int | None = None,
                     dv_df: DataFrame | None = None,
-                    dv_key: str | None = None,
                     dv_dirs: list[int] | None = None,
                     ndv_cols: list[str] | None = None,
                     hdr_cols: list[str] | None = None,
@@ -1260,11 +1270,14 @@ def write_versioned(df: DataFrame | None, path: str,
     root-relative to ``path``).
 
     DELETE VECTORS (merge-on-read): ``dv_df`` — a ``(_file string,
-    <dv_key>)`` frame of per-file deleted keys — is written as this
+    <key>)`` frame of per-file deleted keys — is written as this
     commit's DV parquet dir (``dv/v=N/``, executor-side like
     ``changes_df``, committed with the snapshot) and appended to the
     manifest's live ``dv_dirs`` list; readers anti-join them in
-    (:func:`apply_delete_vectors`).  ``dv_dirs`` overrides the live
+    (:func:`apply_delete_vectors`).  The manifest's ``dv_key`` is
+    ``dv_df``'s key column, else the carry source's; a table has one
+    key, so a ``dv_df`` keyed otherwise than the live vectors it joins
+    fails before anything is written.  ``dv_dirs`` overrides the live
     list explicitly (``[]`` resets — the restore path); when omitted,
     FILE-REUSE commits INHERIT the parent's (carried files still
     contain the deleted rows — dropping the vectors would resurrect
@@ -1318,6 +1331,28 @@ def write_versioned(df: DataFrame | None, path: str,
     flipped = False
     try:
         snap = _snap_dir(path, version)
+        # delete vectors: validate BEFORE the async write starts
+        if dv_dirs is None and reuse_files is not None:
+            dv_dirs = pm.get("dv_dirs")     # carried files keep theirs
+        dv_key = src_m.get("dv_key")
+        if dv_df is not None:
+            if partition_by:
+                raise ValueError(
+                    "write_versioned: delete vectors require a flat "
+                    "layout (the file-tail binding breaks across "
+                    "partition directories)")
+            keys = [c for c in dv_df.columns if c != "_file"]
+            if len(keys) != 1 or len(keys) == len(dv_df.columns):
+                raise ValueError(
+                    "write_versioned: dv_df must be a (_file, <key>) "
+                    f"frame, got columns {dv_df.columns}")
+            if dv_dirs and keys[0] != dv_key:
+                raise ValueError(
+                    f"write_versioned: dv_df key {keys[0]!r} differs "
+                    f"from the table's live delete-vector key {dv_key!r}"
+                    " — one key per table (fold the existing vectors "
+                    "with optimize_versioned first)")
+            dv_key = keys[0]
         # The commit's SIDE WRITES (stored change feed, delete-vector
         # sidecar) are independent of the main snapshot write — kick
         # them off on driver threads so their jobs overlap the main
@@ -1327,17 +1362,6 @@ def write_versioned(df: DataFrame | None, path: str,
         # manifest (the atomic commit point) is written only after
         # every future joins, so crash semantics are unchanged —
         # nothing is visible until the head flip.
-        if dv_df is not None:
-            # validate BEFORE the async write starts (fail-fast
-            # semantics unchanged)
-            if partition_by:
-                raise ValueError(
-                    "write_versioned: delete vectors require a flat "
-                    "layout (the file-tail binding breaks across "
-                    "partition directories)")
-            if dv_key is None:
-                raise ValueError(
-                    "write_versioned: dv_df requires dv_key")
         if changes_df is not None or dv_df is not None:
             _pool = ThreadPoolExecutor(max_workers=2)
             if changes_df is not None:
@@ -1416,18 +1440,6 @@ def write_versioned(df: DataFrame | None, path: str,
             manifest[f"{kind}_file"] = name
             manifest.update(cfg)
         # --- delete vectors (merge-on-read) --------------------------
-        if dv_dirs is None and reuse_files is not None:
-            dv_dirs = pm.get("dv_dirs")
-            if dv_dirs:
-                if dv_key is None:
-                    dv_key = pm.get("dv_key")
-                elif dv_key != pm.get("dv_key"):
-                    raise ValueError(
-                        "write_versioned: dv_key "
-                        f"{dv_key!r} differs from the table's live "
-                        f"delete-vector key {pm.get('dv_key')!r} — "
-                        "one key per table (fold the existing vectors "
-                        "with optimize_versioned first)")
         if dv_df is not None:
             _dfut.result()               # join the overlapped write
             dv_dirs = sorted(set(list(dv_dirs or []) + [version]))
@@ -1512,59 +1524,34 @@ def write_versioned(df: DataFrame | None, path: str,
     return version
 
 
-def load_file_stats(manifest: dict) -> dict | None:
-    """Per-file stats for a manifest, resolving the lazy SIDECAR
-    (``stats_file``) written by :func:`write_versioned` — the
-    manifest itself stays O(1) in file count; only ``where=`` readers
-    pay the O(files) parse.  Inline ``file_stats`` (pre-sidecar
-    manifests, hand-built dicts) still work.  None when the snapshot
-    recorded no stats or the sidecar is gone."""
-    return _load_sidecar(manifest, "stats")
-
-
 def prune_files(manifest: dict, where) -> list | None:
     """Data-skipping file selection: ``where = (col, lo, hi)``
-    (inclusive; ``None`` bound = open) against the manifest's
-    per-file stats — or a LIST of such triples, pruned as a
-    CONJUNCTION (a file survives only if every predicate's range
-    intersects; one skippable axis is enough to prune even when
-    another has no stats).  Returns the file names that MAY contain
-    matching rows (a conservative superset — the caller still applies
-    the real filter), or ``None`` when no predicate has stats (no
-    pruning possible)."""
-    if isinstance(where, list):
-        kept: list | None = None
-        for w in where:
-            k = prune_files(manifest, w)
-            if k is None:
-                continue
-            kept = k if kept is None else [f for f in kept
-                                           if f in set(k)]
-        return kept
-    col, lo, hi = where
-    stats = load_file_stats(manifest)
-    if not stats:
-        return None
-    keep = []
-    any_stats = False
-    for name, cols in stats.items():
-        rng = cols.get(col)
-        if rng is None:
-            keep.append(name)               # unknown range: must read
-            continue
-        any_stats = True
-        fmin, fmax = rng
-        try:
-            if (lo is not None and fmax is not None and fmax < lo) or \
-                    (hi is not None and fmin is not None and fmin > hi):
-                continue
-        except TypeError:
-            # mixed-type comparison (stat type vs predicate bound type
-            # drift): the range is UNKNOWABLE, not empty — keep the
-            # file rather than crash or wrongly prune (ADVICE r8)
-            pass
-        keep.append(name)
-    return keep if any_stats else None
+    (inclusive; ``None`` bound = open), or a LIST of such triples
+    pruned as a CONJUNCTION, against every sidecar kind whose
+    :data:`_SIDECARS` row has a ``prune`` rule (min/max ranges, Bloom
+    points).  A file is dropped when some kind holds a known entry for
+    a predicate's column that excludes it — one skippable axis prunes
+    even when another has no entry.  Returns the names (keyed as the
+    manifest's sidecars are) of the files that MAY hold matching rows
+    — a conservative superset, the caller still applies the real
+    filter — or ``None`` when no kind holds an entry for any predicate
+    column (no pruning possible)."""
+    rules = [(sc.prune, ents) for kind, sc in _SIDECARS.items()
+             if sc.prune is not None
+             and (ents := _load_sidecar(manifest, kind))]
+    known = False
+    kept = []
+    for f in dict.fromkeys(f for _r, ents in rules for f in ents):
+        keep = True
+        for col, lo, hi in where if isinstance(where, list) else [where]:
+            for prune, ents in rules:
+                entry = (ents.get(f) or {}).get(col)
+                if entry is not None:
+                    known = True
+                    keep = keep and prune(entry, lo, hi, manifest)
+        if keep:
+            kept.append(f)
+    return kept if known else None
 
 
 def _retained_files(path: str, manifest: dict) -> list[str]:
@@ -1605,13 +1592,15 @@ def read_version(spark: SparkSession, path: str,
     inference — and readers are immune to parquet footer drift.
 
     ``where = (col, lo, hi)`` — or a list of such triples, applied as
-    a conjunction — enables FILE SKIPPING against the manifest's
-    :func:`write_versioned` ``stats_cols`` ranges: only
-    files whose [min, max] intersects [lo, hi] are read (explicit
-    paths — at 100 TB this is planning-time pruning, before any task
-    launches).  The result is a conservative SUPERSET of matching
-    rows; apply the actual filter on top.  Tables written without
-    stats read fully (correct, unpruned)."""
+    a conjunction — enables FILE SKIPPING through :func:`prune_files`:
+    a file is skipped when its ``stats_cols`` [min, max] misses
+    [lo, hi], or, for a point (lo == hi), when its ``bloom_cols``
+    bitmap lacks the value.  The kept files are read as explicit paths
+    (at 100 TB this is planning-time pruning, before any task
+    launches); a snapshot directory nothing was pruned from is read
+    whole.  The result is a conservative SUPERSET of matching rows;
+    apply the actual filter on top.  Tables written without sidecars
+    read fully (correct, unpruned)."""
     if as_of is not None:
         if version is not None:
             raise ValueError(
@@ -1622,37 +1611,18 @@ def read_version(spark: SparkSession, path: str,
         if version is None:
             raise ValueError(f"versioned table {path!r} has no snapshots")
     manifest = _read_manifest(path, version)
-    schema = _schema(manifest)
-    snap = _snap_dir(path, version)
     files = _retained_files(path, manifest)
-    if manifest.get("data_files") is not None:
-        # file-reuse commit: the manifest's explicit TABLE-ROOT-
-        # relative list IS the snapshot (files may live in ancestor
-        # snapshot dirs).  No basePath: these are flat layouts, and a
-        # basePath above snap/ would misread v=N as a partition col.
-        if where is not None:
-            kept = prune_files(manifest, where)
-            if kept is not None:
-                files = kept
-            files = bloom_prune_files(manifest, where, files)
-        return _read_files(spark, path, manifest, files)
-    if where is not None:
-        files = prune_files(manifest, where)
-        if files is None and load_file_blooms(manifest):
-            files = _data_files(snap)       # bloom-only pruning
-        if files is not None:
-            files = bloom_prune_files(manifest, where, files)
-            if not files:
-                return _local_frame(spark, [], schema)
-            # basePath keeps Hive partition columns resolvable when
-            # reading explicit pruned paths (no-op for flat snapshots)
-            return apply_delete_vectors(
-                spark, path, manifest,
-                spark.read.option("basePath", snap)
-                .schema(schema).parquet(
-                    *[os.path.join(snap, f) for f in files]))
-    return apply_delete_vectors(
-        spark, path, manifest, spark.read.schema(schema).parquet(snap))
+    kept = files
+    if where is not None \
+            and (names := prune_files(manifest, where)) is not None:
+        pre = _root_prefix(manifest)
+        names = {pre + f for f in names}
+        kept = [f for f in files if f in names]
+    if manifest.get("data_files") is None and len(kept) == len(files):
+        return apply_delete_vectors(
+            spark, path, manifest, spark.read.schema(_schema(manifest))
+            .parquet(_snap_dir(path, version)))
+    return _read_files(spark, path, manifest, kept)
 
 
 def _fp(cols: list) -> Column:
@@ -1890,7 +1860,7 @@ def _row_commit(spark: SparkSession, path: str, m: dict, mode: str, *,
             _op=op, extra_meta=extra_meta, changes_df=changes,
             stats_cols=m.get("stats_cols"),
             partition_by=m.get("partition_by"), reuse_files=reuse,
-            dv_df=dv_df, dv_key=key if mode == "mor" else None)
+            dv_df=dv_df)
     finally:
         if mode == "mor":
             hits.unpersist()
@@ -2268,7 +2238,7 @@ def _carry(spark: SparkSession, src: str, m: dict, dst: str, *,
     dvs = m.get("dv_dirs") or []
     v = write_versioned(
         None, dst, reuse_files=[_rebase(src, dst, f) for f in files],
-        dv_dirs=dvs if same else [], dv_key=m.get("dv_key"),
+        dv_dirs=dvs if same else [],
         dv_df=_read_dv(spark, src, m) if dvs and not same else None,
         **common)
     return {"version": v, "files_reused": len(files),
@@ -3093,10 +3063,8 @@ def optimize_versioned(spark: SparkSession, path: str,
         packed = _read_files(spark, path, m, small).repartition(
             min(n_files, len(small)))
         dv_df = None
-        dv_key = None
         dv_dirs_override = None
         if m.get("dv_dirs"):
-            dv_key = m.get("dv_key")
             dv_dirs_override = []
             live = _read_dv(spark, path, m).where(F.col("_file").isin(
                 [re.search(_DV_TAIL, f).group(1) for f in big]))
@@ -3107,7 +3075,7 @@ def optimize_versioned(spark: SparkSession, path: str,
             extra_meta={"compacted": len(small), "carried": len(big)},
             stats_cols=stats_cols if stats_cols is not None
             else m.get("stats_cols"),
-            reuse_files=big, dv_df=dv_df, dv_key=dv_key,
+            reuse_files=big, dv_df=dv_df,
             dv_dirs=dv_dirs_override)
     df = read_version(spark, path, head)
     if zorder:

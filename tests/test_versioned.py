@@ -122,7 +122,7 @@ class TestCommitProtocol:
         bad_dv = nxt.select(F.lit("x").alias("_file"), boom("dv boom"))
         with pytest.raises(Exception, match="feed-write boom") as ei:
             V.write_versioned(nxt, tpath, changes_df=bad_feed,
-                              reuse_files=[], dv_df=bad_dv, dv_key="k")
+                              reuse_files=[], dv_df=bad_dv)
         assert any("dv boom" in n
                    for n in getattr(ei.value, "__notes__", []))
         assert V.latest_version(tpath) == 1
@@ -163,11 +163,30 @@ class TestCommitProtocol:
         dv = nxt.select(F.lit("x").alias("_file"), "k")
         with pytest.raises(Exception, match="main-write boom"):
             V.write_versioned(bad, tpath, changes_df=feed, reuse_files=[],
-                              dv_df=dv, dv_key="k", stats_cols=["k"])
+                              dv_df=dv, stats_cols=["k"])
         self._reclaimed(tpath, 2)
         assert V.write_versioned(nxt, tpath, changes_df=feed) == 2
         assert sorted(r["k"] for r in
                       V.read_version(spark, tpath).collect()) == [1, 3]
+
+    def test_second_dv_key_fails_before_any_write(self, spark, tpath):
+        """A table has one delete-vector key: a ``dv_df`` keyed on
+        another column, committed over live vectors, fails before any
+        write — the head stays, the version leaves no files, and the
+        table verifies clean."""
+        V.write_versioned(_df(spark, [(1, "a", 1), (2, "b", 2)]), tpath,
+                          stats_cols=["k"])
+        V.delete_where(spark, tpath, F.col("k") == 1, mode="mor", key="k")
+        m = V._read_manifest(tpath, 2)
+        assert m["dv_key"] == "k" and m["dv_dirs"] == [2]
+        nxt = _df(spark, [(3, "c", 3)])
+        dv = nxt.select(F.lit("x").alias("_file"), "n")
+        with pytest.raises(ValueError, match="one key per table"):
+            V.write_versioned(nxt, tpath, reuse_files=m["data_files"],
+                              dv_df=dv, stats_cols=["k"])
+        self._reclaimed(tpath, 3)
+        assert sorted(r["k"] for r in
+                      V.read_version(spark, tpath).collect()) == [2]
 
     def test_failed_sidecar_build_reclaims_its_dirs(self, spark, tpath):
         """A sidecar build fails after the data files are written (a
@@ -649,7 +668,7 @@ class TestOptimize:
         # stats recorded for the zorder columns -> skipping armed
         m = V._read_manifest(tpath, 2)
         assert all("k" in st and st["k"] is not None
-                   for st in V.load_file_stats(m).values())
+                   for st in V._load_sidecar(m, "stats").values())
 
     def test_plain_compaction(self, spark, tpath):
         V.write_versioned(_df(spark, [(i, "x", i) for i in range(20)])
@@ -1044,9 +1063,8 @@ class TestStatsSidecar:
         armed = jobs("armed", stats_cols=["k"], bloom_cols=["k"])
         assert armed == plain
         t = str(tmp_path / "armed")
-        files = V._data_files(V._snap_dir(t, 1))
-        assert len(V.bloom_prune_files(V._read_manifest(t, 1),
-                                       ("k", 7, 7), files)) == 1
+        assert len(V.prune_files(V._read_manifest(t, 1),
+                                 ("k", 7, 7))) == 1
 
     def test_string_partition_numeric_values_stay_strings(self, spark,
                                                           tpath):
@@ -1058,7 +1076,7 @@ class TestStatsSidecar:
         V.write_versioned(df, tpath, partition_by=["pid"],
                           stats_cols=["pid"])
         man = V._read_manifest(tpath, 1)
-        st = V.load_file_stats(man)
+        st = V._load_sidecar(man, "stats")
         assert all(isinstance(s["pid"][0], str) for s in st.values())
         kept = V.prune_files(man, ("pid", "001", "001"))
         assert kept and all("pid=001" in f for f in kept)
@@ -1073,7 +1091,7 @@ class TestStatsSidecar:
         V.write_versioned(df, tpath, partition_by=["p"],
                           stats_cols=["p"])
         man = V._read_manifest(tpath, 1)
-        st = V.load_file_stats(man)
+        st = V._load_sidecar(man, "stats")
         null_file = [f for f in st
                      if "__HIVE_DEFAULT_PARTITION__" in f]
         assert null_file and st[null_file[0]]["p"] is None
@@ -1502,7 +1520,7 @@ class TestPlainMergeKeepsSkippingContract:
         V.merge_versioned(spark, tpath, _df(spark, [(5, "U", 0)]), "k")
         m2 = V._read_manifest(tpath, 2)
         assert m2.get("stats_cols") == ["k"]
-        stats = V.load_file_stats(m2)
+        stats = V._load_sidecar(m2, "stats")
         assert stats and all(c["k"] is not None for c in stats.values())
         # skipping is ARMED on the new head: prune_files resolves
         # ranges (not None = no-stats) and an impossible range prunes
@@ -1536,7 +1554,7 @@ class TestStatsSidecarTypeNormalization:
         V.write_versioned(df.repartitionByRange(2, "d"), tpath,
                           stats_cols=["d", "k"])   # driver path (2 files)
         m = V._read_manifest(tpath, 1)
-        stats = V.load_file_stats(m)
+        stats = V._load_sidecar(m, "stats")
         for _f, cols in stats.items():
             rng = cols["d"]
             if rng is not None:
@@ -1950,28 +1968,29 @@ class TestBloomSkipping:
     """Per-file Bloom bitmaps: point-lookup skipping where min/max
     can't prune (hash-clustered layouts)."""
 
-    def _mk(self, spark, tmp_path, **kw):
-        t = str(tmp_path / "t")
+    def _mk(self, spark, tmp_path, name="t", **kw):
+        t = str(tmp_path / name)
         df = spark.range(0, 8000).select(
             F.col("id").alias("k"), (F.col("id") % 97).alias("v"))
         # hash-partition on v: every file spans the full k range
-        V.write_versioned(df.repartition(8, "v"), t,
-                          stats_cols=["k"], bloom_cols=["k"], **kw)
+        V.write_versioned(df.repartition(8, "v"), t, **{
+            "stats_cols": ["k"], "bloom_cols": ["k"], **kw})
         return t
 
     def test_prunes_where_minmax_cannot(self, spark, tmp_path):
         t = self._mk(spark, tmp_path)
         m = V._read_manifest(t, 1)
-        all_files = list(V.load_file_blooms(m))
-        assert len(all_files) == 8
-        # min/max keeps everything (full-range files)...
-        assert len(V.prune_files(m, ("k", 4242, 4242))) == 8
-        # ...bloom keeps almost nothing
-        kept = V.bloom_prune_files(m, ("k", 4242, 4242), all_files)
+        assert len(V._load_sidecar(m, "bloom")) == 8
+        # min/max alone (the same layout without bloom_cols) keeps
+        # everything: full-range files...
+        t0 = self._mk(spark, tmp_path, "stats_only", bloom_cols=None)
+        assert len(V.prune_files(V._read_manifest(t0, 1),
+                                 ("k", 4242, 4242))) == 8
+        # ...with bitmaps almost nothing survives
+        kept = V.prune_files(m, ("k", 4242, 4242))
         assert 1 <= len(kept) <= 2
         # absent key: near-total pruning, zero rows, no error
-        absent = V.bloom_prune_files(m, ("k", 123_456_789, 123_456_789),
-                                     all_files)
+        absent = V.prune_files(m, ("k", 123_456_789, 123_456_789))
         assert len(absent) <= 1
         assert V.read_version(
             spark, t, where=("k", 123_456_789, 123_456_789)).count() == 0
@@ -2002,13 +2021,12 @@ class TestBloomSkipping:
             bloom_bits=8192, bloom_hashes=hashes)
         m = V._read_manifest(t, 1)
         assert m["bloom_hashes"] == hashes
-        files = sorted(V.load_file_blooms(m))
+        files = sorted(V._load_sidecar(m, "bloom"))
         for f in files:
             for k in pq.read_table(os.path.join(V._snap_dir(t, 1), f),
                                    columns=["k"])["k"].to_pylist():
-                assert f in V.bloom_prune_files(m, ("k", k, k), files), \
-                    (f, k)
-        kept = sum(len(V.bloom_prune_files(m, ("k", -k, -k), files))
+                assert f in V.prune_files(m, ("k", k, k)), (f, k)
+        kept = sum(len(V.prune_files(m, ("k", -k, -k)))
                    for k in range(1, 301))
         assert kept < 0.1 * 300 * len(files)
 
@@ -2080,16 +2098,15 @@ class TestBloomSkipping:
         with open(mpath, "w") as fh:
             json.dump(raw, fh)
         m = V._read_manifest(t, 1)
-        files = list(V.load_file_blooms(m))
-        assert V.bloom_prune_files(
-            m, ("k", 123_456_789, 123_456_789), files) == files
+        # min/max keeps every full-range file; the bitmaps drop none
+        assert len(V.prune_files(m, ("k", 4242, 4242))) == 8
         issues = V.verify_versioned(t)
         assert any("never pruned on" in i for i in issues), issues
         assert not [i for i in issues if i.startswith("error")], issues
         V.delete_where(spark, t, F.col("v") == 3)
         m2 = V._read_manifest(t, 2)
         assert m2["bloom_scheme"] == V._BLOOM_SCHEME
-        bl = V.load_file_blooms(m2)
+        bl = V._load_sidecar(m2, "bloom")
         carried = [b for f, b in bl.items() if f.startswith("snap/v=1/")]
         fresh = [b for f, b in bl.items() if f.startswith("snap/v=2/")]
         assert len(carried) >= 6
@@ -2099,13 +2116,12 @@ class TestBloomSkipping:
             F.col("k") == 4242).count() == 1
 
     def test_range_predicates_ignore_bloom(self, spark, tmp_path):
-        """Bloom only fires on lo == hi points — a RANGE through
-        bloom_prune_files must keep everything."""
-        t = self._mk(spark, tmp_path)
+        """Bloom only fires on lo == hi points — a RANGE on a table
+        with bitmaps and no stats must keep everything."""
+        t = self._mk(spark, tmp_path, stats_cols=None)
         m = V._read_manifest(t, 1)
-        all_files = list(V.load_file_blooms(m))
-        assert V.bloom_prune_files(m, ("k", 0, 100), all_files) \
-            == all_files
+        all_files = list(V._load_sidecar(m, "bloom"))
+        assert V.prune_files(m, ("k", 0, 100)) == all_files
         assert V.read_version(spark, t, where=("k", 0, 100)).where(
             F.col("k") <= 100).count() == 101
 
@@ -2116,7 +2132,7 @@ class TestBloomSkipping:
         V.delete_where(spark, t, F.col("v") == 3)
         m2 = V._read_manifest(t, 2)
         assert m2.get("bloom_cols") == ["k"]
-        bl = V.load_file_blooms(m2)
+        bl = V._load_sidecar(m2, "bloom")
         # carried files keep bitmaps; the delete's rewritten slice got
         # fresh ones — every entry present
         assert set(bl) == set(m2["data_files"])
@@ -2130,7 +2146,7 @@ class TestBloomSkipping:
         V.restore_version(spark, t, 1)
         m3 = V._read_manifest(t, 3)
         assert m3.get("bloom_cols") == ["k"]
-        bl3 = V.load_file_blooms(m3)
+        bl3 = V._load_sidecar(m3, "bloom")
         assert sum(1 for b in bl3.values()
                    if b.get("k") not in (None,)) >= 8
         assert V.read_version(spark, t, where=("k", 50, 50)).where(
@@ -2152,8 +2168,7 @@ class TestBloomSkipping:
         V.clone_versioned(spark, t, dst)
         mc = V._read_manifest(dst, 1)
         assert mc.get("bloom_cols") == ["k"]
-        all_files = list(V.load_file_blooms(mc))
-        kept = V.bloom_prune_files(mc, ("k", 4242, 4242), all_files)
+        kept = V.prune_files(mc, ("k", 4242, 4242))
         assert 1 <= len(kept) <= 2
         assert V.read_version(spark, dst, where=("k", 4242, 4242)) \
             .where(F.col("k") == 4242).count() == 1
@@ -2184,9 +2199,8 @@ class TestBloomSkipping:
             spark, t, where=("uid", "user-123", "user-123"))
         assert got.where(F.col("uid") == "user-123").count() == 1
         m = V._read_manifest(t, 1)
-        files = list(V.load_file_blooms(m))
-        kept = V.bloom_prune_files(
-            m, ("uid", "user-123", "user-123"), files)
+        files = list(V._load_sidecar(m, "bloom"))
+        kept = V.prune_files(m, ("uid", "user-123", "user-123"))
         assert len(kept) < len(files)
         # NULLs never probed, never added: a where on another value
         # still reads its row back
@@ -2227,8 +2241,8 @@ class TestBloomSkipping:
                           bloom_cols=["d"])
         probe = datetime.date(2024, 3, 1)
         m = V._read_manifest(t, 1)
-        files = list(V.load_file_blooms(m))
-        kept = V.bloom_prune_files(m, ("d", probe, probe), files)
+        files = list(V._load_sidecar(m, "bloom"))
+        kept = V.prune_files(m, ("d", probe, probe))
         assert len(kept) < len(files)
         assert V.read_version(spark, t, where=("d", probe, probe)) \
             .where(F.col("d") == F.lit("2024-03-01").cast("date")) \
@@ -2263,6 +2277,167 @@ class TestBloomSkipping:
         V.write_versioned(df, t2, bloom_cols=["k"])              # v2
         V.restore_version(spark, t2, 1)                          # v3
         assert V._read_manifest(t2, 3).get("bloom_cols") is None
+
+
+#: The prune tables: one sidecar config per kind, four layouts each.
+_PRUNE_KINDS = {
+    "stats": dict(stats_cols=["k", "v", "p"]),
+    "bloom": dict(bloom_cols=["k", "v"]),
+    "both": dict(stats_cols=["k", "v", "p"], bloom_cols=["k", "v"]),
+}
+_PRUNE_LAYOUTS = ("flat", "partitioned", "reuse", "clone")
+
+
+def _prune_tables(spark, root):
+    """Every (kind, layout) table of the prune tests, ``{(kind,
+    layout): path}``: 2,400 rows of ``k`` (300-key runs hashed to 8
+    write tasks, so stats prune ``k`` ranges), ``v`` = 37·k mod 500
+    (scattered: min/max cannot prune it) and ``p`` = k mod 3, written
+    flat, partitioned on ``p``, as a file-reuse snapshot after a
+    copy-on-write delete of one run's slice, and as a clone of the
+    flat table.  The hash layout depends on no core count."""
+    df = spark.range(0, 2400).select(
+        F.col("id").alias("k"), (F.col("id") * 37 % 500).alias("v"),
+        (F.col("id") % 3).alias("p")) \
+        .repartition(8, (F.col("k") / 300).cast("int"))
+    out = {}
+    for kind, cfg in _PRUNE_KINDS.items():
+        t = {lay: os.path.join(root, kind, lay) for lay in _PRUNE_LAYOUTS}
+        V.write_versioned(df, t["flat"], **cfg)
+        V.write_versioned(df, t["partitioned"], partition_by=["p"], **cfg)
+        V.write_versioned(df, t["reuse"], **cfg)
+        V.delete_where(spark, t["reuse"], F.col("k").between(600, 649))
+        V.clone_versioned(spark, t["flat"], t["clone"])
+        out.update({(kind, lay): p for lay, p in t.items()})
+    return out
+
+
+def _file_rows(path, m):
+    """Each data file's rows as pandas, keyed the way the manifest's
+    sidecars key files (partition columns restored from the path)."""
+    import pyarrow.parquet as pq
+
+    if m.get("data_files") is not None:
+        base, keys = path, m["data_files"]
+    else:
+        base = V._snap_dir(path, m["version"])
+        keys = V._data_files(base)
+    out = {}
+    for f in keys:
+        pdf = pq.ParquetFile(os.path.join(base, f)).read().to_pandas()
+        for c in m.get("partition_by") or ():
+            pdf[c] = V._partition_value(f, c, "long")
+        out[f] = pdf
+    return out
+
+
+def _conj(where):
+    return where if isinstance(where, list) else [where]
+
+
+def _holds_match(pdf, where) -> bool:
+    mask = pdf["k"] == pdf["k"]
+    for c, lo, hi in _conj(where):
+        if lo is not None:
+            mask &= pdf[c] >= lo
+        if hi is not None:
+            mask &= pdf[c] <= hi
+    return bool(mask.any())
+
+
+def _filtered(df, where):
+    for c, lo, hi in _conj(where):
+        if lo is not None:
+            df = df.where(F.col(c) >= lo)
+        if hi is not None:
+            df = df.where(F.col(c) <= hi)
+    return sorted(r["k"] for r in df.select("k").collect())
+
+
+#: Fixed predicates of the kept-count pins: points present and absent
+#: on the clustered and the scattered column, closed and open ranges,
+#: a partition point, and conjunctions.
+_PIN_PREDICATES = [
+    ("k", 1234, 1234), ("k", 99_999, 99_999), ("v", 77, 77),
+    ("v", 600, 600), ("k", 500, 1100), ("k", None, 250), ("v", 10, 20),
+    [("k", 0, 1500), ("v", 77, 77)], [("p", 1, 1), ("k", 1234, 1234)],
+    ("p", 2, 2), [("k", 2000, None), ("v", 3, 3)],
+]
+
+
+@pytest.fixture(scope="class")
+def prune_tables(spark, tmp_path_factory):
+    return _prune_tables(spark, str(tmp_path_factory.mktemp("prune")))
+
+
+class TestPruneFiles:
+    """``prune_files`` over stats-only, Bloom-only and stats+Bloom
+    tables in flat, partitioned, file-reuse and cloned layouts: it
+    never drops a file that holds a matching row, a pruned read equals
+    the filtered full read, and the kept-file counts stay pinned."""
+
+    #: kept files per ``_PIN_PREDICATES`` entry, recorded from the
+    #: min/max-then-Bloom composition this loop replaced
+    PINS = {
+        "bloom/clone": [1, 0, 3, 0, 6, 6, 6, 3, 1, 6, 3],
+        "bloom/flat": [1, 0, 3, 0, 6, 6, 6, 3, 1, 6, 3],
+        "bloom/partitioned": [1, 0, 4, 0, 15, 15, 15, 4, 1, 15, 4],
+        "bloom/reuse": [1, 0, 3, 0, 6, 6, 6, 3, 1, 6, 3],
+        "both/clone": [1, 0, 3, 0, 3, 2, 6, 2, 1, 6, 2],
+        "both/flat": [1, 0, 3, 0, 3, 2, 6, 2, 1, 6, 2],
+        "both/partitioned": [1, 0, 4, 0, 6, 3, 12, 3, 1, 5, 3],
+        "both/reuse": [1, 0, 3, 0, 3, 2, 6, 2, 1, 6, 2],
+        "stats/clone": [3, 1, 6, 1, 3, 2, 6, 5, 3, 6, 3],
+        "stats/flat": [3, 1, 6, 1, 3, 2, 6, 5, 3, 6, 3],
+        "stats/partitioned": [6, 0, 15, 0, 6, 3, 12, 10, 2, 5, 3],
+        "stats/reuse": [3, 1, 6, 1, 3, 2, 6, 5, 3, 6, 3],
+    }
+
+    def test_never_drops_a_matching_file(self, spark, prune_tables):
+        import random
+
+        rng = random.Random(14)
+
+        def one():
+            c = rng.choice("kkvp")
+            top = {"k": 2600, "v": 520, "p": 3}[c]
+            lo = rng.randrange(top)
+            shape = rng.random()
+            if shape < 0.5:
+                return (c, lo, lo)
+            hi = lo + rng.randrange(top // 8 + 1)
+            return (c, None if shape < 0.6 else lo,
+                    None if 0.6 <= shape < 0.7 else hi)
+
+        for (kind, lay), t in sorted(prune_tables.items()):
+            m = V._read_manifest(t, V.latest_version(t))
+            rows = _file_rows(t, m)
+            preds = [[one(), one()] if rng.random() < 0.3 else one()
+                     for _ in range(80)]
+            pruned_any = False
+            for w in preds:
+                kept = V.prune_files(m, w)
+                kept = set(rows) if kept is None else set(kept)
+                assert kept <= set(rows), (kind, lay, w)
+                pruned_any |= len(kept) < len(rows)
+                for f, pdf in rows.items():
+                    if _holds_match(pdf, w):
+                        assert f in kept, (kind, lay, w, f)
+            assert pruned_any, (kind, lay)
+            full = V.read_version(spark, t)
+            for w in preds[:3] + [_PIN_PREDICATES[0]]:
+                assert _filtered(V.read_version(spark, t, where=w), w) \
+                    == _filtered(full, w), (kind, lay, w)
+
+    def test_kept_counts_pinned(self, prune_tables):
+        got = {}
+        for (kind, lay), t in sorted(prune_tables.items()):
+            m = V._read_manifest(t, V.latest_version(t))
+            n = len(_file_rows(t, m))
+            got[f"{kind}/{lay}"] = [
+                n if k is None else len(k)
+                for k in (V.prune_files(m, w) for w in _PIN_PREDICATES)]
+        assert got == self.PINS
 
 
 class TestMorDelete:
@@ -2811,6 +2986,28 @@ class TestStatsAggregate:
         [r] = V.stats_aggregate(spark, t, [
             ("count", None, "n"), ("min", "k", "km")]).collect()
         assert r["n"] == 0 and r["km"] is None
+
+    @pytest.mark.parametrize("strict", [True, False])
+    def test_where_bounds_that_do_not_compare_fall_back(
+            self, spark, tmp_path, strict):
+        """A date column's stats are ISO strings: ``date`` bounds do
+        not compare with them, so the count falls back — loud under
+        strict, the scan answer otherwise."""
+        import datetime
+        t = str(tmp_path / "dt")
+        df = spark.range(0, 300).select(
+            F.date_add(F.to_date(F.lit("2024-01-01")),
+                       F.col("id").cast("int")).alias("d"))
+        V.write_versioned(df.repartition(3), t, stats_cols=["d"])
+        call = lambda: V.stats_aggregate(  # noqa: E731
+            spark, t, [("count", None, "n")], strict=strict,
+            where=("d", datetime.date(2024, 3, 1),
+                   datetime.date(2024, 3, 5))).collect()
+        if strict:
+            with pytest.raises(V.StatsInsufficient, match="compare"):
+                call()
+        else:
+            assert call()[0]["n"] == 5
 
     def test_date_minmax(self, spark, tmp_path):
         import datetime
